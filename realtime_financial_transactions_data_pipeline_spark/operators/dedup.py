@@ -1456,38 +1456,51 @@ def x1e_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     final set. At scale the digest snapshot is the only state — 16
     bytes per accepted doc, broadcast or digest-shuffled; payloads
     stream straight to the accepted sink."""
-    import os
-    import shutil
+    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
+    from realtime_financial_transactions_data_pipeline_spark.streaming.run import probe_scratch
 
-    from pyspark.sql import types as T
+    corpus = x1e_corpus_fixture(spark, sf_dir)
+    with probe_scratch() as root:
+        accepted_dir = run_stream_dedup_ingest(spark, corpus, root)
+        # batch=N subdirs surface as a discovered partition column; project
+        # it away so the result schema is unchanged by the idempotent layout.
+        return pin_result(spark.read.parquet(accepted_dir).select("doc_id", "lang"))
 
+
+def x1e_corpus_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """x1e's input: `documents` plus a planted duplicate of every 7th
+    doc, as four JSON slices (``doc_id % 4``) with pinned mtimes."""
     from realtime_financial_transactions_data_pipeline_spark.caching import (
         disk_fixture,
         source_fingerprint,
         spark_json_slices,
     )
-    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
-        current_table_path,
-        init_pointer_table,
-        publish_generation,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-        await_or_raise,
-    )
 
-    root = "/tmp/spark_graft_streaming/x1e"
-    shutil.rmtree(root, ignore_errors=True)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     corpus = d.unionByName(
         d.filter(F.col("doc_id") % 7 == 0).select(
             (F.col("doc_id") + 10000).alias("doc_id"), "lang", "text"
         )
     )
-    flat = disk_fixture(
+    return disk_fixture(
         "x1e-corpus-4slice",
         source_fingerprint(sf_dir, "documents"),
         lambda tmp: spark_json_slices(corpus, tmp, 4, slice_col=F.col("doc_id")),
+    )
+
+
+def run_stream_dedup_ingest(spark: SparkSession, input_dir: str, root: str) -> str:
+    """Stream ``input_dir``'s JSON documents one file per micro-batch
+    through x1e's exact-dedup ingest, with the digest snapshot and the
+    checkpoint under ``root``. Returns the accepted-docs directory,
+    which holds one ``batch=N`` subdirectory per micro-batch."""
+    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
+        current_table_path,
+        init_pointer_table,
+        publish_generation,
+    )
+    from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+        run_available_now,
     )
 
     digests_root = f"{root}/digests"
@@ -1528,26 +1541,16 @@ def x1e_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             fresh.select("doc_id", "lang").write.mode("overwrite").parquet(part_dir)
         publish_generation(seen.unionByName(fresh.select("h")), digests_root)
 
-    stream = (
-        spark.readStream.schema("doc_id LONG, lang STRING, text STRING")
+    run_available_now(
+        spark,
+        lambda child: child.readStream.schema("doc_id LONG, lang STRING, text STRING")
         .option("maxFilesPerTrigger", 1)
-        .json(flat)
+        .json(input_dir)
+        .writeStream.foreachBatch(_ingest)
+        .option("checkpointLocation", f"{root}/_cp"),
+        input_dirs=[input_dir],
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", f"{root}/_cp")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # batch=N subdirs surface as a discovered partition column; project
-    # it away so the result schema is unchanged by the idempotent layout.
-    return pin_result(spark.read.parquet(accepted_dir).select("doc_id", "lang"))
+    return accepted_dir
 
 
 # ---------------------------------------------------------------------------
@@ -2000,9 +2003,7 @@ def x2n_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reject), never under-verify (_verified_pairs docstring); the
     digests come free as the signature's first hashing pass
     (minhash_signature digest_col)."""
-    import shutil
-
-    from pyspark.sql import types as T
+    import os
 
     from realtime_financial_transactions_data_pipeline_spark.caching import (
         disk_fixture,
@@ -2010,12 +2011,11 @@ def x2n_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark_json_slices,
     )
     from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-        await_or_raise,
+    from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+        probe_scratch,
+        run_available_now,
     )
 
-    root = "/tmp/spark_graft_streaming/x2n"
-    shutil.rmtree(root, ignore_errors=True)
     # The even-doc_id half of the corpus, batched round-robin by
     # doc_id/2 — the j3 sizing pattern: the ingest mechanics (index
     # probe, verify, admission order) are exercised identically at half
@@ -2037,178 +2037,163 @@ def x2n_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    state_dir = f"{root}/state"
-    bands_dir = f"{root}/bands"
-    accepted_dir = f"{root}/accepted"
-    state_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("gramsd", T.ArrayType(T.LongType())),
-            T.StructField("sig", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        jvm = s._jvm
-        hconf = s._jsc.hadoopConfiguration()
-        # The micro-batch arrives as ONE json file = one partition;
-        # spread it before the shingle+signature pass or the whole
-        # minhash computation runs on a single task.
-        # Eager localCheckpoint, not persist (r15 trim, the r14
-        # `admitted` lesson applied to the batch frame itself): every
-        # downstream plan — the banded-keys collect, the pruned-probe
-        # joins, the admit DAG, the sink writes — analyzes a LogicalRDD
-        # leaf instead of re-walking the minhash lineage, and the
-        # batch-0 cache race (three uni subtrees racing an un-filled
-        # persist into ~3 concurrent minhash passes) cannot exist:
-        # the checkpoint materializes exactly once, up front.
-        b = minhash_signature(
-            batch.repartition(8).withColumn("grams", word_shingles("text")),
-            grams_col="grams",
-            digest_col="gramsd",
-        ).select("doc_id", "lang", "gramsd", "sig").localCheckpoint(eager=True)
-        try:
-            bpath = jvm.org.apache.hadoop.fs.Path(bands_dir)
-            if bpath.getFileSystem(hconf).exists(bpath):
-                # Band-partitioned probe (VERDICT r10 #2): read only the
-                # bg/dg partition groups the batch's own keys hash into
-                # — O(batch × bands) pruned reads per trigger, never an
-                # O(corpus) index scan. Persisted because the admission
-                # result is evaluated several times per batch (replay
-                # check + the three sink writes) and the candidate set
-                # is batch-bounded by construction.
-                state = pruned_index_state(
-                    s,
-                    state_dir,
-                    bands_dir,
-                    banded_keys(b, "doc_id"),
-                    grams_col="gramsd",
-                    grams_type="array<bigint>",
-                ).persist()
-            else:
-                # Plain empty local relation — do NOT coalesce(1) it:
-                # measured at sf0.1, a coalesced empty side made the
-                # downstream union's checkpoint task hang ~5.5 s (6.0 s
-                # vs 0.49 s for the plain form; r14 x2n trim bisect).
-                state = s.createDataFrame([], state_schema)
-            # Write-first, NO admit checkpoint (r15 trim): the accepted
-            # write itself executes the admit DAG — one heavy
-            # analysis+job — and the two index writes re-derive their
-            # rows as b-leaf ⋈ accepted-parquet semi-joins, so every
-            # downstream plan is leaf-sized without paying a separate
-            # localCheckpoint action per batch (the r14 shape spent one;
-            # measured ~0.4 s/trigger here). The replay check only
-            # evaluates the admit plan on the rare replay path — the
-            # normal path short-circuits on dir absence.
-            admitted = neardup_admit(state, b, grams_col="gramsd")
-            part_dir = f"{accepted_dir}/batch={batch_id}"
-            hpath = jvm.org.apache.hadoop.fs.Path(part_dir)
-            hfs = hpath.getFileSystem(hconf)
-            # Replay-after-publish: the batch's own docs are already in
-            # the index, match themselves at J=1, and `admitted` comes
-            # back empty — the committed rows must be left untouched.
-            already_applied = hfs.exists(hpath) and admitted.limit(1).count() == 0
-            if not already_applied:
-                # ORDER IS LOAD-BEARING: accepted commits BEFORE the
-                # index subdirs. Crash after accepted, before index →
-                # replay recomputes `admitted` against an index without
-                # this batch, gets it NON-empty, and rewrites all three
-                # sinks idempotently. (The reverse order would leave a
-                # window where the index already contains the batch, so
-                # a replay's `admitted` comes back EMPTY while the
-                # accepted rows were never committed — data loss.)
-                admitted.select("doc_id", "lang").write.mode(
-                    "overwrite"
-                ).parquet(part_dir)
-                # Append-only index growth: this batch's state rows
-                # land in their own batch= subdir — doc-state
-                # partitioned by doc group, band index by band group —
-                # and a replay overwrites the same subdirs idempotently.
-                # repartition on the partition column first: one file
-                # per touched group instead of one per task per group
-                # (the many-executor small-file guard). The two index
-                # writes run CONCURRENTLY (driver threads) — they are
-                # commit-latency-bound at batch scale, and every crash
-                # window stays replay-safe: a missing bg subdir means
-                # the batch's docs surface no band candidates, a
-                # missing dg subdir drops their grams from verification
-                # — either way `admitted` comes back NON-empty on
-                # replay and all three sinks are rewritten (r14 trim).
-                from concurrent.futures import ThreadPoolExecutor
-
-                adm = b.join(
-                    s.read.parquet(part_dir).select("doc_id"),
-                    "doc_id",
-                    "semi",
-                )
-
-                def _write_dg() -> None:
-                    adm.withColumn(
-                        "dg",
-                        F.pmod(F.hash("doc_id"), F.lit(_X2N_STATE_GROUPS)),
-                    ).repartition("dg").write.mode("overwrite").partitionBy(
-                        "dg"
-                    ).parquet(f"{state_dir}/batch={batch_id}")
-
-                def _write_bg() -> None:
-                    banded_keys(adm, "doc_id").select(
-                        F.col("_id").alias("doc_id"),
-                        "band_id",
-                        "band_hash",
-                        F.pmod(
-                            F.hash("band_id", "band_hash"),
-                            F.lit(_X2N_STATE_GROUPS),
-                        ).alias("bg"),
-                    ).repartition("bg").write.mode("overwrite").partitionBy(
-                        "bg"
-                    ).parquet(f"{bands_dir}/batch={batch_id}")
-
-                with ThreadPoolExecutor(2) as pool:
-                    for fut in [pool.submit(_write_dg), pool.submit(_write_bg)]:
-                        fut.result()
-                # Retention: fold accumulated batch= generations once
-                # either store crosses the threshold (no-op below it —
-                # two FS listings). The 3-trigger probe never compacts;
-                # the 9-step retention test pins flat dir counts.
-                compact_x2n_index(s, state_dir, bands_dir)
-        finally:
-            try:
-                state.unpersist()
-            except NameError:  # pruned-read failed before `state` bound
-                pass
-
-    stream = (
-        spark.readStream.schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(flat)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # 1, not 4: at the ~800-doc probe batches every admit shuffle is a
-    # single task, and the per-trigger wall is task-launch-bound, not
-    # row-bound (measured 12.6 -> 9.8 s min-of-2 at sf0.1, r14 trim).
-    # Production sizing note: scale this with batch volume - the
-    # probe-scale counterpart of sizing shuffle partitions to executor
-    # count on a cluster.
-    # Pre-create the checkpoint dir (r18, VERDICT r17 #5): the stream's
-    # first batch otherwise pays the offset-log directory setup inside
-    # its trigger.
-    import os
-
-    os.makedirs(f"{root}/_cp", exist_ok=True)
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", f"{root}/_cp")
-            .trigger(availableNow=True)
-            .start()
+    with probe_scratch() as root:
+        state_dir = f"{root}/state"
+        bands_dir = f"{root}/bands"
+        accepted_dir = f"{root}/accepted"
+        state_schema = T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("lang", T.StringType()),
+                T.StructField("gramsd", T.ArrayType(T.LongType())),
+                T.StructField("sig", T.ArrayType(T.LongType())),
+            ]
         )
-        await_or_raise(q, 120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return pin_result(spark.read.parquet(accepted_dir).select("doc_id", "lang"))
+
+        def _ingest(batch: DataFrame, batch_id: int) -> None:
+            s = batch.sparkSession
+            jvm = s._jvm
+            hconf = s._jsc.hadoopConfiguration()
+            # The micro-batch arrives as ONE json file = one partition;
+            # spread it before the shingle+signature pass or the whole
+            # minhash computation runs on a single task.
+            # Eager localCheckpoint, not persist (r15 trim, the r14
+            # `admitted` lesson applied to the batch frame itself): every
+            # downstream plan — the banded-keys collect, the pruned-probe
+            # joins, the admit DAG, the sink writes — analyzes a LogicalRDD
+            # leaf instead of re-walking the minhash lineage, and the
+            # batch-0 cache race (three uni subtrees racing an un-filled
+            # persist into ~3 concurrent minhash passes) cannot exist:
+            # the checkpoint materializes exactly once, up front.
+            b = minhash_signature(
+                batch.repartition(8).withColumn("grams", word_shingles("text")),
+                grams_col="grams",
+                digest_col="gramsd",
+            ).select("doc_id", "lang", "gramsd", "sig").localCheckpoint(eager=True)
+            try:
+                bpath = jvm.org.apache.hadoop.fs.Path(bands_dir)
+                if bpath.getFileSystem(hconf).exists(bpath):
+                    # Band-partitioned probe (VERDICT r10 #2): read only the
+                    # bg/dg partition groups the batch's own keys hash into
+                    # — O(batch × bands) pruned reads per trigger, never an
+                    # O(corpus) index scan. Persisted because the admission
+                    # result is evaluated several times per batch (replay
+                    # check + the three sink writes) and the candidate set
+                    # is batch-bounded by construction.
+                    state = pruned_index_state(
+                        s,
+                        state_dir,
+                        bands_dir,
+                        banded_keys(b, "doc_id"),
+                        grams_col="gramsd",
+                        grams_type="array<bigint>",
+                    ).persist()
+                else:
+                    # Plain empty local relation — do NOT coalesce(1) it:
+                    # measured at sf0.1, a coalesced empty side made the
+                    # downstream union's checkpoint task hang ~5.5 s (6.0 s
+                    # vs 0.49 s for the plain form; r14 x2n trim bisect).
+                    state = s.createDataFrame([], state_schema)
+                # Write-first, NO admit checkpoint (r15 trim): the accepted
+                # write itself executes the admit DAG — one heavy
+                # analysis+job — and the two index writes re-derive their
+                # rows as b-leaf ⋈ accepted-parquet semi-joins, so every
+                # downstream plan is leaf-sized without paying a separate
+                # localCheckpoint action per batch (the r14 shape spent one;
+                # measured ~0.4 s/trigger here). The replay check only
+                # evaluates the admit plan on the rare replay path — the
+                # normal path short-circuits on dir absence.
+                admitted = neardup_admit(state, b, grams_col="gramsd")
+                part_dir = f"{accepted_dir}/batch={batch_id}"
+                hpath = jvm.org.apache.hadoop.fs.Path(part_dir)
+                hfs = hpath.getFileSystem(hconf)
+                # Replay-after-publish: the batch's own docs are already in
+                # the index, match themselves at J=1, and `admitted` comes
+                # back empty — the committed rows must be left untouched.
+                already_applied = hfs.exists(hpath) and admitted.limit(1).count() == 0
+                if not already_applied:
+                    # ORDER IS LOAD-BEARING: accepted commits BEFORE the
+                    # index subdirs. Crash after accepted, before index →
+                    # replay recomputes `admitted` against an index without
+                    # this batch, gets it NON-empty, and rewrites all three
+                    # sinks idempotently. (The reverse order would leave a
+                    # window where the index already contains the batch, so
+                    # a replay's `admitted` comes back EMPTY while the
+                    # accepted rows were never committed — data loss.)
+                    admitted.select("doc_id", "lang").write.mode(
+                        "overwrite"
+                    ).parquet(part_dir)
+                    # Append-only index growth: this batch's state rows
+                    # land in their own batch= subdir — doc-state
+                    # partitioned by doc group, band index by band group —
+                    # and a replay overwrites the same subdirs idempotently.
+                    # repartition on the partition column first: one file
+                    # per touched group instead of one per task per group
+                    # (the many-executor small-file guard). The two index
+                    # writes run CONCURRENTLY (driver threads) — they are
+                    # commit-latency-bound at batch scale, and every crash
+                    # window stays replay-safe: a missing bg subdir means
+                    # the batch's docs surface no band candidates, a
+                    # missing dg subdir drops their grams from verification
+                    # — either way `admitted` comes back NON-empty on
+                    # replay and all three sinks are rewritten (r14 trim).
+                    from concurrent.futures import ThreadPoolExecutor
+
+                    adm = b.join(
+                        s.read.parquet(part_dir).select("doc_id"),
+                        "doc_id",
+                        "semi",
+                    )
+
+                    def _write_dg() -> None:
+                        adm.withColumn(
+                            "dg",
+                            F.pmod(F.hash("doc_id"), F.lit(_X2N_STATE_GROUPS)),
+                        ).repartition("dg").write.mode("overwrite").partitionBy(
+                            "dg"
+                        ).parquet(f"{state_dir}/batch={batch_id}")
+
+                    def _write_bg() -> None:
+                        banded_keys(adm, "doc_id").select(
+                            F.col("_id").alias("doc_id"),
+                            "band_id",
+                            "band_hash",
+                            F.pmod(
+                                F.hash("band_id", "band_hash"),
+                                F.lit(_X2N_STATE_GROUPS),
+                            ).alias("bg"),
+                        ).repartition("bg").write.mode("overwrite").partitionBy(
+                            "bg"
+                        ).parquet(f"{bands_dir}/batch={batch_id}")
+
+                    with ThreadPoolExecutor(2) as pool:
+                        for fut in [pool.submit(_write_dg), pool.submit(_write_bg)]:
+                            fut.result()
+                    # Retention: fold accumulated batch= generations once
+                    # either store crosses the threshold (no-op below it —
+                    # two FS listings). The 3-trigger probe never compacts;
+                    # the 9-step retention test pins flat dir counts.
+                    compact_x2n_index(s, state_dir, bands_dir)
+            finally:
+                try:
+                    state.unpersist()
+                except NameError:  # pruned-read failed before `state` bound
+                    pass
+
+        # Pre-create the checkpoint dir (r18, VERDICT r17 #5): the stream's
+        # first batch otherwise pays the offset-log directory setup inside
+        # its trigger.
+        os.makedirs(f"{root}/_cp", exist_ok=True)
+        run_available_now(
+            spark,
+            lambda child: child.readStream.schema("doc_id LONG, lang STRING, text STRING")
+            .option("maxFilesPerTrigger", 1)
+            .json(flat)
+            .writeStream.foreachBatch(_ingest)
+            .option("checkpointLocation", f"{root}/_cp"),
+            input_dirs=[flat],
+        )
+        return pin_result(spark.read.parquet(accepted_dir).select("doc_id", "lang"))
 
 
 # ---------------------------------------------------------------------------

@@ -299,16 +299,17 @@ def pin_result(df: DataFrame) -> DataFrame:
     """Materialize a probe result whose lineage reads probe-managed
     scratch directories.
 
-    Side-effecting probes wipe and rewrite a fixed scratch dir on every
-    call. A LAZY result returned from such a probe re-reads scratch
-    whenever the caller evaluates it — so if the caller invokes the
-    probe twice (e.g. a schema pass then a value pass) and evaluates the
-    first result late, the second call's wipe races the first result's
-    deferred file read, yielding mixed-generation values (the round-3
-    driver hash mismatch on t8). Collecting pins the values at build
-    time — every scratch-backed probe result is at most a few hundred
-    rows by construction — and the rebuilt DataFrame is a local
-    relation with no scratch lineage at all, immune to later wipes.
+    Streaming probes write into a per-call ``streaming.run.probe_scratch()``
+    directory that is removed when the probe's ``with`` block exits, so
+    they call this INSIDE the block: a lazy result would re-read files
+    that are gone by the time the caller evaluates it. Collecting pins
+    the values while the files exist — every scratch-backed probe result
+    is at most a few hundred rows by construction — and the rebuilt
+    DataFrame is a local relation with no scratch lineage, immune to
+    later removals and to a re-invocation's writes. (Batch probes that
+    still rewrite a fixed scratch dir per call rely on the same pin: a
+    second call's wipe under a first call's unread result caused the
+    round-3 driver hash mismatch on t8.)
     """
     return df.sparkSession.createDataFrame(df.collect(), df.schema)
 

@@ -90,3 +90,23 @@ def get_spark(
         )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: Runtime SQL confs a child session copies from its parent:
+#: ``newSession()`` keeps builder confs but drops runtime-set ones.
+INHERITED_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.streaming.stateStore.providerClass",
+)
+
+
+def child_session(spark: SparkSession, shuffle_partitions: int) -> SparkSession:
+    """A ``newSession()`` of ``spark`` with its own SQLConf: the parent's
+    :data:`INHERITED_CONFS` plus the given shuffle width. It shares the
+    SparkContext and table cache, so setting confs here never changes
+    what a query on the parent (or on another thread) sees."""
+    child = spark.newSession()
+    for key in INHERITED_CONFS:
+        child.conf.set(key, spark.conf.get(key))
+    child.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return child

@@ -18,8 +18,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from realtime_financial_transactions_data_pipeline_spark.caching import (
+    disk_fixture,
+    source_fingerprint,
+    spark_json_slices,
+)
 from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
 from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
+from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+    probe_scratch,
+    run_available_now,
+)
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 
@@ -125,68 +134,95 @@ def run_attribution_outer_stream(
     both null sides require BOTH time bounds in the join condition so
     Spark can bound each side's state and know when either side's row
     is provably unmatched."""
-    from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-        await_or_raise,
-    )
 
-    def src(d: str) -> DataFrame:
-        return (
-            spark.readStream.schema(ATTRIBUTION_WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(d)
-            .withWatermark("ts", watermark)
+    def build(child: SparkSession):
+        def src(d: str) -> DataFrame:
+            return (
+                child.readStream.schema(ATTRIBUTION_WIRE_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(d)
+                .withWatermark("ts", watermark)
+            )
+
+        c = src(clicks_dir).select(
+            F.col("user_id").alias("c_key"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
         )
-
-    c = src(clicks_dir).select(
-        F.col("user_id").alias("c_key"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = src(purchases_dir).select(
-        F.col("user_id").alias("p_key"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    j = c.join(
-        p,
-        (F.col("c_key") == F.col("p_key"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
-        how,
-    )
-    # A stream-stream join commits FOUR state stores per shuffle
-    # partition per micro-batch; with the session's 32 partitions and
-    # the multi-batch pusher protocol that is ~800 store commits of
-    # kilobyte state. Pin the stream's state partitioning small (it is
-    # fixed at first start from this conf and recorded in the
-    # checkpoint); restore the session conf afterwards. At production
-    # volume you would size it to the executor count instead.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
+        p = src(purchases_dir).select(
+            F.col("user_id").alias("p_key"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        j = c.join(
+            p,
+            (F.col("c_key") == F.col("p_key"))
+            & (F.col("purchase_ts") >= F.col("click_ts"))
+            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
+            how,
+        )
+        return (
             j.writeStream.format("parquet")
             .option("path", output_dir)
             .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
         )
-        await_or_raise(q, timeout_s)
-        # Guard the pusher protocol's batch composition: correctness
-        # depends on availableNow + maxFilesPerTrigger=1 splitting each
-        # side into >= 2 micro-batches (data+push1, then push2 — whose
-        # batch runs the eviction pass that emits unmatched rows). If a
-        # future Spark re-batches the files differently, null-side rows
-        # would silently go missing; raise instead.
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(data_batches) < 2:
-            raise RuntimeError(
-                "watermark-pusher protocol violated: expected >= 2 data "
-                f"micro-batches, got {len(data_batches)} "
-                f"(progress: {[p['numInputRows'] for p in q.recentProgress]})"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    # Correctness depends on availableNow + maxFilesPerTrigger=1
+    # splitting each side into >= 2 micro-batches (data+push1, then
+    # push2 — whose batch runs the eviction pass that emits unmatched
+    # rows). If a future Spark re-batches the files differently,
+    # null-side rows would silently go missing; raise instead.
+    run_available_now(
+        spark,
+        build,
+        input_dirs=[clicks_dir, purchases_dir],
+        min_data_batches=2,
+        timeout_s=timeout_s,
+    )
+
+
+def _attribution_fixtures(
+    spark: SparkSession, sf_dir: str, residue: int
+) -> tuple[DataFrame, str, str]:
+    """The pusher-protocol input of t8/t13/t17: the ``user_id % 10 ==
+    residue`` slice of `events` (event ids as wire strings, timestamps
+    truncated to seconds) and, per side, a two-file shared fixture —
+    file 0 = data + first pusher (one batch ingests everything and
+    advances the watermark), file 1 = second pusher (its batch runs the
+    eviction that emits unmatched rows); pinned mtimes fix the order
+    the source follows. Returns (slice, clicks dir, purchases dir)."""
+    base = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("user_id") % 10 == residue)
+        .select(
+            "user_id",
+            F.col("event_id").cast("string").alias("event_id"),
+            F.date_trunc("second", "ts").alias("ts"),
+            "event_type",
+        )
+    )
+
+    def pusher_line(name: str, ts: str) -> str:
+        return f'{{"user_id": -1, "event_id": "{name}", "ts": "{ts}"}}'
+
+    fp = source_fingerprint(sf_dir, "events")
+    clicks, purchases = (
+        disk_fixture(
+            f"attribution-u{residue}-{etype}s",
+            fp,
+            lambda tmp, etype=etype: spark_json_slices(
+                base.filter(F.col("event_type") == etype).drop("event_type"),
+                tmp,
+                1,
+                extra_lines={
+                    0: [pusher_line("push1", "2030-01-01T00:00:00")],
+                    1: [pusher_line("push2", "2030-01-02T00:00:00")],
+                },
+            ),
+        )
+        for etype in ("click", "purchase")
+    )
+    return base, clicks, purchases
 
 
 @probe(
@@ -226,72 +262,32 @@ def t8_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched click ids, so the hash cannot depend on eviction timing.
     The streamed null-side output is still asserted non-empty — the
     outer-join eviction path must have fired end-to-end."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-
-    root = "/tmp/spark_graft_streaming/t8"
-    shutil.rmtree(root, ignore_errors=True)
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 3)
-    base = e.select(
-        "user_id",
-        F.col("event_id").cast("string").alias("event_id"),
-        F.date_trunc("second", "ts").alias("ts"),
-        "event_type",
-    )
-
-    # Two micro-batches per side: file 0 = data + first pusher (one
-    # batch ingests everything and advances the watermark), file 1 =
-    # second pusher (its batch runs the eviction that emits unmatched
-    # rows). mtimes pin the file order the source will follow. Both
-    # sides are shared fixtures keyed on the events table state.
-    def pusher_line(name: str, ts: str) -> str:
-        return f'{{"user_id": -1, "event_id": "{name}", "ts": "{ts}"}}'
-
-    fp = source_fingerprint(sf_dir, "events")
-    flats = {}
-    for side, etype in (("clicks", "click"), ("purchases", "purchase")):
-        flats[side] = disk_fixture(
-            f"t8-{side}",
-            fp,
-            lambda tmp, etype=etype: spark_json_slices(
-                base.filter(F.col("event_type") == etype).drop("event_type"),
-                tmp,
-                1,
-                extra_lines={
-                    0: [pusher_line("push1", "2030-01-01T00:00:00")],
-                    1: [pusher_line("push2", "2030-01-02T00:00:00")],
-                },
-            ),
+    base, clicks_dir, purchases_dir = _attribution_fixtures(spark, sf_dir, 3)
+    with probe_scratch() as root:
+        run_attribution_outer_stream(
+            spark, clicks_dir, purchases_dir, f"{root}/out", f"{root}/_cp"
         )
-    run_attribution_outer_stream(
-        spark, flats["clicks"], flats["purchases"], f"{root}/out", f"{root}/_cp"
-    )
-    out = spark.read.parquet(f"{root}/out").filter(
-        F.col("c_key") >= 0  # drop the watermark pushers
-    )
-    # Capability proof: the eviction pass must actually have emitted
-    # null-side rows through the stream. (The VALUES of the null side
-    # are re-derived below so the probe hash is batch-deterministic.)
-    if out.filter(F.col("purchase_id").isNull()).limit(1).count() == 0:
-        raise RuntimeError(
-            "left-outer eviction emitted no null-side rows — "
-            "watermark-pusher protocol failed"
+        out = spark.read.parquet(f"{root}/out").filter(
+            F.col("c_key") >= 0  # drop the watermark pushers
         )
-    matched = out.filter(F.col("purchase_id").isNotNull()).select(
-        F.col("c_key").alias("user_id"), "click_id", "purchase_id"
-    )
-    clicks = base.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id")
-    )
-    unmatched = clicks.join(
-        matched.select("click_id"), on="click_id", how="left_anti"
-    ).select("user_id", "click_id", F.lit(None).cast("string").alias("purchase_id"))
-    return pin_result(matched.unionByName(unmatched))
+        # Capability proof: the eviction pass must actually have emitted
+        # null-side rows through the stream. (The VALUES of the null side
+        # are re-derived below so the probe hash is batch-deterministic.)
+        if out.filter(F.col("purchase_id").isNull()).limit(1).count() == 0:
+            raise RuntimeError(
+                "left-outer eviction emitted no null-side rows — "
+                "watermark-pusher protocol failed"
+            )
+        matched = out.filter(F.col("purchase_id").isNotNull()).select(
+            F.col("c_key").alias("user_id"), "click_id", "purchase_id"
+        )
+        clicks = base.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("event_id").alias("click_id")
+        )
+        unmatched = clicks.join(
+            matched.select("click_id"), on="click_id", how="left_anti"
+        ).select("user_id", "click_id", F.lit(None).cast("string").alias("purchase_id"))
+        return pin_result(matched.unionByName(unmatched))
 
 
 @probe(
@@ -322,85 +318,37 @@ def t13_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is asserted to contain null rows on EACH side — the two
     eviction paths must really have fired end-to-end. A disjoint user
     subset (% 10 = 7) keeps fixtures and state independent of t8's."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-
-    root = "/tmp/spark_graft_streaming/t13"
-    shutil.rmtree(root, ignore_errors=True)
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 7)
-    base = e.select(
-        "user_id",
-        F.col("event_id").cast("string").alias("event_id"),
-        F.date_trunc("second", "ts").alias("ts"),
-        "event_type",
-    )
-
-    def pusher_line(name: str, ts: str) -> str:
-        return f'{{"user_id": -1, "event_id": "{name}", "ts": "{ts}"}}'
-
-    fp = source_fingerprint(sf_dir, "events")
-    flats = {}
-    for side, etype in (("clicks", "click"), ("purchases", "purchase")):
-        flats[side] = disk_fixture(
-            f"t13-{side}",
-            fp,
-            lambda tmp, etype=etype: spark_json_slices(
-                base.filter(F.col("event_type") == etype).drop("event_type"),
-                tmp,
-                1,
-                extra_lines={
-                    0: [pusher_line("push1", "2030-01-01T00:00:00")],
-                    1: [pusher_line("push2", "2030-01-02T00:00:00")],
-                },
-            ),
+    base, clicks_dir, purchases_dir = _attribution_fixtures(spark, sf_dir, 7)
+    with probe_scratch() as root:
+        run_attribution_outer_stream(
+            spark, clicks_dir, purchases_dir, f"{root}/out", f"{root}/_cp", how="fullOuter"
         )
-    run_attribution_outer_stream(
-        spark,
-        flats["clicks"],
-        flats["purchases"],
-        f"{root}/out",
-        f"{root}/_cp",
-        how="fullOuter",
-    )
-    out = spark.read.parquet(f"{root}/out").filter(
-        (F.coalesce("c_key", "p_key") >= 0)  # drop the watermark pushers
-    )
-    # Capability proof for BOTH eviction paths.
-    for col, side in (("purchase_id", "left"), ("click_id", "right")):
-        if out.filter(F.col(col).isNull()).limit(1).count() == 0:
-            raise RuntimeError(
-                f"full-outer eviction emitted no {side}-side null rows — "
-                "watermark-pusher protocol failed"
-            )
-    matched = out.filter(
-        F.col("purchase_id").isNotNull() & F.col("click_id").isNotNull()
-    ).select(F.col("c_key").alias("user_id"), "click_id", "purchase_id")
-    clicks = base.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id")
-    )
-    purchases = base.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id")
-    )
-    un_clicks = clicks.join(
-        matched.select("click_id"), "click_id", "left_anti"
-    ).select(
-        "user_id", "click_id", F.lit(None).cast("string").alias("purchase_id")
-    )
-    un_purch = purchases.join(
-        matched.select("purchase_id"), "purchase_id", "left_anti"
-    ).select(
-        "user_id",
-        F.lit(None).cast("string").alias("click_id"),
-        "purchase_id",
-    )
-    return pin_result(
-        matched.unionByName(un_clicks).unionByName(un_purch)
-    )
+        out = spark.read.parquet(f"{root}/out").filter(
+            (F.coalesce("c_key", "p_key") >= 0)  # drop the watermark pushers
+        )
+        # Capability proof for BOTH eviction paths.
+        for col, side in (("purchase_id", "left"), ("click_id", "right")):
+            if out.filter(F.col(col).isNull()).limit(1).count() == 0:
+                raise RuntimeError(
+                    f"full-outer eviction emitted no {side}-side null rows — "
+                    "watermark-pusher protocol failed"
+                )
+        matched = out.filter(
+            F.col("purchase_id").isNotNull() & F.col("click_id").isNotNull()
+        ).select(F.col("c_key").alias("user_id"), "click_id", "purchase_id")
+        clicks = base.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("event_id").alias("click_id")
+        )
+        purchases = base.filter(F.col("event_type") == "purchase").select(
+            "user_id", F.col("event_id").alias("purchase_id")
+        )
+        un_clicks = clicks.join(matched.select("click_id"), "click_id", "left_anti").select(
+            "user_id", "click_id", F.lit(None).cast("string").alias("purchase_id")
+        )
+        un_purch = purchases.join(
+            matched.select("purchase_id"), "purchase_id", "left_anti"
+        ).select("user_id", F.lit(None).cast("string").alias("click_id"), "purchase_id")
+        return pin_result(matched.unionByName(un_clicks).unionByName(un_purch))
 
 
 @probe(
@@ -432,57 +380,14 @@ def t17_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that duplicates-on-multi-match never appear). Disjoint user
     subset (% 10 = 3) keeps fixtures and state independent of t8's
     and t13's."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    root = "/tmp/spark_graft_streaming/t17"
-    shutil.rmtree(root, ignore_errors=True)
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 3)
-    base = e.select(
-        "user_id",
-        F.col("event_id").cast("string").alias("event_id"),
-        F.date_trunc("second", "ts").alias("ts"),
-        "event_type",
-    )
-
-    def pusher_line(name: str, ts: str) -> str:
-        return f'{{"user_id": -1, "event_id": "{name}", "ts": "{ts}"}}'
-
-    fp = source_fingerprint(sf_dir, "events")
-    flats = {}
-    for side, etype in (("clicks", "click"), ("purchases", "purchase")):
-        flats[side] = disk_fixture(
-            f"t17-{side}",
-            fp,
-            lambda tmp, etype=etype: spark_json_slices(
-                base.filter(F.col("event_type") == etype).drop("event_type"),
-                tmp,
-                1,
-                extra_lines={
-                    0: [pusher_line("push1", "2030-01-01T00:00:00")],
-                    1: [pusher_line("push2", "2030-01-02T00:00:00")],
-                },
-            ),
+    _, clicks_dir, purchases_dir = _attribution_fixtures(spark, sf_dir, 3)
+    with probe_scratch() as root:
+        run_attribution_outer_stream(
+            spark, clicks_dir, purchases_dir, f"{root}/out", f"{root}/_cp", how="leftSemi"
         )
-    run_attribution_outer_stream(
-        spark,
-        flats["clicks"],
-        flats["purchases"],
-        f"{root}/out",
-        f"{root}/_cp",
-        how="leftSemi",
-    )
-    out = spark.read.parquet(f"{root}/out").filter(F.col("c_key") >= 0)
-    # Exactly-once-per-click: a multi-match click must not duplicate.
-    dups = out.groupBy("click_id").count().filter(F.col("count") > 1)
-    if dups.limit(1).count() > 0:
-        raise RuntimeError("semi join emitted a click more than once")
-    return pin_result(
-        out.select(F.col("c_key").alias("user_id"), "click_id")
-    )
+        out = spark.read.parquet(f"{root}/out").filter(F.col("c_key") >= 0)
+        # Exactly-once-per-click: a multi-match click must not duplicate.
+        dups = out.groupBy("click_id").count().filter(F.col("count") > 1)
+        if dups.limit(1).count() > 0:
+            raise RuntimeError("semi join emitted a click more than once")
+        return pin_result(out.select(F.col("c_key").alias("user_id"), "click_id"))

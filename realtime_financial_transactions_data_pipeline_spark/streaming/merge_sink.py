@@ -34,14 +34,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from realtime_financial_transactions_data_pipeline_spark.caching import (
+    disk_fixture,
+    source_fingerprint,
+    spark_json_slices,
+)
 from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
     current_table_path,
     init_pointer_table,
 )
 from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
+from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+    probe_scratch,
+    run_available_now,
+)
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
-
-_SCRATCH = "/tmp/spark_graft_streaming"
 
 #: CDC wire schema: seconds-truncated event time (the JSON wire's
 #: millisecond timestamp format would otherwise silently drop parquet's
@@ -94,11 +101,6 @@ def run_cdc_merge_stream(
         [], schema=T.StructType(CDC_SCHEMA.fields + [T.StructField("op", T.StringType())])
     )
     init_pointer_table(empty, snap_root)
-    stream = (
-        spark.readStream.schema(CDC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         cur_path = current_table_path(snap_root)
@@ -166,24 +168,50 @@ def run_cdc_merge_stream(
             fh.write(f"gen={gen}\n")
         os.replace(tmp, os.path.join(snap_root, "CURRENT"))
 
-    # Probe-scale conf window (the x2n action-count lesson): each
-    # micro-batch's merge joins a few hundred rows — one shuffle
-    # partition per stage, not the session's 32. Stateless foreachBatch
-    # pins nothing in the checkpoint; production sizes this to batch
-    # volume.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_cdc_stream(spark, input_dir, root, _merge)
     return current_table_path(snap_root)
+
+
+def _run_cdc_stream(spark: SparkSession, input_dir: str, root: str, merge) -> None:
+    """Stream ``input_dir``'s CDC files, one file per micro-batch, into
+    the ``merge`` foreachBatch sink, checkpointed under ``root``."""
+    run_available_now(
+        spark,
+        lambda child: child.readStream.schema(CDC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(input_dir)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", f"{root}/ckpt"),
+        input_dirs=[input_dir],
+        min_data_batches=0,
+    )
+
+
+def _cdc_events_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """`events` as four JSON CDC files — the input k8 and k8b both
+    stream, so the shared build runs once for both."""
+    return disk_fixture(
+        "k8-events",
+        source_fingerprint(sf_dir, "events"),
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .select(
+            "user_id",
+            "event_id",
+            "event_type",
+            "value",
+            F.date_trunc("second", "ts").alias("ts"),
+        )
+        .repartition(4)
+        .write.mode("overwrite")
+        .json(tmp),
+    )
+
+
+def _pin_live_rows(snap: DataFrame) -> DataFrame:
+    """k8/k8b's result: the snapshot's live (non-tombstone) rows."""
+    return pin_result(
+        snap.filter(F.col("op") == "upsert").select("user_id", "event_id", "event_type", "value")
+    )
 
 
 @probe(
@@ -204,35 +232,9 @@ def k8_stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-wins per user computed directly in SQL — certifying the
     merge reduction, tombstone retention, AND the pointer protocol in
     one hash check (any batch-split leakage would change the result)."""
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-    )
-
-    root = f"{_SCRATCH}/k8"
-    shutil.rmtree(root, ignore_errors=True)
-    input_dir = disk_fixture(
-        "k8-events",
-        source_fingerprint(sf_dir, "events"),
-        lambda tmp: load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "value",
-            F.date_trunc("second", "ts").alias("ts"),
-        )
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(tmp),
-    )
-    final_path = run_cdc_merge_stream(spark, input_dir, root)
-    snap = spark.read.parquet(final_path)
-    return pin_result(
-        snap.filter(F.col("op") == "upsert").select(
-            "user_id", "event_id", "event_type", "value"
-        )
-    )
+    input_dir = _cdc_events_fixture(spark, sf_dir)
+    with probe_scratch() as root:
+        return _pin_live_rows(spark.read.parquet(run_cdc_merge_stream(spark, input_dir, root)))
 
 
 # ---------------------------------------------------------------------------
@@ -306,11 +308,6 @@ def run_cdc_merge_stream_bucketed(
     _write_manifest(snap_root, {str(b): "empty" for b in range(n_buckets)})
 
     bucket_of = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    stream = (
-        spark.readStream.schema(CDC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -349,22 +346,7 @@ def run_cdc_merge_stream_bucketed(
         finally:
             tagged.unpersist()
 
-    # Same probe-scale conf window as run_cdc_merge_stream — but 4,
-    # not 1: the bucketed runner's per-batch partitionBy(_bkt) write
-    # parallelizes across shuffle tasks, and a single task serializes
-    # the touched buckets (measured slower).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_cdc_stream(spark, input_dir, root, _merge)
     return snap_root
 
 
@@ -385,37 +367,10 @@ def k8b_bucketed_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-buckets whose generations advance independently and publish
     through one atomic manifest per batch. The identical hash proves
     bucket routing loses nothing."""
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-    )
-
-    root = f"{_SCRATCH}/k8b"
-    shutil.rmtree(root, ignore_errors=True)
-    # Same fixture name as k8: the two probes stream the IDENTICAL
-    # input, so the shared build runs once for both.
-    input_dir = disk_fixture(
-        "k8-events",
-        source_fingerprint(sf_dir, "events"),
-        lambda tmp: load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "value",
-            F.date_trunc("second", "ts").alias("ts"),
-        )
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(tmp),
-    )
-    snap_root = run_cdc_merge_stream_bucketed(spark, input_dir, root)
-    snap = read_bucketed_snapshot(spark, snap_root)
-    return pin_result(
-        snap.filter(F.col("op") == "upsert").select(
-            "user_id", "event_id", "event_type", "value"
-        )
-    )
+    input_dir = _cdc_events_fixture(spark, sf_dir)
+    with probe_scratch() as root:
+        snap_root = run_cdc_merge_stream_bucketed(spark, input_dir, root)
+        return _pin_live_rows(read_bucketed_snapshot(spark, snap_root))
 
 
 def sweep_unreferenced(snap_root: str) -> list[str]:
@@ -520,14 +475,6 @@ def k8c_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — the sort key ``epoch(ts)·10^6 + event_id`` totally orders
     rows — so the hash certifies WHICH batch changed every key and HOW
     (insert vs update vs delete), not just the final state."""
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-
-    root = f"{_SCRATCH}/k8c"
-    shutil.rmtree(root, ignore_errors=True)
     src = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -540,13 +487,12 @@ def k8c_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_fingerprint(sf_dir, "events"),
         lambda tmp: spark_json_slices(src, tmp, 4, slice_col=F.col("event_id")),
     )
-    run_cdc_merge_stream(spark, flat, root, emit_changes=True)
-    changes = spark.read.parquet(f"{root}/changes")
-    return pin_result(
-        changes.select(
-            "user_id", F.col("event_id").alias("winner_event"), "change"
+    with probe_scratch() as root:
+        run_cdc_merge_stream(spark, flat, root, emit_changes=True)
+        changes = spark.read.parquet(f"{root}/changes")
+        return pin_result(
+            changes.select("user_id", F.col("event_id").alias("winner_event"), "change")
         )
-    )
 
 
 def read_changes_since(spark: SparkSession, root: str, after_gen: int = 0) -> DataFrame:

@@ -53,6 +53,11 @@ from realtime_financial_transactions_data_pipeline_spark.functions.scalar import
     pan_is_valid,
 )
 from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
+from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+    await_or_raise,  # noqa: F401 — re-exported for callers of this module
+    probe_scratch,
+    run_available_now,
+)
 
 #: Output column order, pipeline.py:106-129 (22 columns, no card_number).
 OUTPUT_COLUMNS = [f.name for f in sch.FACT_TRANSACTIONS.fields]
@@ -355,16 +360,6 @@ def build_pipeline_query(
     return writer
 
 
-def await_or_raise(query, timeout_s: int) -> None:
-    """``awaitTermination(timeout)`` returning False means the stream is
-    STILL RUNNING: stop it and raise. Swallowing the timeout would let
-    the caller read partially-written sinks while the live query races
-    the next run's scratch cleanup."""
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(f"streaming query did not finish within {timeout_s}s")
-
-
 #: Wall-clock of the most recent ``run_pipeline`` streaming window
 #: (query start → termination). bench.py reads this to compute the
 #: end-to-end message rate over the STREAM's own runtime — the probe
@@ -391,11 +386,11 @@ LAST_OBSERVED: dict[str, int] | None = None
 SINK_ACTIONS_PER_BATCH = 2
 
 
-def _sum_observed(query, name: str = "quality") -> dict[str, int] | None:
-    """Total the named observation across the query's batches,
+def _sum_observed(progress: list, name: str = "quality") -> dict[str, int] | None:
+    """Total the named observation across a query's batch progress,
     dividing out the per-batch re-fires (see SINK_ACTIONS_PER_BATCH)."""
     totals: dict[str, int] = {}
-    for prog in query.recentProgress:
+    for prog in progress:
         row = (prog.observedMetrics or {}).get(name)
         if row is None:
             continue
@@ -416,31 +411,35 @@ def run_pipeline(
     ``input_dir`` (availableNow trigger). Returns (valid_dir, errors_dir)."""
     import time
 
-    global LAST_STREAM_SECONDS
+    global LAST_STREAM_SECONDS, LAST_OBSERVED
     valid_dir = f"{out_root}/fact_transactions"
     errors_dir = f"{out_root}/fact_transactions_errors"
-    writer = build_pipeline_query(
-        spark,
-        input_dir,
-        valid_dir,
-        errors_dir,
-        checkpoint_dir=f"{out_root}/_checkpoint",
-        lookup_dir=lookup_dir,
-        key=key,
+    started: list[float] = []
+
+    def build(child: SparkSession):
+        writer = build_pipeline_query(
+            child,
+            input_dir,
+            valid_dir,
+            errors_dir,
+            checkpoint_dir=f"{out_root}/_checkpoint",
+            lookup_dir=lookup_dir,
+            key=key,
+        )
+        # Window = query start → termination, per LAST_STREAM_SECONDS's
+        # documented contract: driver-side plan construction (~0.2 s of
+        # Py4J column building) is one-time setup a deployed always-on
+        # stream never re-pays per message, so the clock starts after it.
+        started.append(time.time())
+        return writer
+
+    # A re-run over a kept checkpoint may find no new files: zero data
+    # batches is a valid outcome here.
+    progress = run_available_now(
+        spark, build, input_dirs=[input_dir], min_data_batches=0, timeout_s=timeout_s
     )
-    # Window = query start → termination, per LAST_STREAM_SECONDS's
-    # documented contract. Driver-side PLAN CONSTRUCTION (~0.2 s of
-    # Py4J column building in build_pipeline_query) sits above the
-    # timer: it is one-time setup a deployed always-on stream never
-    # re-pays per message, and the pre-r12 code timing it contradicted
-    # the constant's own definition (changed explicitly here — r5
-    # ADVICE precedent on silent window redefinitions).
-    t0 = time.time()
-    q = writer.start()
-    await_or_raise(q, timeout_s)
-    LAST_STREAM_SECONDS = time.time() - t0
-    global LAST_OBSERVED
-    LAST_OBSERVED = _sum_observed(q)
+    LAST_STREAM_SECONDS = time.time() - started[0]
+    LAST_OBSERVED = _sum_observed(progress)
     return valid_dir, errors_dir
 
 
@@ -455,17 +454,18 @@ def run_passthrough_stream(
     """K3 — schema-enforced direct stream→table (the Pub/Sub→BigQuery
     subscription with --use-topic-schema, dim_customer_topic_sub.sh:15-18):
     readStream with the declared schema, no transform, append sink."""
-    q = (
-        spark.readStream.schema(schema)
+    run_available_now(
+        spark,
+        lambda child: child.readStream.schema(schema)
         .json(input_dir)
         .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        input_dirs=[input_dir],
+        min_data_batches=0,
+        timeout_s=timeout_s,
     )
-    await_or_raise(q, timeout_s)
 
 
 # ---------------------------------------------------------------------------
@@ -534,18 +534,9 @@ def synth_wire_messages(
 
 
 # ---------------------------------------------------------------------------
-# Probes — each run starts from a wiped scratch root so checkpoints never
-# leak across scale factors or rounds.
+# Probes — each call streams into its own probe_scratch() root and pins
+# its result before that root is removed.
 # ---------------------------------------------------------------------------
-
-_SCRATCH = "/tmp/spark_graft_streaming"
-
-
-def _fresh(path: str) -> str:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 def _run_synthetic_pipeline(
@@ -561,8 +552,6 @@ def _run_synthetic_pipeline(
     )
     from realtime_financial_transactions_data_pipeline_spark.functions.fpe import TEST_KEY
 
-    _fresh(root)
-
     def build(tmp: str) -> None:
         synth_wire_messages(
             spark, sf_dir, copies=copies, max_custkey=max_custkey
@@ -571,7 +560,7 @@ def _run_synthetic_pipeline(
     # The wire-message input is a pure function of `customer`, so it is
     # a shared fixture (caching.disk_fixture): built once, reused across
     # invocations/probes/harness runs. Checkpoints and sinks stay under
-    # the per-probe wiped root.
+    # the caller's per-call root.
     input_dir = disk_fixture(
         f"wire-c{copies}-m{max_custkey}",
         source_fingerprint(sf_dir, "customer"),
@@ -599,16 +588,15 @@ def t1_t6_streaming_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire-format JSON messages → parse → unwrap → validate → tokenize →
     dual sink, then count both sinks. Counts are deterministic functions
     of `customer`, so the whole streaming path is oracle-checked."""
-    valid, errors = _run_synthetic_pipeline(
-        spark, sf_dir, f"{_SCRATCH}/flagship", copies=WIRE_COPIES
-    )
-    vagg = valid.agg(
-        F.count(F.lit(1)).alias("n_valid"),
-        F.count(F.when(F.col("card_token").isNull(), 1)).alias("n_null_card"),
-        F.count(F.when(F.col("card_token").isNotNull(), 1)).alias("n_tokenized"),
-    )
-    eagg = errors.agg(F.count(F.lit(1)).alias("n_errors"))
-    return pin_result(vagg.crossJoin(eagg))
+    with probe_scratch() as root:
+        valid, errors = _run_synthetic_pipeline(spark, sf_dir, root, copies=WIRE_COPIES)
+        vagg = valid.agg(
+            F.count(F.lit(1)).alias("n_valid"),
+            F.count(F.when(F.col("card_token").isNull(), 1)).alias("n_null_card"),
+            F.count(F.when(F.col("card_token").isNotNull(), 1)).alias("n_tokenized"),
+        )
+        eagg = errors.agg(F.count(F.lit(1)).alias("n_errors"))
+        return pin_result(vagg.crossJoin(eagg))
 
 
 @probe(
@@ -633,8 +621,6 @@ def j3_stream_lookup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
-    root = f"{_SCRATCH}/j3"
-    _fresh(root)
     # The lookup WRITE is a shared fixture; the per-micro-batch RE-READ
     # below is J3's semantics and is never cached (SURVEY §7).
     lookup_dir = disk_fixture(
@@ -646,10 +632,11 @@ def j3_stream_lookup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(tmp),
     )
-    valid, _ = _run_synthetic_pipeline(
-        spark, sf_dir, root + "/run", lookup_dir=lookup_dir, max_custkey=1000
-    )
-    return pin_result(valid.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n")))
+    with probe_scratch() as root:
+        valid, _ = _run_synthetic_pipeline(
+            spark, sf_dir, root, lookup_dir=lookup_dir, max_custkey=1000
+        )
+        return pin_result(valid.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n")))
 
 
 @probe(
@@ -661,7 +648,6 @@ def k3_passthrough_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     read with the declared schema, no transform, append parquet sink."""
     from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
-    root = _fresh(f"{_SCRATCH}/k3")
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.LongType()),
@@ -683,10 +669,9 @@ def k3_passthrough_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .json(tmp),
     )
-    run_passthrough_stream(
-        spark, incoming, f"{root}/out", f"{root}/_checkpoint", schema
-    )
-    return pin_result(spark.read.schema(schema).parquet(f"{root}/out"))
+    with probe_scratch() as root:
+        run_passthrough_stream(spark, incoming, f"{root}/out", f"{root}/_checkpoint", schema)
+        return pin_result(spark.read.schema(schema).parquet(f"{root}/out"))
 
 
 # ---------------------------------------------------------------------------
@@ -719,22 +704,19 @@ def s17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     end (block comment above) and aggregate the delivered rows; the
     distinct-event count equals the row count only if every offset
     range arrived exactly once."""
+    import ast
     import glob
-    import shutil
     import time
 
     from realtime_financial_transactions_data_pipeline_spark.caching import (
         disk_fixture,
         source_fingerprint,
     )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
     from realtime_financial_transactions_data_pipeline_spark.sources.pyds import (
         register_replay_log,
     )
     from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
-    root = "/tmp/spark_graft_streaming/s17"
-    shutil.rmtree(root, ignore_errors=True)
     src = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 3)
@@ -761,38 +743,37 @@ def s17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("parts", 2)
         .load()
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", f"{root}/out")
-        .option("checkpointLocation", f"{root}/cp")
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    deadline = time.time() + 120
-    import ast as _ast
-
-    while time.time() < deadline:
-        if q.exception() is not None:
-            raise q.exception()  # surface the real failure, not a timeout
-        p = q.lastProgress
-        if p and p.get("sources"):
-            end = p["sources"][0].get("endOffset")
-            # endOffset is the reader dict's repr (single quotes), not
-            # strict JSON — literal_eval handles both.
-            if end and _ast.literal_eval(str(end)).get("row", 0) >= total:
-                break
-        time.sleep(0.2)
-    else:
-        q.stop()
-        raise RuntimeError("replay_log source never reached the log end")
-    q.stop()
-    q.awaitTermination()
-    out = spark.read.parquet(f"{root}/out")
-    return pin_result(
-        out.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("event_id").alias("n_distinct_events"),
-            F.sum("event_id").alias("event_checksum"),
-            F.sum("value_mills").alias("value_mills"),
+    with probe_scratch() as root:
+        q = (
+            stream.writeStream.format("parquet")
+            .option("path", f"{root}/out")
+            .option("checkpointLocation", f"{root}/cp")
+            .trigger(processingTime="200 milliseconds")
+            .start()
         )
-    )
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if q.exception() is not None:
+                raise q.exception()  # surface the real failure, not a timeout
+            p = q.lastProgress
+            if p and p.get("sources"):
+                end = p["sources"][0].get("endOffset")
+                # endOffset is the reader dict's repr (single quotes), not
+                # strict JSON — literal_eval handles both.
+                if end and ast.literal_eval(str(end)).get("row", 0) >= total:
+                    break
+            time.sleep(0.2)
+        else:
+            q.stop()
+            raise RuntimeError("replay_log source never reached the log end")
+        q.stop()
+        q.awaitTermination()
+        out = spark.read.parquet(f"{root}/out")
+        return pin_result(
+            out.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.countDistinct("event_id").alias("n_distinct_events"),
+                F.sum("event_id").alias("event_checksum"),
+                F.sum("value_mills").alias("value_mills"),
+            )
+        )

@@ -33,9 +33,16 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-    await_or_raise,
+from realtime_financial_transactions_data_pipeline_spark.caching import (
+    disk_fixture,
+    source_fingerprint,
+    spark_json_slices,
 )
+from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+    probe_scratch,
+    run_available_now,
+)
+from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 
 def streaming_dedupe(
@@ -53,18 +60,19 @@ def streaming_dedupe(
     across restarts (no watermark = keys are remembered forever, the
     reference's semantics; add ``withWatermark`` to bound state when
     keys expire)."""
-    q = (
-        spark.readStream.schema(schema)
+    run_available_now(
+        spark,
+        lambda child: child.readStream.schema(schema)
         .json(input_dir)
         .dropDuplicates(key_cols)
         .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        input_dirs=[input_dir],
+        min_data_batches=0,
+        timeout_s=timeout_s,
     )
-    await_or_raise(q, timeout_s)
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
@@ -141,22 +149,22 @@ def run_running_totals(
     """Drive the stateful running-totals operator over a JSON-lines
     directory; each micro-batch's updated totals append (with their
     epoch id) so the latest row per customer is the current state."""
-    txns = spark.readStream.schema(schema).json(input_dir)
-    updates = running_totals_stream(txns)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             output_dir
         )
 
-    q = (
-        updates.writeStream.foreachBatch(write_batch)
+    run_available_now(
+        spark,
+        lambda child: running_totals_stream(child.readStream.schema(schema).json(input_dir))
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        input_dirs=[input_dir],
+        min_data_batches=0,
+        timeout_s=timeout_s,
     )
-    await_or_raise(q, timeout_s)
 
 
 # ---------------------------------------------------------------------------
@@ -181,30 +189,8 @@ def t5_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     couple of wall seconds into a parquet sink, then assert rows were
     emitted at the offered pace. Output is reduced to deterministic
     booleans so the rows-only check is stable across runs."""
-    import shutil
     import time
 
-    root = "/tmp/spark_graft_streaming/t5"
-    shutil.rmtree(root, ignore_errors=True)
-    q = (
-        rate_stream(spark, rows_per_second=500)
-        .writeStream.format("parquet")
-        .option("path", f"{root}/out")
-        .option("checkpointLocation", f"{root}/_cp")
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    # Stop as soon as one epoch has fully committed (lastProgress
-    # advances past batch 0) instead of sleeping a fixed wall time —
-    # stopping mid-first-batch would leave an empty sink.
-    deadline = time.time() + 10
-    while time.time() < deadline:
-        p = q.lastProgress
-        if p and p.get("batchId", 0) >= 1 and p.get("numInputRows", 0) > 0:
-            break
-        time.sleep(0.1)
-    q.stop()
-    q.awaitTermination()
     out_schema = T.StructType(
         [
             T.StructField("event_time", T.TimestampType()),
@@ -212,9 +198,29 @@ def t5_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("transaction_id", T.StringType()),
         ]
     )
-    out = spark.read.schema(out_schema).parquet(f"{root}/out")
-    n = out.count()
-    n_distinct = out.select("seq").distinct().count()
+    with probe_scratch() as root:
+        q = (
+            rate_stream(spark, rows_per_second=500)
+            .writeStream.format("parquet")
+            .option("path", f"{root}/out")
+            .option("checkpointLocation", f"{root}/_cp")
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+        # Stop as soon as one epoch has fully committed (lastProgress
+        # advances past batch 0) instead of sleeping a fixed wall time —
+        # stopping mid-first-batch would leave an empty sink.
+        deadline = time.time() + 10
+        while time.time() < deadline:
+            p = q.lastProgress
+            if p and p.get("batchId", 0) >= 1 and p.get("numInputRows", 0) > 0:
+                break
+            time.sleep(0.1)
+        q.stop()
+        q.awaitTermination()
+        out = spark.read.schema(out_schema).parquet(f"{root}/out")
+        n = out.count()
+        n_distinct = out.select("seq").distinct().count()
     return spark.createDataFrame(
         [(n > 0, n == n_distinct)],
         "emitted_rows BOOLEAN, seq_unique BOOLEAN",
@@ -234,16 +240,6 @@ def t4_stateful_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     message keyed by ``c_custkey % 500`` (guaranteed duplicates), the
     stream keeps first-seen keys in the state store, and the surviving
     row count must equal the distinct-key count."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.tables import load_table
-
-    root = "/tmp/spark_graft_streaming/t4"
-    shutil.rmtree(root, ignore_errors=True)
     c = load_table(spark, sf_dir, "customer")
     n_input = c.count()
     in_dir = disk_fixture(
@@ -258,18 +254,19 @@ def t4_stateful_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .json(tmp),
     )
-    streaming_dedupe(
-        spark, in_dir, f"{root}/out", f"{root}/_cp", _TXN_PROBE_SCHEMA, ["dedupe_key"]
-    )
-    out = spark.read.schema(_TXN_PROBE_SCHEMA).parquet(f"{root}/out")
-    # count(*) of the sink, NOT countDistinct: if duplicates leaked
-    # through, the row count exceeds the oracle's distinct-key count.
-    return pin_result(
-        out.agg(
-            F.count(F.lit(1)).alias("n_unique_keys"),
-            F.max(F.lit(n_input)).cast("long").alias("n_input_rows"),
+    with probe_scratch() as root:
+        streaming_dedupe(
+            spark, in_dir, f"{root}/out", f"{root}/_cp", _TXN_PROBE_SCHEMA, ["dedupe_key"]
         )
-    )
+        out = spark.read.schema(_TXN_PROBE_SCHEMA).parquet(f"{root}/out")
+        # count(*) of the sink, NOT countDistinct: if duplicates leaked
+        # through, the row count exceeds the oracle's distinct-key count.
+        return pin_result(
+            out.agg(
+                F.count(F.lit(1)).alias("n_unique_keys"),
+                F.max(F.lit(n_input)).cast("long").alias("n_input_rows"),
+            )
+        )
 
 
 @probe(
@@ -313,22 +310,6 @@ def t11_dedupe_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     data watermark T0 + 2h at most), so the outcome is pinned by STATE
     semantics alone — eviction, re-admission, and within-delay dedup
     each shift a column of the hash."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-        await_or_raise,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.tables import load_table
-
-    root = "/tmp/spark_graft_streaming/t11"
-    shutil.rmtree(root, ignore_errors=True)
-
     def waves(tmp: str) -> None:
         ks = (
             load_table(spark, sf_dir, "events")
@@ -361,44 +342,31 @@ def t11_dedupe_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = disk_fixture(
         "t11-dedupe-5wave", source_fingerprint(sf_dir, "events"), waves
     )
-    stream = (
-        spark.readStream.schema("k LONG, et TIMESTAMP, value DOUBLE, b LONG")
-        .option("maxFilesPerTrigger", 1)
-        .json(flat)
-    )
-    # One state partition for the toy-scale probe: at the session's 32
-    # the five micro-batches pay 160 state-store open/commit cycles for
-    # a few hundred keys (the x2n action-count lesson). The partition
-    # count is pinned in the checkpoint, which this probe wipes per
-    # run; production sizes it to key volume.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        q = (
-            stream.withWatermark("et", "1 hour")
+    schema = "k LONG, et TIMESTAMP, value DOUBLE, b LONG"
+    with probe_scratch() as root:
+        run_available_now(
+            spark,
+            lambda child: child.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(flat)
+            .withWatermark("et", "1 hour")
             .dropDuplicatesWithinWatermark(["k"])
             .writeStream.format("parquet")
             .option("path", f"{root}/out")
             .option("checkpointLocation", f"{root}/_cp")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            input_dirs=[flat],
         )
-        await_or_raise(q, 120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = spark.read.schema(
-        "k LONG, et TIMESTAMP, value DOUBLE, b LONG"
-    ).parquet(f"{root}/out")
-    return pin_result(
-        out.agg(
-            F.count(F.lit(1)).alias("n_out"),
-            F.count(F.when(F.col("b") == 0, 1)).alias("n_wave0"),
-            F.count(F.when(F.col("b") == 3, 1)).alias("n_wave2"),
-            F.count(F.when(F.col("b") == 4, 1)).alias("n_wave3_leaked"),
-            F.count(F.when(F.col("k") < 0, 1)).alias("n_pusher"),
+        out = spark.read.schema(schema).parquet(f"{root}/out")
+        return pin_result(
+            out.agg(
+                F.count(F.lit(1)).alias("n_out"),
+                F.count(F.when(F.col("b") == 0, 1)).alias("n_wave0"),
+                F.count(F.when(F.col("b") == 3, 1)).alias("n_wave2"),
+                F.count(F.when(F.col("b") == 4, 1)).alias("n_wave3_leaked"),
+                F.count(F.when(F.col("k") < 0, 1)).alias("n_pusher"),
+            )
         )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -435,16 +403,6 @@ def t14_state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct keys inside the probe (exact set equality via counts +
     checksum + an anti-join both ways), so any phantom or missing
     state row flips it and fails the hash."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.tables import load_table
-
-    root = "/tmp/spark_graft_streaming/t14"
-    shutil.rmtree(root, ignore_errors=True)
     src = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 6)
@@ -455,42 +413,33 @@ def t14_state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_fingerprint(sf_dir, "events"),
         lambda tmp: src.coalesce(1).write.mode("overwrite").json(tmp),
     )
-    stream = (
-        spark.readStream.schema("user_id LONG, event_id LONG")
-        .json(flat)
-        .dropDuplicates(["user_id"])
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.format("parquet")
+    with probe_scratch() as root:
+        run_available_now(
+            spark,
+            lambda child: child.readStream.schema("user_id LONG, event_id LONG")
+            .json(flat)
+            .dropDuplicates(["user_id"])
+            .writeStream.format("parquet")
             .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/cp")
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", f"{root}/cp"),
+            input_dirs=[flat],
         )
-        await_or_raise(q, 120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    state_keys = (
-        spark.read.format("statestore")
-        .load(f"{root}/cp")
-        .select(F.col("key.user_id").alias("user_id"))
-    )
-    input_keys = src.select("user_id").distinct()
-    phantom = state_keys.join(input_keys, "user_id", "left_anti").count()
-    missing = input_keys.join(state_keys, "user_id", "left_anti").count()
-    return pin_result(
-        state_keys.agg(
-            F.count(F.lit(1)).alias("n_state_keys"),
-            F.sum("user_id").alias("key_checksum"),
-            F.min("user_id").alias("min_key"),
-            F.max("user_id").alias("max_key"),
-        ).withColumn(
-            "matches_input", F.lit(phantom == 0 and missing == 0)
+        state_keys = (
+            spark.read.format("statestore")
+            .load(f"{root}/cp")
+            .select(F.col("key.user_id").alias("user_id"))
         )
-    )
+        input_keys = src.select("user_id").distinct()
+        phantom = state_keys.join(input_keys, "user_id", "left_anti").count()
+        missing = input_keys.join(state_keys, "user_id", "left_anti").count()
+        return pin_result(
+            state_keys.agg(
+                F.count(F.lit(1)).alias("n_state_keys"),
+                F.sum("user_id").alias("key_checksum"),
+                F.min("user_id").alias("min_key"),
+                F.max("user_id").alias("max_key"),
+            ).withColumn("matches_input", F.lit(phantom == 0 and missing == 0))
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -576,17 +525,6 @@ def run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice (block comment above): every emission row is a cross-batch
     state assertion, and T15_ORACLE's cumulative window replays the
     whole emission schedule."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.tables import load_table
-
-    root = "/tmp/spark_graft_streaming/t15"
-    shutil.rmtree(root, ignore_errors=True)
     src = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 8)
@@ -603,30 +541,23 @@ def run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             src, tmp, 2, slice_col=F.col("event_id")
         ),
     )
-    stream = (
-        spark.readStream.schema("user_id LONG, event_id LONG, vm LONG")
-        .option("maxFilesPerTrigger", 1)
-        .json(flat)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.groupBy("user_id")
+    with probe_scratch() as root:
+        run_available_now(
+            spark,
+            lambda child: child.readStream.schema("user_id LONG, event_id LONG, vm LONG")
+            .option("maxFilesPerTrigger", 1)
+            .json(flat)
+            .groupBy("user_id")
             .transformWithStateInPandas(
                 statefulProcessor=_RunningTotals(),
-                outputStructType="user_id LONG, n_events LONG,"
-                " value_mills LONG",
+                outputStructType="user_id LONG, n_events LONG, value_mills LONG",
                 outputMode="append",
                 timeMode="none",
             )
             .writeStream.format("parquet")
             .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/cp")
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", f"{root}/cp"),
+            input_dirs=[flat],
+            timeout_s=180,
         )
-        await_or_raise(q, 180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return pin_result(spark.read.parquet(f"{root}/out"))
+        return pin_result(spark.read.parquet(f"{root}/out"))

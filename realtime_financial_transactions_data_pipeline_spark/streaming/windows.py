@@ -16,8 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from realtime_financial_transactions_data_pipeline_spark.caching import (
+    disk_fixture,
+    source_fingerprint,
+    spark_json_slices,
+)
 from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
-from realtime_financial_transactions_data_pipeline_spark.registry import probe
+from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
+from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+    probe_scratch,
+    run_available_now,
+)
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 
@@ -174,20 +183,6 @@ def t9_stream_sessionization(spark, sf_dir: str) -> DataFrame:
     batch-composition-invariant (state merges are associative), so the
     streamed output hashes directly against the gaps-and-islands
     oracle — no batch re-derivation needed."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-        await_or_raise,
-    )
-
-    root = "/tmp/spark_graft_streaming/t9"
-    shutil.rmtree(root, ignore_errors=True)
     flat = disk_fixture(
         "t9-events",
         source_fingerprint(sf_dir, "events"),
@@ -205,34 +200,24 @@ def t9_stream_sessionization(spark, sf_dir: str) -> DataFrame:
             },
         ),
     )
-    stream = (
-        spark.readStream.schema("user_id LONG, event_time TIMESTAMP, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .json(flat)
-    )
-    sessions = sessionize(stream, ts_col="event_time", streaming=True,
-                          watermark="30 minutes")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/_cp")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 120)
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(data_batches) < 2:
-            raise RuntimeError(
-                "watermark-pusher protocol violated: expected >= 2 data "
-                f"micro-batches, got {len(data_batches)}"
+    with probe_scratch() as root:
+        run_available_now(
+            spark,
+            lambda child: sessionize(
+                child.readStream.schema("user_id LONG, event_time TIMESTAMP, value DOUBLE")
+                .option("maxFilesPerTrigger", 1)
+                .json(flat),
+                ts_col="event_time",
+                streaming=True,
+                watermark="30 minutes",
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = spark.read.parquet(f"{root}/out").filter(F.col("user_id") >= 0)
-    return pin_result(out)
+            .writeStream.format("parquet")
+            .option("path", f"{root}/out")
+            .option("checkpointLocation", f"{root}/_cp"),
+            input_dirs=[flat],
+            min_data_batches=2,  # the watermark-pusher protocol
+        )
+        return pin_result(spark.read.parquet(f"{root}/out").filter(F.col("user_id") >= 0))
 
 
 @probe(
@@ -255,20 +240,6 @@ def t10_stream_tumbling_windows(spark, sf_dir: str) -> DataFrame:
     protocol closing every window inside one availableNow run. Window
     aggregates are batch-composition-invariant, so the streamed output
     hashes directly against DuckDB's time_bucket."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-        await_or_raise,
-    )
-
-    root = "/tmp/spark_graft_streaming/t10"
-    shutil.rmtree(root, ignore_errors=True)
     flat = disk_fixture(
         "t10-events",
         source_fingerprint(sf_dir, "events"),
@@ -284,49 +255,26 @@ def t10_stream_tumbling_windows(spark, sf_dir: str) -> DataFrame:
             },
         ),
     )
-    stream = (
-        spark.readStream.schema("event_time TIMESTAMP, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .json(flat)
-        .withWatermark("event_time", "30 minutes")
-    )
-    agg = (
-        stream.groupBy(F.window("event_time", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dround(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/_cp")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 120)
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(data_batches) < 2:
-            raise RuntimeError(
-                "watermark-pusher protocol violated: expected >= 2 data "
-                f"micro-batches, got {len(data_batches)}"
+    with probe_scratch() as root:
+        run_available_now(
+            spark,
+            lambda child: windowed_revenue(
+                child.readStream.schema("event_time TIMESTAMP, value DOUBLE")
+                .option("maxFilesPerTrigger", 1)
+                .json(flat),
+                watermark="30 minutes",
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # Drop the pusher windows (2030): keep windows that saw real data.
-    out = spark.read.parquet(f"{root}/out").filter(
-        F.col("window_start") < F.lit("2029-01-01").cast("timestamp")
-    )
-    return pin_result(out)
+            .writeStream.format("parquet")
+            .option("path", f"{root}/out")
+            .option("checkpointLocation", f"{root}/_cp"),
+            input_dirs=[flat],
+            min_data_batches=2,  # the watermark-pusher protocol
+        )
+        # Drop the pusher windows (2030): keep windows that saw real data.
+        out = spark.read.parquet(f"{root}/out").filter(
+            F.col("window_start") < F.lit("2029-01-01").cast("timestamp")
+        )
+        return pin_result(out)
 
 
 @probe(
@@ -431,20 +379,6 @@ def t12_batch_stream_unification(spark, sf_dir: str) -> DataFrame:
     outputs identical in-probe (sorted-row equality; any divergence
     raises), and return the STREAMED result. Block comment above for
     why this is the unification property worth a certificate."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        disk_fixture,
-        source_fingerprint,
-        spark_json_slices,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.pipeline import (
-        await_or_raise,
-    )
-
-    root = "/tmp/spark_graft_streaming/t12"
-    shutil.rmtree(root, ignore_errors=True)
     src = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 4)
@@ -471,34 +405,23 @@ def t12_batch_stream_unification(spark, sf_dir: str) -> DataFrame:
         ),
     )
     schema = "event_time TIMESTAMP, event_type STRING, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(flat)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            _t12_transform(stream)
+    real = F.col("window_start") < F.lit("2029-01-01").cast("timestamp")
+    with probe_scratch() as root:
+        run_available_now(
+            spark,
+            lambda child: _t12_transform(
+                child.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(flat)
+            )
             .writeStream.format("parquet")
             .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/_cp")
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", f"{root}/_cp"),
+            input_dirs=[flat],
         )
-        await_or_raise(q, 120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    streamed = spark.read.parquet(f"{root}/out").filter(
-        F.col("window_start") < F.lit("2029-01-01").cast("timestamp")
-    )
+        streamed = pin_result(spark.read.parquet(f"{root}/out").filter(real))
     # The certificate: the SAME function over the SAME records as a
     # plain batch DataFrame (reading the identical JSON slices the
     # stream consumed, pusher excluded) must agree row-for-row.
-    batch = _t12_transform(
-        spark.read.schema(schema).json(flat)
-    ).filter(F.col("window_start") < F.lit("2029-01-01").cast("timestamp"))
+    batch = _t12_transform(spark.read.schema(schema).json(flat)).filter(real)
     got = sorted(map(tuple, streamed.collect()))
     want = sorted(map(tuple, batch.collect()))
     if got != want:
@@ -510,4 +433,4 @@ def t12_batch_stream_unification(spark, sf_dir: str) -> DataFrame:
             f"batch/stream divergence: {len(got)} streamed rows vs "
             f"{len(want)} batch rows (first diff: {first})"
         )
-    return pin_result(streamed)
+    return streamed

@@ -232,23 +232,29 @@ def test_crossdoc_dup_fraction_counts_shared_grams(spark):
     assert out[3] == (2, 0)
 
 
-def test_x1e_ingest_layout_is_batch_keyed(spark, sf_dir):
+def test_x1e_ingest_layout_is_batch_keyed(spark, sf_dir, tmp_path):
     """Exactly-once guard (ADVICE r06): the streaming ingest writes
     each micro-batch's accepted rows to its own batch_id-keyed
     subdirectory in OVERWRITE mode, so a retried batch rewrites rather
     than double-appends. Pin the layout (one batch=N dir per
-    micro-batch) and that the final result is duplicate-free."""
+    micro-batch) and that the final result is duplicate-free, running
+    x1e's ingest runner into this test's own directory."""
     import os
 
-    from realtime_financial_transactions_data_pipeline_spark.registry import all_probes
+    from realtime_financial_transactions_data_pipeline_spark.operators.dedup import (
+        run_stream_dedup_ingest,
+        x1e_corpus_fixture,
+    )
 
-    out = all_probes()["x1e_stream_dedup_ingest"].fn(spark, sf_dir)
-    accepted = "/tmp/spark_graft_streaming/x1e/accepted"
+    accepted = run_stream_dedup_ingest(
+        spark, x1e_corpus_fixture(spark, sf_dir), str(tmp_path)
+    )
     batch_dirs = sorted(
         d for d in os.listdir(accepted) if d.startswith("batch=")
     )
     assert batch_dirs == [f"batch={i}" for i in range(4)]
-    rows = out.collect()
+    rows = spark.read.parquet(accepted).select("doc_id", "lang").collect()
+    assert rows
     assert len(rows) == len({r.doc_id for r in rows})  # no double-append
 
 

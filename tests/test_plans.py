@@ -548,40 +548,35 @@ def test_er5_snm_no_global_window_no_theta_join(spark, sf_dir):
 
 
 def test_no_shuffle_width_conf_mutation_in_batch_operators():
-    """Tripwire (VERDICT r17 #3): no BATCH operator may mutate the
-    session-global ``spark.sql.shuffle.partitions`` — a width pinned to
-    probe scale serializes iterated loops at corpus scale, and session
-    mutation is unsafe under concurrent queries on a shared session
-    (the CC loops now derive explicit per-round repartition widths from
-    the live edge count instead). Streaming wrappers are exempt: a pin
-    around ``writeStream.start()`` sizes the state store at checkpoint
-    creation, which is load-bearing and scoped to the query it starts.
-    """
+    """Tripwire (VERDICT r17 #3): no operator or streaming module may
+    mutate ``spark.sql.shuffle.partitions`` — a width pinned to probe
+    scale serializes iterated loops at corpus scale, and session
+    mutation is unsafe under concurrent queries on a shared session.
+    The CC loops derive explicit per-round repartition widths from the
+    live edge count; streams run on a child session whose width
+    ``streaming.run`` derives from the input size. Matches real
+    ``*.conf.set("spark.sql.shuffle.partitions", ...)`` call nodes, so
+    neither a comment nor an unrelated ``conf.set`` in the same
+    function can trip or mask it."""
     import ast
     import pathlib
 
-    ops_dir = (
+    pkg = (
         pathlib.Path(__file__).resolve().parents[1]
         / "realtime_financial_transactions_data_pipeline_spark"
-        / "operators"
     )
     offenders = []
-    for path in sorted(ops_dir.glob("*.py")):
-        src = path.read_text()
-        if "spark.sql.shuffle.partitions" not in src:
-            continue
-        tree = ast.parse(src)
-        for node in ast.walk(tree):
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            seg = ast.get_source_segment(src, node) or ""
+    for path in sorted([*pkg.glob("operators/*.py"), *pkg.glob("streaming/*.py")]):
+        for node in ast.walk(ast.parse(path.read_text())):
             if (
-                "conf.set" in seg
-                and "spark.sql.shuffle.partitions" in seg
-                and "writeStream" not in seg
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "spark.sql.shuffle.partitions"
             ):
-                offenders.append(f"{path.name}:{node.name}")
-    assert offenders == [], (
-        "batch operator mutates session-global shuffle width: "
-        f"{offenders}"
-    )
+                offenders.append(f"{path.parent.name}/{path.name}:{node.lineno}")
+    assert offenders == [], f"module mutates session-global shuffle width: {offenders}"
