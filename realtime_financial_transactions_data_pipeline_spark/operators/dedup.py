@@ -1121,7 +1121,6 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iters: int = 25,
-    pin: bool = False,
 ) -> DataFrame:
     """Min-label propagation over an undirected edge list: every node's
     label converges to the smallest id reachable from it. Returns
@@ -1130,24 +1129,13 @@ def connected_components(
     Each round is one shuffle join + one aggregation — the standard
     distributed-CC shape (GraphX/Pregel label propagation). Rounds
     needed = graph diameter; duplicate clusters are dense, so real
-    corpora converge in a handful (the Kiveris et al. large-star/
-    small-star variant gets O(log n) worst-case — noted as the upgrade
-    path if a pathological chain corpus ever shows up; the iteration
-    cap guards against it meanwhile). The per-round convergence check
-    is a metadata-sized aggregate (count of changed labels), not a data
-    collect; intermediate labels are persisted and unpersisted
-    round-by-round so the lineage doesn't deepen geometrically.
-
-    ``pin=False`` (default) returns the converged labels as a
-    DISTRIBUTED frame (a localCheckpoint-materialized LogicalRDD) —
-    the right default for a public API that may face a corpus-scale
-    label set; write it to a table downstream. Probes that hash the
-    result opt in to ``pin=True``, which collects the labels into a
-    local relation — cheap there because the output is only the
-    dup-cluster nodes (orders of magnitude smaller than the corpus),
-    and immune to later scratch wipes. (VERDICT r13: the old
-    ``pin=True`` default silently materialized every vertex label on
-    the driver at scale — wrong polarity for a public API.)
+    corpora converge in a handful — x2i's simhash edges at sf0.1 take
+    11 of the ``max_iters`` rounds, which bound pathological chains.
+    The per-round convergence check is a metadata-sized aggregate
+    (count of changed labels), not a data collect. The converged
+    labels come back as a DISTRIBUTED frame (a
+    localCheckpoint-materialized LogicalRDD), never collected to the
+    driver; write it to a table downstream at corpus scale.
 
     Lineage is truncated EVERY round with ``localCheckpoint(eager=True)``.
     Persisting alone is not enough: persist caches the *data* but the
@@ -1233,9 +1221,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds"
         )
-    if not pin:
-        return labels
-    return labels.sparkSession.createDataFrame(labels.collect(), labels.schema)
+    return labels
 
 
 @probe(
@@ -1264,12 +1250,12 @@ def x2i_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _memo_simhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized pinned simhash-component labels (the _memo_pairs
-    pattern, r17 optimization): x2i, x2y and x22 each ran the SAME
-    multi-round min-label loop over the same simhash edge set —
-    ~3 blocking jobs per round per probe. One shared build serves all
-    three; the pinned frame is dup-cluster-sized (ids only), the class
-    this cache holds everywhere else."""
+    """Memoized simhash-component labels (the _memo_pairs pattern,
+    r17 optimization): x2i, x2y and x22 each ran the SAME multi-round
+    min-label loop over the same simhash edge set — ~3 blocking jobs
+    per round per probe. One shared build serves all three; the label
+    frame is dup-cluster-sized (ids only), the class this cache holds
+    everywhere else."""
     from realtime_financial_transactions_data_pipeline_spark.caching import (
         memo_persist,
     )
@@ -1278,7 +1264,7 @@ def _memo_simhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("simhash_cc", sf_dir),
         lambda: connected_components(
-            simhash_pairs(_corpus_simhash(spark, sf_dir)), pin=True
+            simhash_pairs(_corpus_simhash(spark, sf_dir))
         ),
     )
 

@@ -328,9 +328,8 @@ def _triangle_counts_broadcast(edges: DataFrame) -> DataFrame:
 
     spark = edges.sparkSession
     e = edges.select("u", "v")  # caller (triangle_counts) checkpointed
-    bi = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     members = (
-        bi.groupBy("u")
+        _bidirected(e).groupBy("u")
         .agg(F.sort_array(F.collect_list("v")).alias("ns"))
         .collect()
     )
@@ -407,6 +406,33 @@ def _memo_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _coeng_edges_cte(min_shared: int, weighted: bool = False) -> str:
+    """DuckDB CTEs ``b``, ``sized``, ``bb``, ``e``: the oracle twin of
+    :func:`_memo_pairs` filtered at ``min_shared`` — ``e(u, v)`` with
+    u < v, plus ``w`` = shared-bucket count when ``weighted``. Callers
+    open their own ``WITH`` / ``WITH RECURSIVE`` and append their own
+    CTEs (the ``dedup._PORTABLE_SIMHASH_PAIRS_CTE`` pattern)."""
+    w = ", count(*) AS w" if weighted else ""
+    return f"""b AS (SELECT DISTINCT user_id, event_type,
+                      date_trunc('hour', ts) AS h FROM events),
+    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
+    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
+           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
+    e AS (SELECT a.user_id AS u, c.user_id AS v{w}
+          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
+                             AND a.user_id < c.user_id
+          GROUP BY 1, 2 HAVING count(*) >= {min_shared})"""
+
+
+def _bidirected(edges: DataFrame, *extra: str) -> DataFrame:
+    """Both orientations of an undirected (u < v) edge list: (u, v,
+    *extra) ∪ (v, u, *extra) — the adjacency view every per-node
+    aggregate of the family reads."""
+    return edges.select("u", "v", *extra).unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"), *extra)
+    )
+
+
 def _memo_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized triangle pass over the default edge set (the
     _memo_pairs pattern), shared by g1 and g1b. Root cause of the r14
@@ -428,15 +454,7 @@ def _memo_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @probe(
     "g1_triangle_count",
     oracle=f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G1_MIN_SHARED)},
     tri AS (SELECT e1.u AS a, e1.v AS b2, e2.v AS c
             FROM e e1
             JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
@@ -464,11 +482,11 @@ def g1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # G2 — PageRank over the same co-engagement graph: the canonical
 # iterative fixed-point computation. Fixed iteration count (3) keeps
 # it deterministic and lets the oracle UNROLL the recursion in plain
-# SQL; per-round `localCheckpoint(eager=True)` keeps every round's
-# logical plan constant-size (the x2i discipline — persist alone left
-# plans doubling per round and stalled Catalyst in round 4). No
-# dangling-node mass term: every node here has degree >= 1 by
-# construction (nodes ARE edge endpoints).
+# SQL; the static sides are checkpointed once and the rounds unroll
+# into one constant-depth plan (:func:`pagerank`). One PageRank serves
+# g2 (w = 1) and g6 (w = shared-bucket count). No dangling-node mass
+# term: every node here has degree >= 1 by construction (nodes ARE
+# edge endpoints).
 # ---------------------------------------------------------------------------
 
 _G2_DAMPING = 0.85
@@ -476,16 +494,20 @@ _G2_ITERS = 3
 
 
 def pagerank(edges: DataFrame, iters: int = _G2_ITERS, d: float = _G2_DAMPING) -> DataFrame:
-    """PageRank over undirected edges (u < v), uniform init. Returns
-    (user_id, rank). The rank vector is |nodes|-sized state; the edge
+    """PageRank over undirected weighted edges (u < v, weight w > 0),
+    uniform init: node u sends p(u) * w(u,v) / W(u) along each edge,
+    W(u) = total incident weight. Returns (user_id, rank). Unweighted
+    PageRank is the w = 1 case — p * 1 / Σ1 is p / outdeg exactly in
+    IEEE arithmetic. The rank vector is |nodes|-sized state; the edge
     relation is the only big operand and it never changes — at cluster
     scale pre-partition both sides on the node key once and every
     iteration's join reuses that partitioning."""
-    bi = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    bi = _bidirected(edges, "w")
+    # One row per node, carrying W(u): the rank frame holds it, so the
+    # edge side every round shuffles stays (u, v, w).
+    nodes = (
+        bi.groupBy("u").agg(F.sum("w").alias("wd")).localCheckpoint(eager=True)
     )
-    outd = bi.groupBy("u").agg(F.count(F.lit(1)).alias("od"))
-    nodes = bi.select("u").distinct()
     n = nodes.count()
     if n == 0:
         # No user pair shares >= min_shared buckets (possible at tiny
@@ -504,20 +526,20 @@ def pagerank(edges: DataFrame, iters: int = _G2_ITERS, d: float = _G2_DAMPING) -
     # geometric-plan-growth regime that forces per-round truncation in
     # the CONVERGENCE-checked loops (connected_components docstring);
     # those must still materialize per round to run their stop test.
-    nodes = nodes.localCheckpoint(eager=True)
-    p = nodes.select("u", F.lit(1.0 / n).alias("p"))
-    adj = bi.join(outd, "u").localCheckpoint(eager=True)  # (u, v, od) — static
+    p = nodes.select("u", "wd", F.lit(1.0 / n).alias("p"))
+    adj = bi.localCheckpoint(eager=True)  # (u, v, w) — static
     for _ in range(iters):
         contribs = (
             adj.join(p, "u")
             .groupBy("v")
-            .agg(F.sum(F.col("p") / F.col("od")).alias("c"))
+            .agg(F.sum(F.col("p") * F.col("w") / F.col("wd")).alias("c"))
             .withColumnRenamed("v", "_cv")
         )
         p = (
             nodes.join(contribs, F.col("u") == F.col("_cv"), "left")
             .select(
                 "u",
+                "wd",
                 (
                     F.lit((1.0 - d) / n)
                     + F.lit(d) * F.coalesce(F.col("c"), F.lit(0.0))
@@ -530,15 +552,7 @@ def pagerank(edges: DataFrame, iters: int = _G2_ITERS, d: float = _G2_DAMPING) -
 @probe(
     "g2_pagerank",
     oracle=f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G1_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
     outd AS (SELECT u, count(*) AS od FROM bi GROUP BY u),
     nodes AS (SELECT DISTINCT u FROM bi),
@@ -571,26 +585,18 @@ def g2_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion as three correlated-sum CTEs (DuckDB decorrelates them),
     so the hash certifies the contribution join, the damping
     arithmetic, and the isolated-neighbor coalesce across all rounds.
-    Per-round eager localCheckpoint keeps plans constant-size (module
-    comment)."""
+    Every edge weighs 1, so each node splits its rank by out-degree."""
     from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
 
-    pr = pagerank(_memo_edges(spark, sf_dir))
+    edges = _memo_edges(spark, sf_dir)
+    pr = pagerank(edges.select("u", "v", F.lit(1).cast("long").alias("w")))
     return pr.select("user_id", dround("rank", 6).alias("rank"))
 
 
 @probe(
     "g1b_clustering_coefficient",
     oracle=f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G1_MIN_SHARED)},
     deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
             (SELECT u AS node FROM e UNION ALL SELECT v FROM e)
             GROUP BY node),
@@ -679,9 +685,7 @@ def link_predictions(
     )
     from pyspark.sql import Window
 
-    bi = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    bi = _bidirected(edges)
     deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     # Common-neighbor counting is the SAME problem as co-engagement
     # pair counting with each (hub-capped) node's adjacency list as
@@ -735,15 +739,7 @@ def link_predictions(
 @probe(
     "g3_link_prediction",
     oracle=f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G1_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
     deg AS (SELECT u, count(*) AS d FROM bi GROUP BY u),
     w AS (SELECT b1.v AS u, b2.v AS v
@@ -796,9 +792,7 @@ def bfs_hops(edges: DataFrame, max_hops: int = _G4_MAX_HOPS) -> DataFrame:
     edges (u < v), bounded at ``max_hops``. Returns (u, hop); BFS
     order guarantees first discovery IS the minimum distance."""
     spark = edges.sparkSession
-    bi = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    bi = _bidirected(edges).localCheckpoint(eager=True)
     src = bi.agg(F.min("u").alias("s")).collect()[0]["s"]
     if src is None:  # empty graph at tiny SFs — no rows, stable schema
         return spark.createDataFrame([], "u long, hop int")
@@ -825,15 +819,7 @@ def bfs_hops(edges: DataFrame, max_hops: int = _G4_MAX_HOPS) -> DataFrame:
 @probe(
     "g4_bfs_hops",
     oracle=f"""
-    WITH RECURSIVE b AS (SELECT DISTINCT user_id, event_type,
-                                date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH RECURSIVE {_coeng_edges_cte(_G1_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
     src AS (SELECT min(u) AS s FROM bi),
     r AS (SELECT s AS v, 0 AS d FROM src WHERE s IS NOT NULL
@@ -861,15 +847,16 @@ def g4_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # G5 — connected components over the co-engagement graph: the community
 # / fraud-ring boundary question ("which users form one interaction
-# island?"). Reuses the engine's production min-label-propagation CC
+# island?"). Uses the engine's one CC, min-label propagation
 # (operators/dedup.connected_components — the x2i machinery: per-round
 # eager localCheckpoint for constant-size plans, metadata-only
-# convergence check, O(diameter) rounds). At the DEFAULT edge threshold
-# this corpus is one dense hairball, so g5 raises min_shared to the
-# community regime (>= _G5_MIN_SHARED shared buckets) where real
-# component structure exists — the same pair-count frame, one filter
-# different. Output is per-component (component = min user_id, size):
-# |components| rows, never the node list.
+# convergence check, O(diameter) rounds, distributed labels); g8 reads
+# the same components. At the DEFAULT edge threshold this corpus is
+# one dense hairball, so g5 raises min_shared to the community regime
+# (>= _G5_MIN_SHARED shared buckets) where real component structure
+# exists — the same pair-count frame, one filter different. Output is
+# per-component (component = min user_id, size): |components| rows,
+# never the node list.
 # ---------------------------------------------------------------------------
 
 _G5_MIN_SHARED = 6
@@ -878,15 +865,7 @@ _G5_MIN_SHARED = 6
 @probe(
     "g5_connected_components",
     oracle=f"""
-    WITH RECURSIVE b AS (SELECT DISTINCT user_id, event_type,
-                                date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G5_MIN_SHARED}),
+    WITH RECURSIVE {_coeng_edges_cte(_G5_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
     r AS (SELECT u AS node, u AS lbl FROM (SELECT DISTINCT u FROM bi)
           UNION
@@ -915,80 +894,24 @@ def g5_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_shared") >= _G5_MIN_SHARED)
         .select("u", "v")
     )
-    comp = connected_components(edges, a_col="u", b_col="v", pin=True)
+    comp = connected_components(edges, a_col="u", b_col="v")
     return comp.groupBy(F.col("canonical_id").alias("component")).agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
 
 
 # ---------------------------------------------------------------------------
-# G6 — WEIGHTED PageRank: same fixed-point as g2 but mass flows in
-# proportion to edge weight (shared-bucket count), the form actually
-# used on interaction graphs where tie strength matters (a pair
-# sharing 20 activity buckets should pull more rank than a pair
-# sharing 3). Identical plan shape to g2 — static weighted adjacency
-# checkpointed once, constant-size per-round plans, |nodes|-sized rank
-# state — so the scale posture carries over unchanged; the only new
-# arithmetic is the per-node weight normalizer replacing out-degree.
+# G6 — WEIGHTED PageRank: g2's :func:`pagerank` with the shared-bucket
+# count as edge weight, the form actually used on interaction graphs
+# where tie strength matters (a pair sharing 20 activity buckets should
+# pull more rank than a pair sharing 3). Same plan, same scale posture.
 # ---------------------------------------------------------------------------
-
-
-def weighted_pagerank(
-    wedges: DataFrame, iters: int = _G2_ITERS, d: float = _G2_DAMPING
-) -> DataFrame:
-    """PageRank over undirected weighted edges (u < v, weight w > 0):
-    node u sends p(u) * w(u,v) / W(u) along each edge, W(u) = total
-    incident weight. Returns (user_id, rank)."""
-    bi = wedges.select("u", "v", "w").unionAll(
-        wedges.select(
-            F.col("v").alias("u"), F.col("u").alias("v"), F.col("w")
-        )
-    )
-    wd = bi.groupBy("u").agg(F.sum("w").alias("wd"))
-    nodes = bi.select("u").distinct()
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            F.col("u").alias("user_id"), F.lit(0.0).alias("rank")
-        )
-    # Unrolled into one lazy plan exactly as in :func:`pagerank` (r17
-    # optimization note there): fixed 3 rounds, static sides
-    # checkpointed once, zero per-round blocking jobs.
-    nodes = nodes.localCheckpoint(eager=True)
-    p = nodes.select("u", F.lit(1.0 / n).alias("p"))
-    adj = bi.join(wd, "u").localCheckpoint(eager=True)  # (u, v, w, wd) — static
-    for _ in range(iters):
-        contribs = (
-            adj.join(p, "u")
-            .groupBy("v")
-            .agg(F.sum(F.col("p") * F.col("w") / F.col("wd")).alias("c"))
-            .withColumnRenamed("v", "_cv")
-        )
-        p = (
-            nodes.join(contribs, F.col("u") == F.col("_cv"), "left")
-            .select(
-                "u",
-                (
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d) * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("p"),
-            )
-        )
-    return p.select(F.col("u").alias("user_id"), F.col("p").alias("rank"))
 
 
 @probe(
     "g6_weighted_pagerank",
     oracle=f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v, count(*) AS w
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G1_MIN_SHARED, weighted=True)},
     bi AS (SELECT u, v, w FROM e UNION ALL SELECT v, u, w FROM e),
     wd AS (SELECT u, sum(w) AS wd FROM bi GROUP BY u),
     nodes AS (SELECT DISTINCT u FROM bi),
@@ -1027,7 +950,7 @@ def g6_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_shared") >= _G1_MIN_SHARED)
         .select("u", "v", F.col("n_shared").alias("w"))
     )
-    p = weighted_pagerank(wedges)
+    p = pagerank(wedges)
     return p.select("user_id", dround("rank", 6).alias("rank"))
 
 
@@ -1045,15 +968,7 @@ def g6_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @probe(
     "g7_graph_summary",
     oracle=f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G1_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
     deg AS (SELECT u AS node, count(*) AS d FROM bi GROUP BY u),
     ed AS (SELECT du.d AS ju, dv.d AS jv
@@ -1096,10 +1011,11 @@ def graph_summary(edges: DataFrame) -> DataFrame:
     assortativity from exact integer moment sums."""
     from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
 
-    bi = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    deg = (
+        _bidirected(edges)
+        .groupBy(F.col("u").alias("node"))
+        .agg(F.count(F.lit(1)).alias("d"))
     )
-    deg = bi.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     ed = (
         edges.join(
             deg.select(F.col("node").alias("u"), F.col("d").alias("ju")), "u"
@@ -1144,68 +1060,6 @@ def graph_summary(edges: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# G8 — connected components via LARGE-STAR / SMALL-STAR alternation
-# (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-# the O(log n)-round algorithm the min-label-propagation CC
-# (operators/dedup.connected_components) names as its upgrade path for
-# pathological high-diameter graphs. Each round rewires the edge list
-# toward a star forest rooted at component minima:
-#   large-star(u): every neighbor v > u reattaches to min(Γ(u) ∪ {u});
-#   small-star(u): orient edges large→small, every smaller neighbor
-#   (and u itself) reattaches to the minimum.
-# Rounds needed are O(log n) REGARDLESS of diameter — label
-# propagation pays O(diameter) rounds on a path graph; the star
-# alternation halves star heights geometrically. Per round: two
-# groupBy-min aggregations + two joins over the (shrinking) edge list,
-# plans kept constant-size by eager localCheckpoint (the x2i
-# discipline). Convergence is an EXACT fixed-point check (symmetric
-# exceptAll, edge-list-sized — correctness-first; a production run at
-# extreme scale can swap it for a count+hash metadata check).
-# Reference counterpart: none (reference dedupes exact rows only);
-# algorithm per the public MapReduce-CC literature.
-# ---------------------------------------------------------------------------
-
-
-def connected_components_star(
-    edges: DataFrame, a_col: str = "u", b_col: str = "v", max_iters: int = 25
-) -> DataFrame:
-    """Star-contraction connected components over an undirected edge
-    list: returns (doc_id, canonical_id) for every node appearing in an
-    edge, canonical_id = the component's minimum node id — the same
-    contract as ``dedup.connected_components``, reached in O(log n)
-    rounds instead of O(diameter)."""
-    e = (
-        edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # r17 optimization: make the exact fixed-point check cheap — both
-    # sides are DISTINCT sets, so |small| == |e| AND small∖e = ∅
-    # already implies equality; the counts come free with each round's
-    # materialization, and the one-directional exceptAll only runs when
-    # the counts match (before: two edge-list exceptAll jobs EVERY
-    # round). r18 (VERDICT r17 #1/#3): the r17 companion change — a
-    # session-global spark.sql.shuffle.partitions=4 pin around the loop
-    # — is REMOVED: width 4 was sized to sf0.1's edge list (it would
-    # serialize the loop at 100 TB) and mutating session state is
-    # unsafe under concurrent queries. AQE's runtime coalescing gives
-    # each round the same narrow width here and a data-sized width at
-    # scale; A/B-measured flat at sf0.1 (g8 3.18 → 3.18 s min-of-3).
-    e = _star_fixpoint(e, max_iters)
-    # Fixed point is a star forest (node -> component root); roots
-    # label themselves.
-    roots = e.select(
-        F.col("b").alias("doc_id"), F.col("b").alias("canonical_id")
-    ).distinct()
-    return (
-        e.select(F.col("a").alias("doc_id"), F.col("b").alias("canonical_id"))
-        .unionByName(roots)
-        .distinct()
-    )
-
-
 def _cc_loop_width(n_rows: int) -> int:
     """Shuffle width for one round of an iterated edge-list loop,
     derived from the MATERIALIZED row count (VERDICT r17 #3): ~100k
@@ -1216,87 +1070,20 @@ def _cc_loop_width(n_rows: int) -> int:
     return max(4, n_rows // 100_000 + 1)
 
 
-def _star_fixpoint(e: DataFrame, max_iters: int) -> DataFrame:
-    """The large-star/small-star alternation loop of
-    :func:`connected_components_star`, run to the exact fixed point.
-
-    Shuffle plan per round (r18): THREE explicit count-derived
-    ``repartition(w, "a")`` exchanges — the bi-directed view, the
-    oriented edge set, the next edge set — and nothing implicit.
-    Hash-partitioning on ``a`` clusters every (a, b) group too (subset
-    rule), so each exchange serves ALL downstream per-round operators:
-    bi's feeds both the neighborhood-min aggregate and the large-star
-    join (reused exchange), o's feeds the distinct, the small-star
-    min aggregate AND the om join, small's feeds its distinct. The
-    r17 shape paid ~6 implicit conf-width exchanges per round; this
-    pays 3 at a width derived from the live edge count — no
-    session-global ``spark.sql.shuffle.partitions`` mutation (the r17
-    pin was sized to sf0.1 and would serialize the loop at 100 TB)."""
-    n_prev = e.count()
-    for _ in range(max_iters):
-        w = _cc_loop_width(n_prev)
-        # Large-star: reattach strictly-larger neighbors to the
-        # center's neighborhood minimum (center included).
-        bi = e.unionAll(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).repartition(w, "a")
-        mn = bi.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
-        # No distinct here (r17): `o` below re-distincts after its
-        # greatest/least normalization and `mn2` is a min-aggregate —
-        # duplicates cannot change either, so this round pays one
-        # shuffle less.
-        large = (
-            bi.join(mn, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-        )
-        # Small-star: orient large→small; reattach every smaller
-        # neighbor AND the center to the minimum.
-        o = (
-            large.select(
-                F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-            )
-            .repartition(w, "a")
-            .distinct()
-        )
-        mn2 = o.groupBy("a").agg(F.min("b").alias("m"))
-        om = o.join(mn2, "a")
-        small = (
-            om.select(F.col("b").alias("x"), "m")
-            .unionAll(om.select(F.col("a").alias("x"), "m"))
-            .filter(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("a"), F.col("m").alias("b"))
-            .repartition(w, "a")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_cur = small.count()
-        changed = 1
-        if n_cur == n_prev:
-            # equal-size distinct sets with an empty one-directional
-            # difference ARE equal — the second exceptAll is redundant.
-            changed = small.exceptAll(e).limit(1).count()
-        e, n_prev = small, n_cur
-        if changed == 0:
-            return e
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iters} rounds"
-    )
+# ---------------------------------------------------------------------------
+# G8 — per-component membership extremes over g5's community-regime
+# components: size, minimum node (the component id) AND maximum node.
+# Same shared CC as g5 (operators/dedup.connected_components), one more
+# aggregate column; the recursive-closure oracle pins both extremes, so
+# the hash certifies every component's exact boundary ids, not only its
+# size. The probe name is a stable registry key, not the algorithm.
+# ---------------------------------------------------------------------------
 
 
 @probe(
     "g8_star_components",
     oracle=f"""
-    WITH RECURSIVE b AS (SELECT DISTINCT user_id, event_type,
-                                date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G5_MIN_SHARED}),
+    WITH RECURSIVE {_coeng_edges_cte(_G5_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
     r AS (SELECT u AS node, u AS lbl FROM (SELECT DISTINCT u FROM bi)
           UNION
@@ -1309,19 +1096,20 @@ def _star_fixpoint(e: DataFrame, max_iters: int) -> DataFrame:
     """,
 )
 def g8_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G8 — the same community-regime components as g5, computed by the
-    large-star/small-star contraction instead of min-label propagation
-    (block comment above): two INDEPENDENT distributed algorithms, one
-    recursive-closure oracle — the hash certifies they agree down to
-    per-component membership extremes (component minimum AND maximum
-    node id, plus size). Reuses the memoized pair-count pass shared by
+    """G8 — size, minimum and maximum node id of every community-regime
+    component (block comment above), from the same min-label
+    propagation as g5. Reuses the memoized pair-count pass shared by
     the whole graph family."""
+    from realtime_financial_transactions_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+
     edges = (
         _memo_pairs(spark, sf_dir)
         .filter(F.col("n_shared") >= _G5_MIN_SHARED)
         .select("u", "v")
     )
-    comp = connected_components_star(edges)
+    comp = connected_components(edges, a_col="u", b_col="v")
     return comp.groupBy(F.col("canonical_id").alias("component")).agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.max("doc_id").alias("max_node"),
@@ -1350,9 +1138,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     neighbor degree — plus the global assortativity coefficient
     r = (M·Σxy − Σx·Σy) / (M·Σx² − Σx·Σy) on the symmetrized list
     (x = du, y = dv; symmetric, so Σy = Σx and Σy² = Σx²)."""
-    bi = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    bi = _bidirected(edges)
     deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     j = (
         bi.join(deg, "u")
@@ -1391,15 +1177,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
 @probe(
     "g9_degree_assortativity",
     oracle=f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G1_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G1_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM bi GROUP BY u),
     j AS (SELECT bi.u, bi.v, du.d AS du, dv.d AS dv
@@ -1528,15 +1306,8 @@ def _g10_oracle() -> str:
     chains = ",\n    ".join(c for c, _ in per_k)
     selects = "\n    UNION ALL\n    ".join(s for _, s in per_k)
     return f"""
-    WITH b AS (SELECT DISTINCT user_id, event_type,
-                      date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e0 AS MATERIALIZED (SELECT a.user_id AS u, c.user_id AS v
-           FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                              AND a.user_id < c.user_id
-           GROUP BY 1, 2 HAVING count(*) >= {_G10_MIN_SHARED}),
+    WITH {_coeng_edges_cte(_G10_MIN_SHARED)},
+    e0 AS MATERIALIZED (SELECT u, v FROM e),
     {chains}
     {selects}
     """
@@ -1607,15 +1378,7 @@ _G11_ROUNDS = 3
 
 
 def _g11_oracle() -> str:
-    bi = f"""b AS (SELECT DISTINCT user_id, event_type,
-                          date_trunc('hour', ts) AS h FROM events),
-    sized AS (SELECT event_type, h, count(*) AS sz FROM b GROUP BY 1, 2),
-    bb AS (SELECT b.* FROM b JOIN sized USING (event_type, h)
-           WHERE sz BETWEEN 2 AND {_G1_BUCKET_CAP}),
-    e AS (SELECT a.user_id AS u, c.user_id AS v
-          FROM bb a JOIN bb c ON a.event_type = c.event_type AND a.h = c.h
-                             AND a.user_id < c.user_id
-          GROUP BY 1, 2 HAVING count(*) >= {_G5_MIN_SHARED}),
+    bi = f"""{_coeng_edges_cte(_G5_MIN_SHARED)},
     bi AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
     l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM bi)"""
     rounds = []
@@ -1652,9 +1415,8 @@ def g11_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_shared") >= _G5_MIN_SHARED)
         .select("u", "v")
     )
-    bi = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)  # reused every round; pin the lineage
+    # Reused every round; pin the lineage.
+    bi = _bidirected(edges).localCheckpoint(eager=True)
     labels = bi.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )

@@ -55,10 +55,10 @@ def get_spark(
         # advisory size (a19 2.0 → 4.1 s, sql2 6.1 → 7.4 s,
         # o14 +1.2 s) — AQE cannot see that exploded/aggregation rows
         # are compute-dense, only their bytes. The iterative loops
-        # that motivated the experiment (CC label propagation, star
-        # contraction, k-core peel) instead derive EXPLICIT per-round
-        # repartition widths from their live edge counts, which is
-        # immune to this knob at any scale.
+        # that motivated the experiment (CC label propagation, k-core
+        # peel) instead derive EXPLICIT per-round repartition widths
+        # from their live edge counts, which is immune to this knob at
+        # any scale.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -146,11 +146,6 @@ MATRIX = {
     "x2t_ivfpq_residual_search": ("embeddings", (1, 10)),
     "x2v_ivfpq_refine": ("embeddings", (1, 10)),
     "x2w_matryoshka_prefix_search": ("embeddings", (1, 10)),
-    # Not a registry probe: the g5 probe opts in to pin=True (tiny
-    # hashed output), so this entry exercises the PUBLIC DEFAULT —
-    # connected_components(pin=False), distributed labels end to end —
-    # at scale (VERDICT r13 weak #1 done-criterion).
-    "cc_default_nopin": ("events", (1, 10)),
     # The over-guard shuffle fallback, forced (VERDICT r14 #4): the
     # broadcast-CSR kernel is measured above; this row certifies the
     # path that takes over when the membership guard trips. 100x is
@@ -179,25 +174,6 @@ MATRIX = {
     "x3o_bpe_encode": ("documents", (1, 10, 100)),
     "x2x_persisted_ivf": ("embeddings", (1, 10)),
 }
-
-
-def _cc_default_nopin(spark: SparkSession, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from realtime_financial_transactions_data_pipeline_spark.operators.dedup import (
-        connected_components,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.operators.graph import (
-        _G5_MIN_SHARED,
-        _memo_pairs,
-    )
-
-    edges = (
-        _memo_pairs(spark, sf_dir)
-        .filter(F.col("n_shared") >= _G5_MIN_SHARED)
-        .select("u", "v")
-    )
-    return connected_components(edges, a_col="u", b_col="v")
 
 
 def _pairs_shuffle_fallback(spark: SparkSession, sf_dir: str):
@@ -336,7 +312,6 @@ CUSTOM = {
     "sql2_recursive_cte": _sql2_smoke,
     "x25_repeated_substring_spans": _x25_forced,
     "x26_span_decontamination": _x26_forced,
-    "cc_default_nopin": _cc_default_nopin,
     "pairs_shuffle_fallback": _pairs_shuffle_fallback,
     "q1_bucketed_star": _q1_bucketed_star,
 }

@@ -59,20 +59,15 @@ def test_coengagement_edges_threshold(spark):
     assert got == {(1, 2)}
 
 
-def test_star_components_match_union_find_and_label_prop(spark):
-    """connected_components_star (large-star/small-star) against a
-    driver-side union-find AND the production label-propagation CC on
-    adversarial shapes: a 40-node path (the O(diameter) worst case the
-    star alternation exists to beat), two dense cliques bridged by one
-    edge, a star with a hub that is NOT the minimum, and singleton
-    edges."""
+def test_label_prop_components_match_union_find(spark):
+    """The label-propagation CC against a driver-side union-find on
+    adversarial shapes: a 40-node path (label propagation's O(diameter)
+    worst case), two dense cliques bridged by one edge, a star with a
+    hub that is NOT the minimum, singleton edges, and a random graph."""
     import random
 
     from realtime_financial_transactions_data_pipeline_spark.operators.dedup import (
         connected_components,
-    )
-    from realtime_financial_transactions_data_pipeline_spark.operators.graph import (
-        connected_components_star,
     )
 
     def brute(pairs):
@@ -106,22 +101,15 @@ def test_star_components_match_union_find_and_label_prop(spark):
     for pairs in cases:
         pairs = [(a, b) for a, b in pairs if a != b]
         df = spark.createDataFrame(pairs, "u long, v long")
-        star = {
-            r.doc_id: r.canonical_id
-            for r in connected_components_star(df).collect()
-        }
-        assert star == brute(pairs), pairs
         # max_iters=60: label propagation needs O(diameter) rounds, so
-        # the 40-node path blows the default 25 cap — the exact failure
-        # mode the star alternation's O(log n) rounds avoid (star CC
-        # converges on the same path in ~6 rounds under ITS default).
+        # the 40-node path blows the default 25 cap.
         prop = {
             r.doc_id: r.canonical_id
             for r in connected_components(
                 df, a_col="u", b_col="v", max_iters=60
             ).collect()
         }
-        assert star == prop, pairs
+        assert prop == brute(pairs), pairs
 
 
 def test_pair_count_strategies_agree_on_adversarial_layout(spark):
@@ -239,10 +227,8 @@ def test_pagerank_known_values(spark):
         pagerank,
     )
 
-    pr = {
-        r.user_id: r.rank
-        for r in pagerank(_edges(spark, [(1, 2), (2, 3)]), iters=3).collect()
-    }
+    e = _edges(spark, [(1, 2), (2, 3)]).withColumn("w", F.lit(1).cast("long"))
+    pr = {r.user_id: r.rank for r in pagerank(e, iters=3).collect()}
     assert set(pr) == {1, 2, 3}
     assert abs(sum(pr.values()) - 1.0) < 1e-9
     assert pr[1] == pr[3] and pr[2] > pr[1]
@@ -268,7 +254,7 @@ def test_pagerank_empty_edges_returns_empty(spark):
         pagerank,
     )
 
-    empty = spark.createDataFrame([], "u long, v long")
+    empty = spark.createDataFrame([], "u long, v long, w long")
     out = pagerank(empty)
     assert out.columns == ["user_id", "rank"]
     assert out.count() == 0
@@ -420,24 +406,28 @@ def test_g5_components_match_union_find(spark):
     assert probe_rows == expect
 
 
-def test_weighted_pagerank_mass_and_uniform_equivalence(spark):
-    """Weighted PageRank must (a) conserve probability mass every run,
-    and (b) degenerate EXACTLY to unweighted PageRank when all weights
-    are equal (w=1 makes w/W(u) = 1/deg(u))."""
+def test_pagerank_constant_weight_mass_and_strong_tie(spark):
+    """PageRank must (a) give the SAME ranks for any constant weight c
+    as for w = 1 (c/W(u) = 1/deg(u)), (b) conserve probability mass,
+    and (c) let a strong tie pull more rank than a weak one."""
     from realtime_financial_transactions_data_pipeline_spark.operators.graph import (
         pagerank,
-        weighted_pagerank,
     )
 
     pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (1, 5), (5, 6)]
     e = _edges(spark, pairs)
-    we = e.withColumn("w", F.lit(1).cast("long"))
-    pw = {r.user_id: r.rank for r in weighted_pagerank(we).collect()}
-    pu = {r.user_id: r.rank for r in pagerank(e).collect()}
-    assert set(pw) == set(pu)
+    pc = {
+        r.user_id: r.rank
+        for r in pagerank(e.withColumn("w", F.lit(7).cast("long"))).collect()
+    }
+    pu = {
+        r.user_id: r.rank
+        for r in pagerank(e.withColumn("w", F.lit(1).cast("long"))).collect()
+    }
+    assert set(pc) == set(pu)
     for k in pu:
-        assert abs(pw[k] - pu[k]) < 1e-12, (k, pw[k], pu[k])
-    assert abs(sum(pw.values()) - 1.0) < 1e-9
+        assert abs(pc[k] - pu[k]) < 1e-12, (k, pc[k], pu[k])
+    assert abs(sum(pc.values()) - 1.0) < 1e-9
     # Strong tie dominates: connect 7 to the graph with a heavy edge to
     # node 1 and a light edge to node 6 — node 1 must gain more rank
     # from 7 than node 6 does.
@@ -447,7 +437,7 @@ def test_weighted_pagerank_mass_and_uniform_equivalence(spark):
           (1, 5, 1), (5, 6, 1), (1, 7, 10), (6, 7, 1)]],
         "u long, v long, w long",
     )
-    pw2 = {r.user_id: r.rank for r in weighted_pagerank(we2).collect()}
+    pw2 = {r.user_id: r.rank for r in pagerank(we2).collect()}
     assert abs(sum(pw2.values()) - 1.0) < 1e-9
     assert pw2[1] > pw2[6]
 

@@ -389,7 +389,9 @@ def test_pagerank_conserves_mass(spark, raw, iters):
     )
 
     edges = sorted({(min(a, b), max(a, b)) for a, b in raw})
-    df = spark.createDataFrame(edges, "u long, v long")
+    df = spark.createDataFrame(
+        [(u, v, 1) for u, v in edges], "u long, v long, w long"
+    )
     ranks = [r.rank for r in pagerank(df, iters=iters).collect()]
     assert abs(sum(ranks) - 1.0) < 1e-9
     assert all(r > 0 for r in ranks)
