@@ -107,6 +107,17 @@ def _shuffle_written_bytes(spark) -> int:
         return -1
 
 
+def slowest_probes(
+    min2: dict[str, float], memo_hit: dict[str, bool], k: int = 5
+) -> dict[str, float]:
+    """The ``k`` slowest probes for the headline. A probe served from the
+    memo times the memo read, not its own plan, so it never takes a slot.
+    (Detection is frame identity only: a probe that derives a new frame
+    from a memo entry is not flagged.)"""
+    timed = [(n, t) for n, t in min2.items() if not memo_hit.get(n)]
+    return dict(sorted(timed, key=lambda kv: kv[1], reverse=True)[:k])
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -311,9 +322,7 @@ def main() -> None:
                    "tpch_suite_sec": tpch_suite_sec}, fh,
                   indent=1, sort_keys=True)
 
-    headline = dict(
-        sorted(min2.items(), key=lambda kv: kv[1], reverse=True)[:5]
-    )
+    headline = slowest_probes(min2, memo_hit)
     headline.setdefault(
         "q1_star_revenue_by_nation",
         min2.get("q1_star_revenue_by_nation", -1.0),

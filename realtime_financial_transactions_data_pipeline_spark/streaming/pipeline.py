@@ -27,9 +27,9 @@ Spark mapping, operator by operator:
 - T2: append-mode micro-batches, no watermark — the reference pipeline
   is stateless (T4); event time rides in ``transaction_datetime`` while
   error rows are stamped with processing time (T3, pipeline.py:83).
-- J3: the optional ``lookup_dir`` is re-read *inside* foreachBatch each
-  micro-batch — the refreshed stream-static lookup
-  (generate_fact_transactions_data.py:17,89-93). Never cache it.
+- J3: the optional ``lookup_dir``'s rows are re-read *inside* foreachBatch
+  every micro-batch (generate_fact_transactions_data.py:17,89-93); its
+  schema is inferred once per query, so a schema change lands on restart.
 - K3: :func:`run_passthrough_stream` — the schema-enforced direct
   stream→table subscription (dim_customer_topic_sub.sh:15-18).
 
@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from realtime_financial_transactions_data_pipeline_spark import schemas as sch
-from realtime_financial_transactions_data_pipeline_spark.functions.fpe import fpe_token_col
+from realtime_financial_transactions_data_pipeline_spark.functions import fpe
 from realtime_financial_transactions_data_pipeline_spark.functions.scalar import (
     card_bin,
     mask_pan,
@@ -110,17 +110,34 @@ def parse_stream(raw: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-def _token_col(pan, key: bytes | None, tokenizer: str):
-    if tokenizer == "pyffx":
-        from realtime_financial_transactions_data_pipeline_spark.functions.fpe import (
-            _load_key,
-            make_pyffx_tokenizer,
-        )
-
-        return make_pyffx_tokenizer(key if key is not None else _load_key())(pan)
-    if tokenizer != "blake2b":
+def _route_columns(key: bytes | None, tokenizer: str) -> tuple:
+    """``((valid_pred, valid_cols), (error_pred, error_cols))`` for any parsed
+    frame: a query builds it once, so its micro-batches share one tokenizer
+    UDF. ``current_timestamp()`` in a reused Column is evaluated per action."""
+    pan = F.col("card_number")
+    has_pan, ok = pan.isNotNull(), pan_is_valid(pan)
+    if tokenizer not in ("blake2b", "pyffx"):
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
-    return fpe_token_col(pan, key=key)
+    token = (fpe.fpe_token_col(pan, key=key) if tokenizer == "blake2b"
+             else fpe.make_pyffx_tokenizer(key if key is not None else fpe._load_key())(pan))
+    card = {"masked_card_number": mask_pan(pan), "card_token": token, "card_bin": card_bin(pan)}
+    longs = {"merchant_id", "merchant_category_code_id", "payment_gateway_id", "device_type_id"}
+    valid_cols = [  # P1 fixed projection; P2: card_number/_raw never reach a sink
+        F.when(has_pan, card[c]).alias(c) if c in card
+        else F.col(c).cast("long").alias(c) if c in longs else F.col(c)
+        for c in OUTPUT_COLUMNS
+    ]
+    error_cols = [  # timestamp = processing time, pipeline.py:83 (F8/T3)
+        F.col("transaction_id"),
+        F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("timestamp"),
+        F.col("_raw").alias("raw_message"),
+        F.lit("invalid card number length").alias("error"),
+    ]
+    return (~has_pan | ok, valid_cols), (has_pan & ~ok, error_cols)
+
+
+def _apply_routes(parsed: DataFrame, routes: tuple) -> tuple[DataFrame, DataFrame]:
+    return tuple(parsed.filter(pred).select(*cols) for pred, cols in routes)
 
 
 def route_and_tokenize(
@@ -141,31 +158,7 @@ def route_and_tokenize(
     reference can keep every existing token join bit-for-bit — at the
     cost of HMAC-SHA1 rounds per distinct PAN. Both are deterministic
     per key, so either choice preserves token-join semantics."""
-    has_pan = F.col("card_number").isNotNull()
-    ok = pan_is_valid(F.col("card_number"))
-
-    errors = parsed.filter(has_pan & ~ok).select(
-        F.col("transaction_id"),
-        F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(
-            "timestamp"
-        ),  # processing time, pipeline.py:83 (F8/T3)
-        F.col("_raw").alias("raw_message"),
-        F.lit("invalid card number length").alias("error"),
-    )
-
-    tokenized = (
-        parsed.filter(~has_pan | ok)
-        .withColumn("masked_card_number", F.when(has_pan, mask_pan(F.col("card_number"))))
-        .withColumn("card_token", F.when(has_pan, _token_col(F.col("card_number"), key, tokenizer)))
-        .withColumn("card_bin", F.when(has_pan, card_bin(F.col("card_number"))))
-        .drop("card_number", "_raw")  # P2: PII never reaches a sink
-        .withColumn("merchant_id", F.col("merchant_id").cast("long"))
-        .withColumn("merchant_category_code_id", F.col("merchant_category_code_id").cast("long"))
-        .withColumn("payment_gateway_id", F.col("payment_gateway_id").cast("long"))
-        .withColumn("device_type_id", F.col("device_type_id").cast("long"))
-    )
-    valid = tokenized.select(*OUTPUT_COLUMNS)  # P1 fixed projection
-    return valid, errors
+    return _apply_routes(parsed, _route_columns(key, tokenizer))
 
 
 def kafka_reader_options(
@@ -280,10 +273,8 @@ def build_pipeline_query(
     # buffers merge by SUM, so the batch's reported row — and even the
     # source's numInputRows — is inflated by the action count).
     # ``_sum_observed`` divides the topology constant back out.
-    # (The alternative, persisting the micro-batch so the plan runs
-    # once, measured ~30 % SLOWER end-to-end: caching 4-wire-copy
-    # batches costs more than re-running the codegen'd JSON parse.
-    # Observation re-fire is cheaper than materialization.)
+    # (Persisting the parsed micro-batch so the plan runs once is slower:
+    # addBatch 921 vs 846 ms for a 48k-message batch, min of 8, local[4].)
     parsed = parsed.observe(
         "quality",
         F.count(F.lit(1)).alias("n_messages"),
@@ -297,14 +288,23 @@ def build_pipeline_query(
         F.count(F.when(F.col("card_number").isNull(), 1)).alias("n_null_pan"),
     )
 
+    # Built once per query, applied to each batch (an opaque LogicalRDD:
+    # in the stream plan the UDF would run once per sink action).
+    routes = _route_columns(key, "blake2b")
+    lookup_schema: T.StructType | None = None
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal lookup_schema
         # Exactly SINK_ACTIONS_PER_BATCH actions below — keep the
         # constant in lockstep with the write count.
-        valid, errors = route_and_tokenize(batch_df, key=key)
+        valid, errors = _apply_routes(batch_df, routes)
         if lookup_dir is not None:
-            # J3 — refreshed lookup: re-read the static side every
-            # micro-batch so dimension updates land without restart.
-            lookup = batch_df.sparkSession.read.parquet(lookup_dir)
+            # J3 — refreshed lookup: rows re-read every micro-batch, so
+            # dimension updates land without restart; schema once per query.
+            read = batch_df.sparkSession.read
+            if lookup_schema is None:
+                lookup_schema = read.parquet(lookup_dir).schema
+            lookup = read.schema(lookup_schema).parquet(lookup_dir)
             valid = valid.join(F.broadcast(lookup), "customer_id", "left")
         # K1+K2, T1: idempotent dual-append — each epoch owns its
         # batch_id=N directory; a replay overwrites, never duplicates.
@@ -610,11 +610,11 @@ def t1_t6_streaming_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j3_stream_lookup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Refreshed stream-static lookup (J3): foreachBatch re-reads the
-    dimension from disk each micro-batch and broadcast-joins it onto the
-    valid branch. Verified by grouping the enriched sink on the joined
-    attribute. A 1000-customer slice exercises the refresh mechanics
-    identically at a fraction of t1_t6's message volume (the oracle
-    filters on the same bound)."""
+    dimension's rows each micro-batch (its schema once per query, so a
+    schema change lands on restart) and broadcast-joins them onto the
+    valid branch; verified by grouping the enriched sink on the joined
+    attribute. A 1000-customer slice keeps the message volume a fraction
+    of t1_t6's (the oracle filters on the same bound)."""
     from realtime_financial_transactions_data_pipeline_spark.caching import (
         disk_fixture,
         source_fingerprint,

@@ -12,6 +12,16 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def test_headline_skips_memo_hit_probes():
+    """A probe served from the memo never takes a top-5 headline slot."""
+    import bench as bench_mod
+
+    min2 = {"a": 9.0, "b": 7.0, "c": 5.0, "d": 3.0, "e": 2.0, "f": 1.0, "g": 0.5}
+    assert bench_mod.slowest_probes(min2, {"a": True, "c": True, "d": False}) == {
+        "b": 7.0, "d": 3.0, "e": 2.0, "f": 1.0, "g": 0.5}
+    assert list(bench_mod.slowest_probes(min2, {}, k=2)) == ["a", "b"]
+
+
 def test_bench_emits_one_json_line_with_timings():
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
                SPARK_GRAFT_CPUS="4")

@@ -111,6 +111,88 @@ def test_j3_lookup_refreshes_between_batches(spark, fresh_root):
     assert rows["b"] == "SEG_NEW"
 
 
+def test_j3_lookup_refreshes_within_one_running_query(spark, fresh_root):
+    """The lookup rows are re-read every micro-batch of ONE running query
+    (only the schema is resolved once per query): a dimension overwrite
+    between two batches reaches the second batch without a restart."""
+    lookup_dir, input_dir, out = (f"{fresh_root}/{d}" for d in ("dim", "in", "out"))
+    spark.createDataFrame([(1, "SEG_OLD")], ["customer_id", "segment"]).write.parquet(lookup_dir)
+    spark.createDataFrame([(_msg("a", None),)], ["value"]).coalesce(1).write.text(input_dir)
+    q = sp.build_pipeline_query(
+        spark,
+        input_dir,
+        f"{out}/valid",
+        f"{out}/errors",
+        checkpoint_dir=f"{out}/_cp",
+        lookup_dir=lookup_dir,
+        key=TEST_KEY,
+        available_now=False,
+    ).start()
+    try:
+        q.processAllAvailable()
+        spark.createDataFrame([(1, "SEG_NEW")], ["customer_id", "segment"]).write.mode(
+            "overwrite"
+        ).parquet(lookup_dir)
+        spark.createDataFrame([(_msg("b", None),)], ["value"]).coalesce(1).write.mode(
+            "append"
+        ).text(input_dir)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    rows = {r.transaction_id: r.segment for r in spark.read.parquet(f"{out}/valid").collect()}
+    assert rows == {"a": "SEG_OLD", "b": "SEG_NEW"}
+
+
+@pytest.mark.parametrize("tokenizer", ["blake2b", "pyffx"])
+def test_one_route_column_set_serves_many_frames(spark, tokenizer):
+    """One built route/tokenize Column set, applied to two different
+    message frames, gives what route_and_tokenize gives on each frame
+    alone; tokens match the pure-Python ciphers, and each error row is
+    stamped no earlier than the start of its own action."""
+    import datetime as dt
+    import time
+    from zoneinfo import ZoneInfo
+
+    from realtime_financial_transactions_data_pipeline_spark.functions.fpe import (
+        encrypt_digits,
+        pyffx_compat_token,
+    )
+
+    def expected_token(pan: str) -> str:
+        if tokenizer == "pyffx":
+            return pyffx_compat_token(TEST_KEY, pan)
+        return str(int(encrypt_digits(TEST_KEY, pan))).zfill(16)
+
+    tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    frames = [
+        [_msg("a1", "4000123412341234"), _msg("a2", None), _msg("a3", "4111")],
+        [_msg("b1", "5500000000000004"), _msg("b2", "4000123412341234"),
+         _msg("b3", "12345678901234567890")],
+    ]
+    routes = sp._route_columns(TEST_KEY, tokenizer)
+    for msgs in frames:
+        parsed = sp.parse_stream(spark.createDataFrame([(m,) for m in msgs], "value STRING"))
+        valid, errors = sp._apply_routes(parsed, routes)
+        alone_valid, alone_errors = sp.route_and_tokenize(parsed, key=TEST_KEY, tokenizer=tokenizer)
+        assert valid.columns == alone_valid.columns == sp.OUTPUT_COLUMNS
+        assert valid.schema == alone_valid.schema
+        assert valid.exceptAll(alone_valid).count() == alone_valid.exceptAll(valid).count() == 0
+        stable = errors.drop("timestamp")
+        assert stable.exceptAll(alone_errors.drop("timestamp")).count() == 0
+        assert stable.count() == alone_errors.count() == 1
+
+        pans = {r.transaction_id: r.card_number for r in parsed.collect()}
+        for r in valid.collect():
+            pan = pans[r.transaction_id]
+            assert r.card_token == (expected_token(pan) if pan else None), r.transaction_id
+
+        started_us = int(time.time() * 1e6)
+        for r in errors.collect():
+            stamp = dt.datetime.strptime(r.timestamp, "%Y-%m-%dT%H:%M:%S.%f").replace(tzinfo=tz)
+            assert (stamp - epoch) // dt.timedelta(microseconds=1) >= started_us, r.timestamp
+
+
 def test_passthrough_stream_schema_enforced(spark, fresh_root):
     from pyspark.sql import types as T
 
@@ -182,6 +264,54 @@ def test_max_files_per_trigger_paces_micro_batches(spark, fresh_root):
     assert len(batches) == n_files >= 2
     total = spark.read.parquet(f"{out}/valid").count()
     assert total == 3
+
+
+@pytest.mark.parametrize("with_lookup", [True, False])
+def test_micro_batch_plan_is_built_once_per_query(spark, tmp_path, monkeypatch, with_lookup):
+    """A 3-file, one-file-per-trigger stream builds its tokenizer UDF once
+    and runs, per data batch, only its sink jobs — two writes, plus the
+    lookup's broadcast when J3 is on. The lookup schema is inferred once
+    per query: one extra job in total, not one per batch. Jobs are read
+    from the status store under the query's runId job group."""
+    import glob
+
+    from realtime_financial_transactions_data_pipeline_spark.functions import fpe
+
+    made: list[int] = []
+    real = fpe.make_fpe_tokenizer
+
+    def counting(*args, **kwargs):
+        made.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(fpe, "make_fpe_tokenizer", counting)
+    input_dir, out = f"{tmp_path}/in", f"{tmp_path}/out"
+    for i in range(3):
+        spark.createDataFrame([(_msg(f"t{i}", "4000000000000000"),)], "value STRING").coalesce(
+            1
+        ).write.mode("append" if i else "overwrite").text(input_dir)
+    lookup_dir = None
+    if with_lookup:
+        lookup_dir = f"{tmp_path}/dim"
+        spark.createDataFrame([(1, "SEG")], ["customer_id", "segment"]).write.parquet(lookup_dir)
+    q = sp.build_pipeline_query(
+        spark,
+        input_dir,
+        f"{out}/valid",
+        f"{out}/errors",
+        checkpoint_dir=f"{out}/_cp",
+        lookup_dir=lookup_dir,
+        key=TEST_KEY,
+        max_files_per_trigger=1,
+    ).start()
+    sp.await_or_raise(q, 120)
+    batches = len(glob.glob(f"{out}/valid/batch_id=*"))
+    assert batches == 3
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store sees every job end
+    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert jobs == (3 * batches + 1 if with_lookup else 2 * batches)
+    assert made == [1]
 
 
 def test_rocksdb_state_store_conf_lands():
