@@ -1442,8 +1442,10 @@ def x1e_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     final set. At scale the digest snapshot is the only state — 16
     bytes per accepted doc, broadcast or digest-shuffled; payloads
     stream straight to the accepted sink."""
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.run import probe_scratch
+    from realtime_financial_transactions_data_pipeline_spark.registry import (
+        pin_result,
+        probe_scratch,
+    )
 
     corpus = x1e_corpus_fixture(spark, sf_dir)
     with probe_scratch() as root:
@@ -1996,11 +1998,11 @@ def x2n_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_fingerprint,
         spark_json_slices,
     )
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-    from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+    from realtime_financial_transactions_data_pipeline_spark.registry import (
+        pin_result,
         probe_scratch,
-        run_available_now,
     )
+    from realtime_financial_transactions_data_pipeline_spark.streaming.run import run_available_now
 
     # The even-doc_id half of the corpus, batched round-robin by
     # doc_id/2 — the j3 sizing pattern: the ingest mechanics (index

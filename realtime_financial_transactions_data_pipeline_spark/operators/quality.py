@@ -27,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realtime_financial_transactions_data_pipeline_spark.registry import probe
+from realtime_financial_transactions_data_pipeline_spark.registry import (
+    pin_result,
+    probe,
+    probe_scratch,
+)
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 
@@ -436,18 +440,13 @@ def dq4_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     row accounting (how many merged rows carry the added column vs
     null) is data-derived. Generalizes to any two generation dirs via
     :func:`schema_drift_report`."""
-    import shutil
+    from realtime_financial_transactions_data_pipeline_spark.sources.batch import (
+        write_nation_generations,
+    )
 
-    base = load_table(spark, sf_dir, "nation")
-    root = "/tmp/spark_graft_quality/nation_drift"
-    shutil.rmtree(root, ignore_errors=True)
-    base.filter(F.col("n_nationkey") % 2 == 0).select(
-        "n_nationkey", "n_name"
-    ).write.parquet(f"{root}/gen=0")
-    base.filter(F.col("n_nationkey") % 2 == 1).select(
-        "n_nationkey", "n_name", "n_regionkey"
-    ).write.parquet(f"{root}/gen=1")
-    return schema_drift_report(spark, f"{root}/gen=0", f"{root}/gen=1")
+    with probe_scratch() as root:
+        write_nation_generations(spark, sf_dir, root)
+        return pin_result(schema_drift_report(spark, f"{root}/gen=0", f"{root}/gen=1"))
 
 
 # ---------------------------------------------------------------------------

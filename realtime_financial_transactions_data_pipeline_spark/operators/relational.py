@@ -3643,12 +3643,21 @@ def mv4_declarative_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime_financial_transactions_data_pipeline_spark.plans.declarative import (
         run_pipeline,
     )
+    from realtime_financial_transactions_data_pipeline_spark.registry import (
+        pin_result,
+        probe_scratch,
+    )
+    from realtime_financial_transactions_data_pipeline_spark.session import child_session
+
+    # The pipeline's temp views live on a child session, so none of them
+    # outlives the call's scratch root in the caller's session catalog.
+    child = child_session(spark, {})
 
     def define() -> None:
         @dp.materialized_view(name="gold_daily_panel")
         def gold():
             return (
-                spark.table("silver_events")
+                child.table("silver_events")
                 .groupBy(
                     F.date_format("day", "yyyy-MM-dd").alias("day"),
                     "event_type",
@@ -3662,7 +3671,7 @@ def mv4_declarative_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         @dp.materialized_view(name="silver_events")
         def silver():
             return (
-                spark.table("bronze_events")
+                child.table("bronze_events")
                 .filter((F.col("event_type") != "error") & (F.col("value") >= 0))
                 .select(
                     F.col("ts").cast("date").alias("day"),
@@ -3675,17 +3684,12 @@ def mv4_declarative_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         @dp.materialized_view(name="bronze_events")
         def bronze():
-            return load_table(spark, sf_dir, "events").filter(
+            return load_table(child, sf_dir, "events").filter(
                 F.col("user_id") % 10 == 5
             )
 
-    done = run_pipeline(spark, define, "/tmp/spark_graft_probes/mv4")
-    # pin: the gold frame reads probe-managed scratch that a second
-    # invocation overwrites (the driver's schema-pass/value-pass
-    # double call) — materialize before returning.
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    return pin_result(done["gold_daily_panel"])
+    with probe_scratch() as root:
+        return pin_result(run_pipeline(child, define, root)["gold_daily_panel"])
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
-from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
+from realtime_financial_transactions_data_pipeline_spark.registry import (
+    pin_result,
+    probe,
+    probe_scratch,
+)
+from realtime_financial_transactions_data_pipeline_spark.session import child_session
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 #: Bucket count for co-located fact/dim joins. Matched on both sides of
@@ -255,23 +260,21 @@ def l1b_partition_pruned_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan. Results match querying the unpartitioned table; the plan
     differs — the BETWEEN becomes a PartitionFilter instead of a row
     predicate."""
-    import tempfile
-
-    path = f"{tempfile.gettempdir()}/spark_graft_scale/events_by_date"
     e = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.date_format(F.to_date("ts"), "yyyy-MM-dd")
     )
-    write_date_partitioned(e, path)
-    sliced = read_pruned(spark, path, "2024-01-10", "2024-01-19")
-    # Partition-column type inference reads the hive value back as DATE;
-    # cast after the (already-pruned) scan to match the oracle's string.
-    sliced = sliced.withColumn("event_date", F.col("event_date").cast("string"))
-    return pin_result(
-        sliced.groupBy("event_date").agg(
-            F.count(F.lit(1)).alias("volume"),
-            dround(F.sum("value"), 2).alias("revenue"),
+    with probe_scratch() as root:
+        write_date_partitioned(e, root)
+        sliced = read_pruned(spark, root, "2024-01-10", "2024-01-19")
+        # Partition-column type inference reads the hive value back as DATE;
+        # cast after the (already-pruned) scan to match the oracle's string.
+        sliced = sliced.withColumn("event_date", F.col("event_date").cast("string"))
+        return pin_result(
+            sliced.groupBy("event_date").agg(
+                F.count(F.lit(1)).alias("volume"),
+                dround(F.sum("value"), 2).alias("revenue"),
+            )
         )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -463,29 +466,25 @@ def scale_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``read_generation`` — the VERSION-AS-OF read. The oracle recomputes
     each version's aggregate from the source table, certifying old
     snapshots stay intact and exact after the pointer moved on."""
-    import tempfile
-
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    root = f"{tempfile.gettempdir()}/spark_graft_scale/customer_tt"
     base = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    init_pointer_table(base, root)
     v1 = base.filter(F.col("c_custkey") % 7 != 3).withColumn(
         "c_acctbal",
         F.when(
             F.col("c_custkey") % 5 == 0, F.col("c_acctbal") + 100
         ).otherwise(F.col("c_acctbal")),
     )
-    publish_generation(v1, root)
 
-    def snap(gen: int) -> DataFrame:
+    def snap(root: str, gen: int) -> DataFrame:
         return read_generation(spark, root, gen).agg(
             F.lit(gen).alias("gen"),
             F.count(F.lit(1)).alias("n_rows"),
             dround(F.sum("c_acctbal"), 2).alias("total_bal"),
         ).select("gen", "n_rows", "total_bal")
 
-    return pin_result(snap(0).unionByName(snap(1)))
+    with probe_scratch() as root:
+        init_pointer_table(base, root)
+        publish_generation(v1, root)
+        return pin_result(snap(root, 0).unionByName(snap(root, 1)))
 
 
 def write_zordered(
@@ -597,7 +596,6 @@ def k11_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     both audit outcomes, so a silently-published bad batch, a wrongly
     rejected good batch, or a pointer left mid-flip each break the
     hash against the oracle's day-1+day-2 recount."""
-    root = "/tmp/spark_graft_scale/k11"
     e = load_table(spark, sf_dir, "events")
     day1 = e.filter(F.to_date("ts") == "2024-01-01")
     day2 = e.filter(F.to_date("ts") == "2024-01-02")
@@ -608,22 +606,21 @@ def k11_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_not_null": F.col("user_id").isNotNull(),
         }
 
-    init_pointer_table(day1, root)
     bad = day2.withColumn(
         "value",
         F.when(F.col("event_id") % 7 == 0, F.lit(None)).otherwise(F.col("value")),
     )
-    a_pub, _ = write_audit_publish(spark, bad, root, rules)
-    b_pub, _ = write_audit_publish(spark, day2, root, rules)
-    live = spark.read.parquet(current_table_path(root))
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    return pin_result(
-        live.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("attempt_a_published", F.lit(a_pub))
-        .withColumn("attempt_b_published", F.lit(b_pub))
-    )
+    with probe_scratch() as root:
+        init_pointer_table(day1, root)
+        a_pub, _ = write_audit_publish(spark, bad, root, rules)
+        b_pub, _ = write_audit_publish(spark, day2, root, rules)
+        live = spark.read.parquet(current_table_path(root))
+        return pin_result(
+            live.groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .withColumn("attempt_a_published", F.lit(a_pub))
+            .withColumn("attempt_b_published", F.lit(b_pub))
+        )
 
 
 def staged_topk(
@@ -869,14 +866,9 @@ def scale_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def k12_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k12 — dynamic partition overwrite end-to-end (block comment
     above): initial 5-day partitioned write, then an overwrite-mode
-    write of the revised days 2-3 under partitionOverwriteMode=dynamic,
-    then a live read-back rolled up per (day, event_type). The session
-    conf is restored afterward — the mode only applies to the revision
-    write."""
-    import shutil
-
-    root = "/tmp/spark_graft_scale/k12"
-    shutil.rmtree(root, ignore_errors=True)
+    write of the revised days 2-3 under partitionOverwriteMode=dynamic
+    (a writer option: the session conf is never touched), then a live
+    read-back rolled up per (day, event_type)."""
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("ts") < "2024-01-06")
@@ -884,7 +876,6 @@ def k12_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
             F.to_date("ts").alias("day"), "event_type", "value", "event_id"
         )
     )
-    e.write.partitionBy("day").mode("overwrite").parquet(root)
     rev = (
         e.filter(
             (F.col("day") >= "2024-01-02")
@@ -893,23 +884,20 @@ def k12_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .withColumn("value", F.col("value") * 2)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        rev.write.partitionBy("day").mode("overwrite").parquet(root)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    live = spark.read.parquet(root)
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    return pin_result(
-        live.groupBy(
-            F.date_format("day", "yyyy-MM-dd").alias("day"), "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            dround(F.sum("value"), 2).alias("revenue"),
+    with probe_scratch() as root:
+        e.write.partitionBy("day").mode("overwrite").parquet(root)
+        rev.write.partitionBy("day").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(root)
+        live = spark.read.parquet(root)
+        return pin_result(
+            live.groupBy(
+                F.date_format("day", "yyyy-MM-dd").alias("day"), "event_type"
+            ).agg(
+                F.count(F.lit(1)).alias("n"),
+                dround(F.sum("value"), 2).alias("revenue"),
+            )
         )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1221,50 +1209,44 @@ def scale_bucketed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scale_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """scale_vacuum — vacuum past the retention window and certify all
     three contract halves (block comment above)."""
-    import shutil
-    import tempfile
-
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    root = f"{tempfile.gettempdir()}/spark_graft_scale/customer_vac"
-    shutil.rmtree(root, ignore_errors=True)
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.round(F.col("c_acctbal") * 100, 0).cast("long").alias("bal_cents"),
     )
-    init_pointer_table(base, root)                                   # gen 0
-    publish_generation(base.filter(F.col("c_custkey") % 3 != 0), root)  # 1
-    publish_generation(                                               # 2
-        base.filter(
-            (F.col("c_custkey") % 3 != 0) & (F.col("c_custkey") % 4 != 1)
-        ),
-        root,
-    )
-    swept = vacuum_generations(root, keep_last=2)
-    try:
-        read_generation(spark, root, 0).count()
-        expired_gone = False  # a readable swept generation is a bug
-    except FileNotFoundError:
-        expired_gone = True
-
-    def snap(gen: int) -> DataFrame:
-        return (
-            read_generation(spark, root, gen)
-            .agg(
-                F.lit(gen).alias("gen"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("bal_cents").alias("bal_cents"),
-            )
-            .select(
-                "gen",
-                "n_rows",
-                "bal_cents",
-                F.lit(len(swept)).cast("long").alias("n_swept"),
-                F.lit(expired_gone).alias("expired_unreadable"),
-            )
+    with probe_scratch() as root:
+        init_pointer_table(base, root)                                   # gen 0
+        publish_generation(base.filter(F.col("c_custkey") % 3 != 0), root)  # 1
+        publish_generation(                                               # 2
+            base.filter(
+                (F.col("c_custkey") % 3 != 0) & (F.col("c_custkey") % 4 != 1)
+            ),
+            root,
         )
+        swept = vacuum_generations(root, keep_last=2)
+        try:
+            read_generation(spark, root, 0).count()
+            expired_gone = False  # a readable swept generation is a bug
+        except FileNotFoundError:
+            expired_gone = True
 
-    return pin_result(snap(1).unionByName(snap(2)))
+        def snap(gen: int) -> DataFrame:
+            return (
+                read_generation(spark, root, gen)
+                .agg(
+                    F.lit(gen).alias("gen"),
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("bal_cents").alias("bal_cents"),
+                )
+                .select(
+                    "gen",
+                    "n_rows",
+                    "bal_cents",
+                    F.lit(len(swept)).cast("long").alias("n_swept"),
+                    F.lit(expired_gone).alias("expired_unreadable"),
+                )
+            )
+
+        return pin_result(snap(1).unionByName(snap(2)))
 
 
 # ---------------------------------------------------------------------------
@@ -1511,9 +1493,9 @@ _SKEWJOIN_CONFS = {
 
 def skewjoin_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lazy fee panel under the skew-split preconditions (block
-    comment above) — factored out so the plan test can execute it
-    under `_SKEWJOIN_CONFS` and pin SortMergeJoin(skew=true) in the
-    final adaptive plan."""
+    comment above) — factored out so the plan test can execute it on
+    a child session carrying `_SKEWJOIN_CONFS` and pin
+    SortMergeJoin(skew=true) in the final adaptive plan."""
     li = load_table(spark, sf_dir, "lineitem").select(
         F.when(F.col("l_orderkey") % 3 == 0, F.lit("hot_gateway"))
         .otherwise(
@@ -1573,22 +1555,11 @@ def skewjoin_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scale_aqe_skewjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AQE automatic skew-join splitting on the hot-gateway fixture
-    (block comment above): probe-local thresholds, execution inside
-    the conf scope (pin_result — the confs must be live when the join
-    runs, and the driver's deferred evaluation would otherwise see
-    restored defaults), result hash-checked against the plain join.
-    scale_salted_join demonstrates the MANUAL treatment of the same
-    skew; this is the adaptive one a cluster reaches for first."""
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    old = {k: spark.conf.get(k) for k in _SKEWJOIN_CONFS}
-    for k, v in _SKEWJOIN_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        return pin_result(skewjoin_panel(spark, sf_dir))
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+    (block comment above): probe-local thresholds on a child session,
+    result hash-checked against the plain join. scale_salted_join
+    demonstrates the MANUAL treatment of the same skew; this is the
+    adaptive one a cluster reaches for first."""
+    return skewjoin_panel(child_session(spark, _SKEWJOIN_CONFS), sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1876,34 +1847,12 @@ def scale_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@probe(
-    "k13_deletion_vectors",
-    oracle="""
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT)
-             AS value_mills,
-           CAST(sum(user_id) AS BIGINT) AS user_checksum
-    FROM events
-    WHERE NOT (event_type = 'error' OR user_id % 50 = 7)
-    GROUP BY event_type
-    """,
-)
-def k13_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K13 — positional deletion vectors on immutable base files
-    (block comment above): write the events slice as base parquet,
-    derive the DV sidecar (file_path, row_index) for the deterministic
-    delete law, then answer the panel by scanning the UNTOUCHED base
-    and anti-joining the broadcast sidecar on the position key. The
-    oracle is the logical complement — positional application must
-    equal the logical delete row-for-row (the user_checksum pins
-    membership)."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    root = "/tmp/spark_graft_probes/k13"
-    shutil.rmtree(root, ignore_errors=True)
+def deletion_vector_panel(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """The k13 panel, lazy over what it writes under ``root``: the
+    events slice as base parquet (``base/``) and the DV sidecar
+    (``dv/``) of (file_path, row_index) for the deterministic delete
+    law. The panel scans the UNTOUCHED base and anti-joins the
+    broadcast sidecar on the position key."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
@@ -1927,18 +1876,35 @@ def k13_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The DV reader: base scan + broadcast positional anti-join.
     dv = spark.read.parquet(f"{root}/dv")
-    alive = with_pos(spark.read.parquet(f"{root}/base")).join(
-        F.broadcast(dv), ["_f", "_pos"], "left_anti"
+    alive = base.join(F.broadcast(dv), ["_f", "_pos"], "left_anti")
+    return alive.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.round(F.col("value") * 1000, 0).cast("long")).alias("value_mills"),
+        F.sum("user_id").cast("long").alias("user_checksum"),
     )
-    return pin_result(
-        alive.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000, 0).cast("long")).alias(
-                "value_mills"
-            ),
-            F.sum("user_id").cast("long").alias("user_checksum"),
-        )
-    )
+
+
+@probe(
+    "k13_deletion_vectors",
+    oracle="""
+    SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT)
+             AS value_mills,
+           CAST(sum(user_id) AS BIGINT) AS user_checksum
+    FROM events
+    WHERE NOT (event_type = 'error' OR user_id % 50 = 7)
+    GROUP BY event_type
+    """,
+)
+def k13_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K13 — positional deletion vectors on immutable base files
+    (block comment above): :func:`deletion_vector_panel` in the
+    probe's own scratch root. The oracle is the logical complement —
+    positional application must equal the logical delete row-for-row
+    (the user_checksum pins membership)."""
+    with probe_scratch() as root:
+        return pin_result(deletion_vector_panel(spark, sf_dir, root))
 
 
 # ---------------------------------------------------------------------------
@@ -2007,12 +1973,7 @@ def scale_manifest_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     so reading too many (skipping broken) or too few (wrong answer
     anyway) both fail."""
     import datetime
-    import shutil
 
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    root = "/tmp/spark_graft_probes/manifest"
-    shutil.rmtree(root, ignore_errors=True)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
@@ -2023,58 +1984,60 @@ def scale_manifest_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked, n_total = two_phase_rank(
         li, ["l_shipdate", "l_orderkey", "l_linenumber"], "rk"
     )
-    (
-        ranked.withColumn(
-            "fid",
-            F.floor(
-                (F.col("rk") - 1) * _MANIFEST_FILES / F.lit(n_total)
-            ).cast("long"),
+    with probe_scratch() as root:
+        (
+            ranked.withColumn(
+                "fid",
+                F.floor(
+                    (F.col("rk") - 1) * _MANIFEST_FILES / F.lit(n_total)
+                ).cast("long"),
+            )
+            .drop("rk", "_pid")
+            .write.partitionBy("fid")
+            .parquet(f"{root}/data")
         )
-        .drop("rk", "_pid")
-        .write.partitionBy("fid")
-        .parquet(f"{root}/data")
-    )
-    # The manifest: one row per scan unit with the PRUNING column's
-    # bounds — bounded by unit count. fid is the unit id, l_shipdate
-    # bounds are the stats; the predicate is on the stats column only.
-    manifest = (
-        spark.read.parquet(f"{root}/data")
-        .groupBy("fid")
-        .agg(F.min("l_shipdate").alias("lo"), F.max("l_shipdate").alias("hi"))
-    )
-    rows = manifest.collect()  # bounded: one row per scan unit
-    lo_d = datetime.date.fromisoformat(_MANIFEST_LO)
-    hi_d = datetime.date.fromisoformat(_MANIFEST_HI)
-    survivors = [r.fid for r in rows if not (r.hi < lo_d or r.lo > hi_d)]
-    hit = (
-        spark.read.parquet(*[f"{root}/data/fid={f}" for f in survivors])
-        .filter(
-            F.col("l_shipdate").between(
-                F.lit(_MANIFEST_LO).cast("date"),
-                F.lit(_MANIFEST_HI).cast("date"),
+        # The manifest: one row per scan unit with the PRUNING column's
+        # bounds — bounded by unit count. fid is the unit id, l_shipdate
+        # bounds are the stats; the predicate is on the stats column only.
+        manifest = (
+            spark.read.parquet(f"{root}/data")
+            .groupBy("fid")
+            .agg(F.min("l_shipdate").alias("lo"), F.max("l_shipdate").alias("hi"))
+        )
+        rows = manifest.collect()  # bounded: one row per scan unit
+        lo_d = datetime.date.fromisoformat(_MANIFEST_LO)
+        hi_d = datetime.date.fromisoformat(_MANIFEST_HI)
+        survivors = [r.fid for r in rows if not (r.hi < lo_d or r.lo > hi_d)]
+        hit = (
+            spark.read.parquet(*[f"{root}/data/fid={f}" for f in survivors])
+            .filter(
+                F.col("l_shipdate").between(
+                    F.lit(_MANIFEST_LO).cast("date"),
+                    F.lit(_MANIFEST_HI).cast("date"),
+                )
+            )
+            .select(
+                F.round(
+                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
+                )
+                .cast("long")
+                .alias("cents")
             )
         )
-        .select(
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
+        return pin_result(
+            hit.agg(
+                F.count(F.lit(1)).alias("n_items"),
+                F.sum("cents").alias("revenue_cents"),
+                F.lit(len(rows)).cast("long").alias("files_total"),
+                F.lit(len(survivors)).cast("long").alias("files_read"),
             )
-            .cast("long")
-            .alias("cents")
         )
-    )
-    return pin_result(
-        hit.agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum("cents").alias("revenue_cents"),
-            F.lit(len(rows)).cast("long").alias("files_total"),
-            F.lit(len(survivors)).cast("long").alias("files_read"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
 # scale_balanced_write — bounded output FILES for skewed partitioned
-# writes via `spark.sql.files.maxRecordsPerFile`: partitionBy(key)
+# writes via the `maxRecordsPerFile` writer option (the per-write form
+# of `spark.sql.files.maxRecordsPerFile`): partitionBy(key)
 # sends each key's rows to one directory, but a hot key writes ONE
 # giant file per task — the large-file twin of the small-files
 # problem, and the knob every production pipeline sets (file size
@@ -2117,13 +2080,7 @@ def scale_balanced_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the produced files plus the observed per-directory file
     count, which the oracle predicts exactly."""
     import glob
-    import os
-    import shutil
 
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    root = "/tmp/spark_graft_probes/balanced_write"
-    shutil.rmtree(root, ignore_errors=True)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.when(F.col("l_orderkey") % 3 == 0, F.lit("hot_gateway"))
         .otherwise(
@@ -2132,34 +2089,30 @@ def scale_balanced_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("gateway"),
         F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("cents"),
     )
-    prev = spark.conf.get("spark.sql.files.maxRecordsPerFile")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", str(_BW_MAX_RECORDS))
-    try:
-        li.repartition("gateway").write.partitionBy("gateway").parquet(
-            f"{root}/data"
+    with probe_scratch() as root:
+        li.repartition("gateway").write.partitionBy("gateway").option(
+            "maxRecordsPerFile", _BW_MAX_RECORDS
+        ).parquet(f"{root}/data")
+        ledger = {
+            os.path.basename(d).split("=", 1)[1]: len(
+                glob.glob(os.path.join(d, "part-*"))
+            )
+            for d in glob.glob(f"{root}/data/gateway=*")
+        }
+        ledger_col = F.create_map(
+            *[F.lit(x) for kv in ledger.items() for x in kv]
         )
-    finally:
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
-    ledger = {
-        os.path.basename(d).split("=", 1)[1]: len(
-            glob.glob(os.path.join(d, "part-*"))
+        back = spark.read.parquet(f"{root}/data")
+        return pin_result(
+            back.groupBy("gateway")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum("cents").alias("revenue_cents"),
+            )
+            .withColumn(
+                "n_files", F.element_at(ledger_col, F.col("gateway")).cast("long")
+            )
         )
-        for d in glob.glob(f"{root}/data/gateway=*")
-    }
-    ledger_col = F.create_map(
-        *[F.lit(x) for kv in ledger.items() for x in kv]
-    )
-    back = spark.read.parquet(f"{root}/data")
-    return pin_result(
-        back.groupBy("gateway")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("cents").alias("revenue_cents"),
-        )
-        .withColumn(
-            "n_files", F.element_at(ledger_col, F.col("gateway")).cast("long")
-        )
-    )
 
 
 scale_balanced_write.__doc__ = scale_balanced_write.__doc__.replace(

@@ -2776,9 +2776,6 @@ def x34_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_similarity.py.
 # ---------------------------------------------------------------------------
 
-_X2X_ROOT = "/tmp/spark_graft_probes/x2x"
-
-
 def write_ivf_index(
     emb: DataFrame, cents: DataFrame, root: str, assigned: DataFrame | None = None
 ) -> None:
@@ -2857,17 +2854,18 @@ def x2x_persisted_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     set strictly from the RELOADED index (block comment above). The
     shared oracle is the reload-fidelity claim: byte-identical answers
     to the in-session IVF."""
-    import shutil
-
-    from realtime_financial_transactions_data_pipeline_spark.registry import pin_result
-
-    shutil.rmtree(_X2X_ROOT, ignore_errors=True)
-    emb = _emb_base(spark, sf_dir)
-    write_ivf_index(
-        emb,
-        ivf_centroids_memo(spark, sf_dir),
-        _X2X_ROOT,
-        assigned=ivf_assign_ranked_memo(spark, sf_dir).filter(F.col("rnk") <= 1),
+    from realtime_financial_transactions_data_pipeline_spark.registry import (
+        pin_result,
+        probe_scratch,
     )
+
+    emb = _emb_base(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20).drop("label")
-    return pin_result(ivf_query_reloaded(spark, _X2X_ROOT, queries))
+    with probe_scratch() as root:
+        write_ivf_index(
+            emb,
+            ivf_centroids_memo(spark, sf_dir),
+            root,
+            assigned=ivf_assign_ranked_memo(spark, sf_dir).filter(F.col("rnk") <= 1),
+        )
+        return pin_result(ivf_query_reloaded(spark, root, queries))

@@ -12,7 +12,10 @@ comparator sorts columns by name before value-hashing.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import contextlib
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -295,21 +298,31 @@ if len(_DRIVER_ORDER) != DRIVER_WINDOW or len(set(_DRIVER_ORDER)) != DRIVER_WIND
     )
 
 
-def pin_result(df: DataFrame) -> DataFrame:
-    """Materialize a probe result whose lineage reads probe-managed
-    scratch directories.
+@contextlib.contextmanager
+def probe_scratch() -> Iterator[str]:
+    """Yield a fresh directory of the call's own and remove it on exit.
+    Every probe that writes files (batch loads, table layouts, stream
+    sinks and checkpoints) writes under it, so two calls never share a
+    path and a re-invocation never wipes files under another call's
+    unread result. Probes :func:`pin_result` inside the ``with`` block."""
+    path = tempfile.mkdtemp(prefix="spark_graft_")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
-    Streaming probes write into a per-call ``streaming.run.probe_scratch()``
-    directory that is removed when the probe's ``with`` block exits, so
-    they call this INSIDE the block: a lazy result would re-read files
+
+def pin_result(df: DataFrame) -> DataFrame:
+    """Materialize a probe result whose lineage reads a
+    :func:`probe_scratch` directory.
+
+    The directory is removed when the probe's ``with`` block exits, so
+    probes call this INSIDE the block: a lazy result would re-read files
     that are gone by the time the caller evaluates it. Collecting pins
     the values while the files exist — every scratch-backed probe result
     is at most a few hundred rows by construction — and the rebuilt
     DataFrame is a local relation with no scratch lineage, immune to
-    later removals and to a re-invocation's writes. (Batch probes that
-    still rewrite a fixed scratch dir per call rely on the same pin: a
-    second call's wipe under a first call's unread result caused the
-    round-3 driver hash mismatch on t8.)
+    later removals and to a re-invocation's writes.
     """
     return df.sparkSession.createDataFrame(df.collect(), df.schema)
 

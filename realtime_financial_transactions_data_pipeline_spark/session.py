@@ -100,13 +100,14 @@ INHERITED_CONFS = (
 )
 
 
-def child_session(spark: SparkSession, shuffle_partitions: int) -> SparkSession:
+def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
     """A ``newSession()`` of ``spark`` with its own SQLConf: the parent's
-    :data:`INHERITED_CONFS` plus the given shuffle width. It shares the
-    SparkContext and table cache, so setting confs here never changes
-    what a query on the parent (or on another thread) sees."""
+    :data:`INHERITED_CONFS` plus ``confs``. It shares the SparkContext
+    and table cache, so setting confs here never changes what a query
+    on the parent (or on another thread) sees."""
     child = spark.newSession()
     for key in INHERITED_CONFS:
         child.conf.set(key, spark.conf.get(key))
-    child.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    for key, value in confs.items():
+        child.conf.set(key, value)
     return child

@@ -18,7 +18,11 @@ from pyspark.sql import types as T
 
 from realtime_financial_transactions_data_pipeline_spark import schemas as sch
 from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
-from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
+from realtime_financial_transactions_data_pipeline_spark.registry import (
+    pin_result,
+    probe,
+    probe_scratch,
+)
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 #: File-stem → declared schema, mirroring the reference's
@@ -77,11 +81,8 @@ def load_dimension(
 
 
 # ---------------------------------------------------------------------------
-# Probes. Scratch I/O goes under /tmp — deterministic content, overwrite
-# semantics, safe to re-run.
+# Probes
 # ---------------------------------------------------------------------------
-
-_SCRATCH = "/tmp/spark_graft_probes"
 
 _REGION_SCHEMA = T.StructType(
     [
@@ -110,13 +111,12 @@ def s5_k4_csv_overwrite_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a dump of `region` (quoted comments dropped to keep the fixture
     csv-trivial), so the round-trip must reproduce the table."""
     src = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    csv_dir = f"{_SCRATCH}/region_csv"
-    src.coalesce(1).write.mode("overwrite").option("header", True).csv(csv_dir)
     schema = T.StructType([f for f in _REGION_SCHEMA.fields if f.name != "r_comment"])
-    loaded = read_csv(spark, csv_dir, schema)
-    out = f"{_SCRATCH}/region_loaded"
-    overwrite_table(loaded, out)
-    return pin_result(spark.read.parquet(out))
+    with probe_scratch() as root:
+        csv_dir, out = f"{root}/region_csv", f"{root}/region_loaded"
+        src.coalesce(1).write.mode("overwrite").option("header", True).csv(csv_dir)
+        overwrite_table(read_csv(spark, csv_dir, schema), out)
+        return pin_result(spark.read.parquet(out))
 
 
 @probe(
@@ -126,10 +126,10 @@ def s5_k4_csv_overwrite_load(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s6_json_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines read with declared schema (S6) over a dump of `nation`."""
     src = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    json_dir = f"{_SCRATCH}/nation_json"
-    src.coalesce(1).write.mode("overwrite").json(json_dir)
     schema = T.StructType([f for f in _NATION_SCHEMA.fields if f.name != "n_comment"])
-    return pin_result(read_json(spark, json_dir, schema))
+    with probe_scratch() as root:
+        src.coalesce(1).write.mode("overwrite").json(f"{root}/nation_json")
+        return pin_result(read_json(spark, f"{root}/nation_json", schema))
 
 
 @probe(
@@ -151,9 +151,9 @@ def k5_create_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     StructType survives a write/read cycle (parquet preserves
     nullability of the declared schema's types, not its constraints —
     so nullability is taken from the DDL struct, the types from disk)."""
-    path = f"{_SCRATCH}/dim_account_empty"
-    create_table(spark, path, sch.DIM_ACCOUNT)
-    observed = spark.read.parquet(path).schema
+    with probe_scratch() as root:
+        create_table(spark, f"{root}/dim_account_empty", sch.DIM_ACCOUNT)
+        observed = spark.read.parquet(f"{root}/dim_account_empty").schema
     rows = [
         (i, f.name, observed[f.name].dataType.simpleString(), f.nullable)
         for i, f in enumerate(sch.DIM_ACCOUNT.fields)
@@ -234,6 +234,19 @@ def s8_schema_translation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, out_schema)
 
 
+def write_nation_generations(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """The two-generation `nation` layout s9 and dq4 read: ``gen=0``
+    holds the even keys written before ``n_regionkey`` existed,
+    ``gen=1`` the odd keys written after."""
+    base = load_table(spark, sf_dir, "nation")
+    base.filter(F.col("n_nationkey") % 2 == 0).select(
+        "n_nationkey", "n_name"
+    ).write.parquet(f"{root}/gen=0")
+    base.filter(F.col("n_nationkey") % 2 == 1).select(
+        "n_nationkey", "n_name", "n_regionkey"
+    ).write.parquet(f"{root}/gen=1")
+
+
 @probe(
     "s9_schema_evolution_merge",
     oracle="""
@@ -254,23 +267,14 @@ def s9_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer sampling is the cost — production tables pin the merged
     schema in a catalog instead of re-inferring; the read path is the
     same.)"""
-    base = load_table(spark, sf_dir, "nation")
-    root = f"{_SCRATCH}/nation_evolving"
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)
-    base.filter(F.col("n_nationkey") % 2 == 0).select(
-        "n_nationkey", "n_name"
-    ).write.parquet(f"{root}/gen=0")
-    base.filter(F.col("n_nationkey") % 2 == 1).select(
-        "n_nationkey", "n_name", "n_regionkey"
-    ).write.parquet(f"{root}/gen=1")
-    merged = (
-        spark.read.option("mergeSchema", True)
-        .parquet(root)
-        .select("n_nationkey", "n_name", "n_regionkey")
-    )
-    return pin_result(merged)
+    with probe_scratch() as root:
+        write_nation_generations(spark, sf_dir, root)
+        merged = (
+            spark.read.option("mergeSchema", True)
+            .parquet(root)
+            .select("n_nationkey", "n_name", "n_regionkey")
+        )
+        return pin_result(merged)
 
 
 @probe(
@@ -299,19 +303,20 @@ def s10_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") % 20 == 7)
         .select("user_id", "event_type", "value")
     )
-    orc_dir = f"{_SCRATCH}/events_orc"
-    src.write.mode("overwrite").partitionBy("event_type").orc(orc_dir)
-    back = spark.read.orc(orc_dir).filter(F.col("event_type") == "click")
-    return pin_result(
-        back.groupBy("user_id").agg(
-            F.count("*").alias("n_clicks"),
-            # dround, not a raw double sum: accumulation order differs
-            # between engines, so at larger SF an unrounded sum drifts
-            # past the canonicalizer's 6-decimal format (suite-wide
-            # convention — ADVICE r06).
-            dround(F.sum("value"), 2).alias("total_value"),
+    with probe_scratch() as root:
+        orc_dir = f"{root}/events_orc"
+        src.write.mode("overwrite").partitionBy("event_type").orc(orc_dir)
+        back = spark.read.orc(orc_dir).filter(F.col("event_type") == "click")
+        return pin_result(
+            back.groupBy("user_id").agg(
+                F.count("*").alias("n_clicks"),
+                # dround, not a raw double sum: accumulation order differs
+                # between engines, so at larger SF an unrounded sum drifts
+                # past the canonicalizer's 6-decimal format (suite-wide
+                # convention — ADVICE r06).
+                dround(F.sum("value"), 2).alias("total_value"),
+            )
         )
-    )
 
 
 # ---------------------------------------------------------------------------

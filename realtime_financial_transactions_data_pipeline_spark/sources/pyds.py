@@ -182,4 +182,13 @@ class _ReplayLogReader(DataSourceStreamReader):
 
 
 def register_replay_log(spark) -> None:
-    spark.dataSource.register(ReplayLogDataSource)
+    """Register ``replay_log`` on ``spark``. Spark also checks the name
+    against the thread's active session (so a child of a session that
+    holds it would fail): register with ``spark`` active, like ``withActive``."""
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(ReplayLogDataSource)
+    finally:
+        jsession.setActiveSession(prev.get() if prev.isDefined() else None)

@@ -24,11 +24,12 @@ from realtime_financial_transactions_data_pipeline_spark.caching import (
     spark_json_slices,
 )
 from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
-from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
-from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+from realtime_financial_transactions_data_pipeline_spark.registry import (
+    pin_result,
+    probe,
     probe_scratch,
-    run_available_now,
 )
+from realtime_financial_transactions_data_pipeline_spark.streaming.run import run_available_now
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 

@@ -43,11 +43,12 @@ from realtime_financial_transactions_data_pipeline_spark.operators.scale import 
     current_table_path,
     init_pointer_table,
 )
-from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
-from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
+from realtime_financial_transactions_data_pipeline_spark.registry import (
+    pin_result,
+    probe,
     probe_scratch,
-    run_available_now,
 )
+from realtime_financial_transactions_data_pipeline_spark.streaming.run import run_available_now
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
 #: CDC wire schema: seconds-truncated event time (the JSON wire's

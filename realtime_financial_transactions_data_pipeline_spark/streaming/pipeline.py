@@ -52,11 +52,15 @@ from realtime_financial_transactions_data_pipeline_spark.functions.scalar import
     mask_pan,
     pan_is_valid,
 )
-from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe
+from realtime_financial_transactions_data_pipeline_spark.registry import (
+    pin_result,
+    probe,
+    probe_scratch,
+)
 from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
     await_or_raise,  # noqa: F401 — re-exported for callers of this module
-    probe_scratch,
     run_available_now,
+    run_until,
 )
 
 #: Output column order, pipeline.py:106-129 (22 columns, no card_number).
@@ -706,7 +710,6 @@ def s17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     range arrived exactly once."""
     import ast
     import glob
-    import time
 
     from realtime_financial_transactions_data_pipeline_spark.caching import (
         disk_fixture,
@@ -735,39 +738,30 @@ def s17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (logfile,) = glob.glob(f"{fdir}/part-*.parquet")
     total = src.count()
     chunk = max(1, total // 3)
-    register_replay_log(spark)
-    stream = (
-        spark.readStream.format("replay_log")
-        .option("path", logfile)
-        .option("chunk", chunk)
-        .option("parts", 2)
-        .load()
-    )
+
+    def drained(p) -> bool:
+        end = p and p["sources"] and p["sources"][0]["endOffset"]
+        # endOffset is the reader dict's repr (single quotes), not
+        # strict JSON — literal_eval handles both.
+        return bool(end) and ast.literal_eval(str(end)).get("row", 0) >= total
+
     with probe_scratch() as root:
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/cp")
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if q.exception() is not None:
-                raise q.exception()  # surface the real failure, not a timeout
-            p = q.lastProgress
-            if p and p.get("sources"):
-                end = p["sources"][0].get("endOffset")
-                # endOffset is the reader dict's repr (single quotes), not
-                # strict JSON — literal_eval handles both.
-                if end and ast.literal_eval(str(end)).get("row", 0) >= total:
-                    break
-            time.sleep(0.2)
-        else:
-            q.stop()
-            raise RuntimeError("replay_log source never reached the log end")
-        q.stop()
-        q.awaitTermination()
+
+        def build(child: SparkSession):
+            # A Python data source registers per session: on the child.
+            register_replay_log(child)
+            return (
+                child.readStream.format("replay_log")
+                .option("path", logfile)
+                .option("chunk", chunk)
+                .option("parts", 2)
+                .load()
+                .writeStream.format("parquet")
+                .option("path", f"{root}/out")
+                .option("checkpointLocation", f"{root}/cp")
+            )
+
+        run_until(spark, build, drained, timeout_s=120)
         out = spark.read.parquet(f"{root}/out")
         return pin_result(
             out.agg(

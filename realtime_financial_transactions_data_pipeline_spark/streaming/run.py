@@ -1,41 +1,26 @@
-"""The one way this package runs a bounded stream.
+"""The one way this package runs a bounded stream. Sinks and
+checkpoints go under the probe's ``registry.probe_scratch()`` root.
 
-- :func:`probe_scratch` gives each call its own sink/checkpoint root,
-  so two calls never share a checkpoint and a re-invocation never
-  wipes files under another call's unread result.
 - :func:`run_available_now` drains the files currently in a query's
   input directories on a child session, so the query's state
   partitioning lives in the child's SQLConf and the caller's session
   is never touched (the Structured Streaming model: offsets, state and
   state partitioning belong to one query and its checkpoint).
+- :func:`run_until` runs a processingTime query on a child session
+  until its progress meets a condition, for sources that are not
+  file directories (the rate source, a Python stream source).
 """
 
 from __future__ import annotations
 
-import contextlib
 import math
-import os
-import shutil
-import uuid
-from collections.abc import Callable, Iterator
+import time
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 from realtime_financial_transactions_data_pipeline_spark.session import child_session
-
-
-@contextlib.contextmanager
-def probe_scratch() -> Iterator[str]:
-    """Yield a fresh directory and remove it on exit. Probes pin their
-    result inside the ``with`` block, so no lazy result outlives the
-    files it reads."""
-    path = os.path.join("/tmp/spark_graft_streaming", uuid.uuid4().hex)
-    os.makedirs(path)
-    try:
-        yield path
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def await_or_raise(query, timeout_s: int) -> None:
@@ -85,7 +70,8 @@ def run_available_now(
     ``min_data_batches`` micro-batches carried rows: multi-batch
     protocols (watermark pushers, one file per batch) depend on the
     source splitting its files that way. Returns ``recentProgress``."""
-    child = child_session(spark, _stream_width(spark, input_dirs))
+    width = _stream_width(spark, input_dirs)
+    child = child_session(spark, {"spark.sql.shuffle.partitions": str(width)})
     query = build(child).trigger(availableNow=True).start()
     await_or_raise(query, timeout_s)
     progress = query.recentProgress
@@ -96,3 +82,30 @@ def run_available_now(
             f"{n_data} (rows per batch: {[p['numInputRows'] for p in progress]})"
         )
     return progress
+
+
+def run_until(
+    spark: SparkSession,
+    build: Callable[[SparkSession], DataStreamWriter],
+    done: Callable[[dict | None], bool],
+    timeout_s: int,
+) -> None:
+    """Run ``build(child)`` — a DataStreamWriter with its sink set, built
+    on a child session of ``spark`` — with a 200 ms processingTime
+    trigger until ``done(lastProgress)`` holds (``lastProgress`` is None
+    before the first batch), then stop it. Raises the query's own
+    exception if it fails, and TimeoutError if ``done`` never holds
+    within ``timeout_s``."""
+    child = child_session(spark, {})
+    query = build(child).trigger(processingTime="200 milliseconds").start()
+    deadline = time.monotonic() + timeout_s
+    try:
+        while not done(query.lastProgress):
+            if query.exception() is not None:
+                raise query.exception()
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"streaming query did not finish within {timeout_s}s")
+            time.sleep(0.1)
+    finally:
+        query.stop()
+    query.awaitTermination()

@@ -39,8 +39,8 @@ from realtime_financial_transactions_data_pipeline_spark.caching import (
     spark_json_slices,
 )
 from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
-    probe_scratch,
     run_available_now,
+    run_until,
 )
 from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
@@ -172,7 +172,11 @@ def run_running_totals(
 # ---------------------------------------------------------------------------
 
 
-from realtime_financial_transactions_data_pipeline_spark.registry import pin_result, probe  # noqa: E402
+from realtime_financial_transactions_data_pipeline_spark.registry import (  # noqa: E402
+    pin_result,
+    probe,
+    probe_scratch,
+)
 
 _TXN_PROBE_SCHEMA = T.StructType(
     [
@@ -189,8 +193,6 @@ def t5_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     couple of wall seconds into a parquet sink, then assert rows were
     emitted at the offered pace. Output is reduced to deterministic
     booleans so the rows-only check is stable across runs."""
-    import time
-
     out_schema = T.StructType(
         [
             T.StructField("event_time", T.TimestampType()),
@@ -199,25 +201,18 @@ def t5_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     with probe_scratch() as root:
-        q = (
-            rate_stream(spark, rows_per_second=500)
-            .writeStream.format("parquet")
-            .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/_cp")
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
         # Stop as soon as one epoch has fully committed (lastProgress
         # advances past batch 0) instead of sleeping a fixed wall time —
         # stopping mid-first-batch would leave an empty sink.
-        deadline = time.time() + 10
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p.get("batchId", 0) >= 1 and p.get("numInputRows", 0) > 0:
-                break
-            time.sleep(0.1)
-        q.stop()
-        q.awaitTermination()
+        run_until(
+            spark,
+            lambda child: rate_stream(child, rows_per_second=500)
+            .writeStream.format("parquet")
+            .option("path", f"{root}/out")
+            .option("checkpointLocation", f"{root}/_cp"),
+            lambda p: bool(p and p["batchId"] >= 1 and p["numInputRows"] > 0),
+            timeout_s=60,
+        )
         out = spark.read.schema(out_schema).parquet(f"{root}/out")
         n = out.count()
         n_distinct = out.select("seq").distinct().count()

@@ -18,16 +18,9 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+from bench import _shuffle_written_bytes
 from realtime_financial_transactions_data_pipeline_spark.registry import all_probes
 from realtime_financial_transactions_data_pipeline_spark.session import get_spark
-
-
-def _shuffle_bytes(spark) -> int:
-    try:
-        execs = spark.sparkContext._jsc.sc().statusStore().executorList(False)
-        return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
-    except Exception:  # noqa: BLE001
-        return -1
 
 
 def main() -> None:
@@ -65,12 +58,12 @@ def main() -> None:
         p = probes[name]
         times = []
         for r in range(reps):
-            sh0 = _shuffle_bytes(spark)
+            sh0 = _shuffle_written_bytes(spark)
             t0 = time.time()
             df = p.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
-            sh1 = _shuffle_bytes(spark)
+            sh1 = _shuffle_written_bytes(spark)
             times.append(dt)
             print(
                 f"{name} rep{r + 1}: {dt:.3f}s shuffle={(sh1 - sh0) / 1e6:.2f}MB",

@@ -547,17 +547,10 @@ def test_er5_snm_no_global_window_no_theta_join(spark, sf_dir):
         assert r.n_pairs == n - d, (d, r.n_pairs, n)
 
 
-def test_no_shuffle_width_conf_mutation_in_batch_operators():
-    """Tripwire (VERDICT r17 #3): no operator or streaming module may
-    mutate ``spark.sql.shuffle.partitions`` — a width pinned to probe
-    scale serializes iterated loops at corpus scale, and session
-    mutation is unsafe under concurrent queries on a shared session.
-    The CC loops derive explicit per-round repartition widths from the
-    live edge count; streams run on a child session whose width
-    ``streaming.run`` derives from the input size. Matches real
-    ``*.conf.set("spark.sql.shuffle.partitions", ...)`` call nodes, so
-    neither a comment nor an unrelated ``conf.set`` in the same
-    function can trip or mask it."""
+def _engine_module_nodes():
+    """(module label, AST node) for every node of every module in the
+    engine's query-building packages: operators/, streaming/, sources/
+    and plans/."""
     import ast
     import pathlib
 
@@ -565,18 +558,48 @@ def test_no_shuffle_width_conf_mutation_in_batch_operators():
         pathlib.Path(__file__).resolve().parents[1]
         / "realtime_financial_transactions_data_pipeline_spark"
     )
-    offenders = []
-    for path in sorted([*pkg.glob("operators/*.py"), *pkg.glob("streaming/*.py")]):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "set"
-                and isinstance(node.func.value, ast.Attribute)
-                and node.func.value.attr == "conf"
-                and node.args
-                and isinstance(node.args[0], ast.Constant)
-                and node.args[0].value == "spark.sql.shuffle.partitions"
-            ):
-                offenders.append(f"{path.parent.name}/{path.name}:{node.lineno}")
-    assert offenders == [], f"module mutates session-global shuffle width: {offenders}"
+    for sub in ("operators", "streaming", "sources", "plans"):
+        for path in sorted(pkg.glob(f"{sub}/*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                yield f"{sub}/{path.name}", node
+
+
+def test_no_shuffle_width_conf_mutation_in_batch_operators():
+    """Tripwire (VERDICT r17 #3): no engine module may call
+    ``*.conf.set(...)`` for any key, the shuffle width included (the
+    name is the original, shuffle-width-only scope). A session conf is shared by every query on the
+    session, so a probe that sets one changes what a concurrent query
+    sees, and a width pinned to probe scale serializes iterated loops
+    at corpus scale. Writes take writer options
+    (``partitionOverwriteMode``, ``maxRecordsPerFile``); probe-local
+    planner confs and stream widths live on a ``session.child_session``.
+    Matches real call nodes, so a comment cannot trip or mask it."""
+    import ast
+
+    offenders = [
+        f"{mod}:{node.lineno}"
+        for mod, node in _engine_module_nodes()
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "set"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+    ]
+    assert offenders == [], f"module mutates a session conf: {offenders}"
+
+
+def test_no_fixed_tmp_paths_in_engine_modules():
+    """Tripwire: no engine module names a fixed ``/tmp/...`` path. Two
+    calls sharing a fixed root overwrite each other's files and a
+    re-invocation wipes files under an unread result; every probe that
+    writes files writes under its own ``registry.probe_scratch()``."""
+    import ast
+
+    offenders = [
+        f"{mod}:{node.lineno}"
+        for mod, node in _engine_module_nodes()
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("/tmp/")
+    ]
+    assert offenders == [], f"module names a fixed /tmp path: {offenders}"

@@ -60,6 +60,14 @@ SIDE_EFFECTING = [
     "k13_deletion_vectors",
     "scale_manifest_skipping",
     "scale_balanced_write",
+    # The remaining batch probes that write under probe_scratch(); dq4
+    # returned a lazy result over its root until it pinned it.
+    "dq4_schema_drift",
+    "s10_orc_roundtrip",
+    "scale_time_travel",
+    "k11_write_audit_publish",
+    "k12_dynamic_partition_overwrite",
+    "scale_vacuum",
 ]
 
 

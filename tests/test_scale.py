@@ -4,6 +4,8 @@ hot keys."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -478,17 +480,17 @@ def test_mv3_navigation_avoids_avg_of_avgs(spark):
     assert differs > 0, "avg-of-avgs equals true avg everywhere; weak fixture"
 
 
-def test_k12_dynamic_overwrite_replaces_only_incoming_partitions(spark):
+def test_k12_dynamic_overwrite_replaces_only_incoming_partitions(spark, tmp_path):
     """The mechanism itself on a hand-built table: write days a+b, then
-    dynamic-overwrite day b with a DIFFERENT row count — day a must be
-    byte-identical (same rows), day b must contain exactly the revision
-    (replace, not merge), and static mode untouched after."""
-    import shutil
-
+    dynamic-overwrite day b with a DIFFERENT row count through the
+    writer option — day a must be byte-identical (same rows), day b
+    must contain exactly the revision (replace, not merge), and the
+    session's partitionOverwriteMode is untouched."""
     from pyspark.sql import functions as F
 
-    root = "/tmp/spark_graft_scale/k12_unit"
-    shutil.rmtree(root, ignore_errors=True)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(key)
+    root = str(tmp_path / "k12_unit")
     base = spark.createDataFrame(
         [("2024-01-01", i, float(i)) for i in range(10)]
         + [("2024-01-02", i, float(i)) for i in range(10)],
@@ -499,12 +501,10 @@ def test_k12_dynamic_overwrite_replaces_only_incoming_partitions(spark):
         [("2024-01-02", i, 99.0) for i in range(3)],
         "day string, id int, v double",
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        rev.write.partitionBy("day").mode("overwrite").parquet(root)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    rev.write.partitionBy("day").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(root)
+    assert spark.conf.get(key) == session_mode
     live = spark.read.parquet(root)
     a = live.filter(F.col("day") == "2024-01-01")
     b = live.filter(F.col("day") == "2024-01-02")
@@ -731,7 +731,7 @@ def test_aqe_coalesce_folds_reduce_partitions(spark):
     assert "isFinalPlan=true" in plan
 
 
-def test_aqe_skewjoin_splits_hot_partition(spark):
+def test_aqe_skewjoin_splits_hot_partition(spark, sf_dir):
     """Under the probe's thresholds the executed adaptive plan must
     carry SortMergeJoin(skew=true) — Spark's OptimizeSkewedJoin
     actually split the hot gateway's reduce partition — and the
@@ -741,20 +741,14 @@ def test_aqe_skewjoin_splits_hot_partition(spark):
         _SKEWJOIN_CONFS,
         skewjoin_panel,
     )
+    from realtime_financial_transactions_data_pipeline_spark.session import child_session
 
-    old = {k: spark.conf.get(k) for k in _SKEWJOIN_CONFS}
-    for k, v in _SKEWJOIN_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        df = skewjoin_panel(spark, "/root/testdata/sf0.01")
-        rows = {r.gateway: (r.n_items, r.revenue_cents, r.fee_cents)
-                for r in df.collect()}
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    df = skewjoin_panel(child_session(spark, _SKEWJOIN_CONFS), sf)
+    rows = {r.gateway: (r.n_items, r.revenue_cents, r.fee_cents) for r in df.collect()}
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
     final_region = plan.split("== Initial Plan ==")[0]
     assert "SortMergeJoin(skew=true)" in final_region, plan
     assert "isFinalPlan=true" in plan
@@ -765,7 +759,7 @@ def test_aqe_skewjoin_splits_hot_partition(spark):
     # results) — computed WITHOUT the probe confs, on default planning.
     plain = {
         r.gateway: (r.n_items, r.revenue_cents, r.fee_cents)
-        for r in skewjoin_panel(spark, "/root/testdata/sf0.01").collect()
+        for r in skewjoin_panel(spark, sf).collect()
     }
     assert plain == rows
 
@@ -805,36 +799,38 @@ def test_exchange_reuse_pinned(spark):
     # data-sized build sides.
 
 
-def test_k13_deletion_vector_economics(spark):
+def test_k13_deletion_vector_economics(spark, sf_dir, tmp_path):
     """The merge-on-read claim (r17): applying the delete must leave
     the BASE FILES byte-identical (no rewrite — the copy-on-write
     alternative rewrites every touched file) while the DV sidecar
     stays O(deleted rows), and the surviving row set must equal the
-    logical complement exactly."""
+    logical complement exactly. Runs the k13 body in its own root."""
     import glob
-    import os
 
     from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
+        deletion_vector_panel,
         k13_deletion_vectors,
     )
 
-    df = k13_deletion_vectors(spark, "/root/testdata/sf0.01")
-    rows = {r.event_type: r.n_events for r in df.collect()}
-    assert "error" not in rows and len(rows) == 4  # law removed the type
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    df = deletion_vector_panel(spark, sf, str(tmp_path))
+    rows = sorted(df.collect())
+    assert "error" not in {r.event_type for r in rows} and len(rows) == 4
 
-    base_files = sorted(glob.glob("/tmp/spark_graft_probes/k13/base/*.parquet"))
-    sig_before = [(f, os.path.getsize(f), os.path.getmtime(f)) for f in base_files]
-    # run the probe AGAIN (fresh build) and compare a re-read within
-    # one build: the reader pass must not touch base bytes
-    df2 = k13_deletion_vectors(spark, "/root/testdata/sf0.01")
-    df2.collect()
-    base_files2 = sorted(glob.glob("/tmp/spark_graft_probes/k13/base/*.parquet"))
-    dv_bytes = sum(
-        os.path.getsize(f)
-        for f in glob.glob("/tmp/spark_graft_probes/k13/dv/*.parquet")
-    )
-    base_bytes = sum(os.path.getsize(f) for f in base_files2)
+    def base_sig():
+        return [
+            (f, os.path.getsize(f), os.path.getmtime(f))
+            for f in sorted(glob.glob(f"{tmp_path}/base/*.parquet"))
+        ]
+
+    sig_before = base_sig()
+    # evaluate the panel again: the reader pass must not touch base bytes
+    assert sorted(df.collect()) == rows
+    assert base_sig() == sig_before
+    dv_bytes = sum(os.path.getsize(f) for f in glob.glob(f"{tmp_path}/dv/*.parquet"))
+    base_bytes = sum(sig[1] for sig in sig_before)
     # sidecar is a small fraction of the base (O(deleted) positions,
     # two int64-ish columns vs full-width rows)
     assert 0 < dv_bytes < 0.5 * base_bytes
-    assert len(base_files2) == len(base_files)
+    # the probe is the same body in a scratch root of its own
+    assert sorted(k13_deletion_vectors(spark, sf).collect()) == rows

@@ -68,12 +68,11 @@ def test_create_table_empty_with_schema(spark, fresh_root):
     assert got.schema["account_id"].dataType == T.LongType()
 
 
-def test_orc_roundtrip_partition_pruned(spark, sf_dir):
+def test_orc_roundtrip_partition_pruned(spark, sf_dir, tmp_path):
     """The s10 ORC read plans a PartitionFilters entry on event_type —
     non-click partition directories are pruned at file-listing time,
     never opened (same machinery as the parquet date-partition probe)."""
     from realtime_financial_transactions_data_pipeline_spark.plans import inspect
-    from realtime_financial_transactions_data_pipeline_spark.sources.batch import _SCRATCH
     from realtime_financial_transactions_data_pipeline_spark.tables import load_table
 
     src = (
@@ -81,7 +80,7 @@ def test_orc_roundtrip_partition_pruned(spark, sf_dir):
         .filter(F.col("user_id") % 20 == 7)
         .select("user_id", "event_type", "value")
     )
-    orc_dir = f"{_SCRATCH}/events_orc_plan_test"
+    orc_dir = str(tmp_path / "events_orc")
     src.write.mode("overwrite").partitionBy("event_type").orc(orc_dir)
     back = spark.read.orc(orc_dir).filter(F.col("event_type") == "click")
     plan = inspect.formatted_plan(back)

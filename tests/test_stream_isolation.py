@@ -7,8 +7,12 @@ from __future__ import annotations
 import threading
 import time
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from realtime_financial_transactions_data_pipeline_spark.streaming.run import (
     run_available_now,
+    run_until,
 )
 from realtime_financial_transactions_data_pipeline_spark.streaming.windows import (
     t9_stream_sessionization,
@@ -93,3 +97,26 @@ def test_child_session_inherits_runtime_time_zone(spark, tmp_path):
         spark.conf.set(key, prev)
     assert seen == ["America/New_York"]
     assert spark.read.parquet(str(tmp_path / "out")).count() == 1
+
+
+def test_run_until_raises_the_query_failure(spark):
+    """A processingTime query that fails surfaces its own exception at
+    once instead of polling until the deadline."""
+    started: list[float] = []
+    children = []
+
+    def build(child):
+        started.append(time.monotonic())
+        children.append(child)
+        return (
+            child.readStream.format("rate")
+            .option("rowsPerSecond", 10)
+            .load()
+            .selectExpr("raise_error('run_until probe failure') AS x")
+            .writeStream.format("noop")
+        )
+
+    with pytest.raises(StreamingQueryException, match="run_until probe failure"):
+        run_until(spark, build, lambda p: False, timeout_s=120)
+    assert time.monotonic() - started[0] < 60
+    assert children[0] is not spark and children[0].streams.active == []
