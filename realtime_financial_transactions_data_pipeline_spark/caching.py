@@ -134,10 +134,10 @@ def memo_persist(
 #: Lifecycle: fixtures live for as long as their source parquet AND the
 #: build recipe that produced them are unchanged — ``disk_fixture``'s
 #: key is (name, source fingerprint, build-recipe token), and building
-#: any key deletes every stale same-name sibling, so at most ONE
-#: generation per fixture name exists on disk at any time. The driver
-#: regenerates /tmp between rounds; within a round, bench and pytest
-#: share these sequentially (never concurrently — see FIXTURES.md).
+#: any key deletes every stale sibling of the same name AND source
+#: directory, so at most ONE generation per (fixture name, source dir)
+#: exists on disk at any time: pytest's sf0.001 build and a harness's
+#: sf0.01 build of one fixture coexist instead of evicting each other.
 _FIXTURE_ROOT = "/tmp/spark_graft_fixtures"
 
 
@@ -181,7 +181,10 @@ def _recipe_token(build) -> str:
 def source_fingerprint(sf_dir: str, *tables: str) -> str:
     """Cheap content fingerprint of the source parquet files (path,
     size, mtime) — the driver regenerates testdata between rounds, and
-    a stale fixture must never survive that."""
+    a stale fixture must never survive that. Shaped ``<dir>-<content>``
+    (8 + 16 hex): :func:`disk_fixture` prunes only generations whose
+    ``<dir>`` part matches, so one fixture built from two source
+    directories keeps one generation per directory."""
     import hashlib
     import os
 
@@ -190,7 +193,8 @@ def source_fingerprint(sf_dir: str, *tables: str) -> str:
         p = os.path.abspath(os.path.join(sf_dir, f"{t}.parquet"))
         st = os.stat(p)
         h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()[:16]
+    src = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    return f"{src}-{h.hexdigest()[:16]}"
 
 
 def disk_fixture(name: str, fingerprint: str, build) -> str:
@@ -201,12 +205,16 @@ def disk_fixture(name: str, fingerprint: str, build) -> str:
     ``.building`` staging dir and is renamed into place only after the
     ``_FIXTURE_OK`` marker is written, so a crashed build is restarted,
     never half-read. The marker's leading underscore keeps Spark's file
-    listing (batch and streaming) from treating it as data. Before
-    building, every same-name sibling with a different key is deleted —
+    listing (batch and streaming) from treating it as data. After
+    building, every same-name sibling built from the same source
+    directory (the fingerprint's part before its last 16 hex digits,
+    see :func:`source_fingerprint`) with a different key is deleted —
     superseded generations are dead by construction (ADVICE r08:
     ``_FIXTURE_ROOT`` previously accreted one dir per fingerprint as
-    the driver rotated testdata). Probes run sequentially in one
-    process, so no cross-process locking is needed."""
+    the driver rotated testdata) — while generations of other source
+    directories stay in use. There is no cross-process lock: processes
+    sharing a fixture root may build different keys at once, but two
+    processes building the SAME key at once share one staging dir."""
     import os
     import re
     import shutil
@@ -230,13 +238,14 @@ def disk_fixture(name: str, fingerprint: str, build) -> str:
         raise
     shutil.rmtree(path, ignore_errors=True)
     os.rename(tmp, path)
-    # Prune superseded generations of THIS fixture name only — AFTER
-    # the new build is committed, so a build() exception cannot orphan
-    # a still-valid older generation (ADVICE r09). The strict hex-shape
-    # match keeps a name that happens to be a prefix of another (plus
-    # "-") from claiming the longer name's dirs.
+    # Prune superseded generations of THIS fixture name and source dir
+    # only — AFTER the new build is committed, so a build() exception
+    # cannot orphan a still-valid older generation (ADVICE r09). The
+    # strict hex-shape match keeps a name that happens to be a prefix
+    # of another (plus "-") from claiming the longer name's dirs.
     stale = re.compile(
-        re.escape(name) + r"-[0-9a-f]{16}(-[0-9a-f]{8})?(\.building)?$"
+        re.escape(f"{name}-{fingerprint[:-16]}")
+        + r"[0-9a-f]{16}(-[0-9a-f]{8})?(\.building)?$"
     )
     for entry in os.listdir(_FIXTURE_ROOT):
         if stale.fullmatch(entry) and entry != f"{name}-{key}":

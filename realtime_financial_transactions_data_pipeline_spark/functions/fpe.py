@@ -20,20 +20,21 @@ worker ``setup()`` (pipeline.py:18-45). Properties we preserve:
 Implementation is a standard balanced Feistel network over the decimal
 domain (the construction behind NIST FF1/FF3 and pyffx itself — public
 knowledge; we do not claim NIST compliance, just determinism + format
-preservation). Ten rounds. The round PRF is keyed BLAKE2b
-(``hashlib.blake2b(msg, key=...)``) — a standardized keyed PRF that
-replaces the earlier HMAC-SHA256 construction at ~3× the per-call
-throughput (HMAC pays two SHA256 compressions plus key-pad setup per
-call; BLAKE2b keys natively). The Feistel structure, domain handling,
-and key management are unchanged.
+preservation). Ten rounds, one loop (:func:`_feistel`) over the round
+states of :func:`_round_states`: keyed BLAKE2b in production — a
+standardized keyed PRF at ~3× HMAC-SHA256's per-call throughput (HMAC
+pays two SHA256 compressions plus key-pad setup per call; BLAKE2b keys
+natively) — or, with ``_round_states(..., portable=True)`` (oracle
+probes only), a key-prefixed md5 that DuckDB can replay.
 
-Execution model: iterator pandas UDF (`mapInPandas`-style Arrow batches).
-The key is resolved once per Python worker, mirroring the reference's
-expensive ``DoFn.setup()`` — not per row, not per batch.
+Execution model: iterator pandas UDF (:func:`_tokenizer_udf`, Arrow
+batches). The key is resolved once per Python worker, mirroring the
+reference's expensive ``DoFn.setup()`` — not per row, not per batch.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 from collections.abc import Iterator
@@ -77,141 +78,120 @@ def _load_key() -> bytes:
     return _key_cache
 
 
-def _prf(key: bytes, round_no: int, value: int, width: int) -> int:
-    msg = f"{round_no}|{width}|{value}".encode()
-    return int.from_bytes(
-        hashlib.blake2b(msg, key=key, digest_size=8).digest(), "big"
-    )
+def _round_states(key: bytes, n: int, portable: bool = False) -> tuple[list, int]:
+    """The ten round-function hash states for width-``n`` inputs, each
+    with its ``b"r|n|"`` prefix already absorbed, plus the right shift
+    that turns a digest into the round value. A round is ``copy()``,
+    ``update(b"%d" % half)``, ``digest()``, so a caller that keeps the
+    states (the UDF, per task) pays the BLAKE2b key schedule and the
+    message prefix once per width, not once per round (``blake2b(msg,
+    key=k)`` is the keyed state updated with ``msg``).
+
+    - production: keyed BLAKE2b with an 8-byte digest, shift 0;
+    - ``portable``: ``md5(key || "r|n|" || half)``, first 4 bytes as a
+      uint32 (shift 96). NOT a secure keyed PRF (md5 with key-prefixing):
+      it exists solely so the u1c probe's Feistel rounds can be replayed
+      bit-for-bit in DuckDB SQL, certifying the NETWORK STRUCTURE (round
+      schedule, halving, modular arithmetic, padding) against an
+      independent engine."""
+    if portable:
+        return [hashlib.md5(key + b"%d|%d|" % (r, n)) for r in range(_ROUNDS)], 96
+    return [
+        hashlib.blake2b(b"%d|%d|" % (r, n), key=key, digest_size=8)
+        for r in range(_ROUNDS)
+    ], 0
 
 
-def _prf_portable(key: bytes, round_no: int, value: int, width: int) -> int:
-    """Engine-portable round PRF: first 4 bytes of md5(key || msg) as a
-    uint32. NOT a secure keyed PRF (md5 with key-prefixing) — it exists
-    solely so the u1c probe's Feistel rounds can be replayed bit-for-bit
-    in DuckDB SQL, certifying the NETWORK STRUCTURE (round schedule,
-    halving, modular arithmetic, padding) against an independent engine.
-    Production tokenization always uses the keyed-BLAKE2b :func:`_prf`."""
-    msg = key + f"{round_no}|{width}|{value}".encode()
-    return int.from_bytes(hashlib.md5(msg).digest()[:4], "big")
+def _feistel(states: list, shift: int, digits: str, decrypt: bool = False) -> str:
+    """Balanced Feistel over the decimal halves of ``digits``: even rounds
+    add the round value of the left half to the right, odd rounds the
+    reverse; decryption walks the rounds backwards subtracting."""
+    n = len(digits)
+    left_w = n // 2
+    right_w = n - left_w
+    a, b = int(digits[:left_w]), int(digits[left_w:])
+    mod_a, mod_b = 10**left_w, 10**right_w
+    sign = -1 if decrypt else 1
+    for r in reversed(range(_ROUNDS)) if decrypt else range(_ROUNDS):
+        h = states[r].copy()
+        if r % 2 == 0:
+            h.update(b"%d" % a)
+            b = (b + sign * (int.from_bytes(h.digest(), "big") >> shift)) % mod_b
+        else:
+            h.update(b"%d" % b)
+            a = (a + sign * (int.from_bytes(h.digest(), "big") >> shift)) % mod_a
+    return str(a).zfill(left_w) + str(b).zfill(right_w)
 
 
-def encrypt_digits(key: bytes, digits: str, prf=_prf) -> str:
+def encrypt_digits(key: bytes, digits: str, portable: bool = False) -> str:
     """Feistel-encrypt a decimal string, preserving its length."""
     n = len(digits)
     if n < 2 or not digits.isdigit():
         raise ValueError(f"FPE domain is digit strings of length >= 2, got {digits!r}")
-    left_w = n // 2
-    right_w = n - left_w
-    a, b = int(digits[:left_w]), int(digits[left_w:])
-    mod_a, mod_b = 10**left_w, 10**right_w
-    for r in range(_ROUNDS):
-        if r % 2 == 0:
-            b = (b + prf(key, r, a, n)) % mod_b
-        else:
-            a = (a + prf(key, r, b, n)) % mod_a
-    return str(a).zfill(left_w) + str(b).zfill(right_w)
+    return _feistel(*_round_states(key, n, portable), digits)
 
 
-def decrypt_digits(key: bytes, digits: str, prf=_prf) -> str:
-    n = len(digits)
-    left_w = n // 2
-    right_w = n - left_w
-    a, b = int(digits[:left_w]), int(digits[left_w:])
-    mod_a, mod_b = 10**left_w, 10**right_w
-    for r in reversed(range(_ROUNDS)):
-        if r % 2 == 0:
-            b = (b - prf(key, r, a, n)) % mod_b
-        else:
-            a = (a - prf(key, r, b, n)) % mod_a
-    return str(a).zfill(left_w) + str(b).zfill(right_w)
+def decrypt_digits(key: bytes, digits: str, portable: bool = False) -> str:
+    return _feistel(*_round_states(key, len(digits), portable), digits, decrypt=True)
 
 
-def make_fpe_tokenizer(key: bytes | None = None, portable: bool = False):
-    """Build the tokenizing pandas UDF. With ``key=None`` the key is
-    resolved on each worker via :func:`_load_key` (fail-closed env
-    lookup, once per worker process — the DoFn.setup() pattern); an
-    explicit ``key`` is baked into the closure (tests, probes).
-    ``portable=True`` swaps the round PRF for the md5-based
-    :func:`_prf_portable` (oracle probes only — see its docstring).
-    The portable path is guarded: it only accepts the public
-    :data:`TEST_KEY`, so a production key can never be combined with
-    the weak md5 construction (round-5 ADVICE)."""
-    if portable and key != TEST_KEY:
-        raise ValueError(
-            "portable=True is an oracle-replay mode using a weak md5 PRF; "
-            "it only accepts the public TEST_KEY, never a production key"
-        )
-    prf = _prf_portable if portable else _prf
+def _tokenizer_udf(make_one, accepts):
+    """Iterator pandas UDF mapping each PAN ``accepts`` admits (digit
+    strings only) to ``one(pan)``; null or rejected PANs map to null —
+    callers route invalid rows to the dead-letter sink *before* this UDF
+    (plan-ordering discipline, SURVEY §4). ``make_one()`` runs once per
+    task (key resolution, cipher setup — the reference's expensive
+    ``DoFn.setup()``, not per row, not per batch).
+
+    Tokens are DETERMINISTIC per key, so a per-task memo encrypts each
+    distinct PAN once and maps repeats through the dict — duplicate PANs
+    (wire-copy replays, repeat customers) cost a dict hit instead of a
+    Feistel run. The size check runs once per Arrow batch, so the true
+    bound is 1M + one batch's distinct PANs (~1M + maxRecordsPerBatch),
+    and eviction is a full clear — a deliberate trade: per-insert LRU
+    bookkeeping costs more than re-encrypting the occasional post-clear
+    batch, and tasks at 100 TB scale rotate long before the cap trips
+    twice."""
 
     @F.pandas_udf(T.StringType())
-    def fpe_tokenize(pans: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        """PAN → 16-char zero-padded token (pipeline.py:93-95 semantics:
-        encrypt at the PAN's own length, then ``zfill(16)``). Null/invalid
-        PANs map to null — callers route invalid rows to the dead-letter
-        sink *before* this UDF (plan-ordering discipline, SURVEY §4).
-
-        Hot-path engineering (VERDICT r11 #5 — this UDF is the streaming
-        pipeline's dominant cost):
-
-        - the BLAKE2b key schedule runs ONCE per task: a keyed hash
-          object is built up front and ``copy()``-ed per PRF call
-          (bit-identical to ``blake2b(msg, key=k)`` — the constructor's
-          msg is just an initial update on the keyed state; measured
-          1.4× on the encrypt path);
-        - tokens are DETERMINISTIC per key, so a per-task memo encrypts
-          each distinct PAN once and maps repeats through the dict —
-          duplicate PANs (wire-copy replays, repeat customers) cost a
-          dict hit instead of 10 PRF calls. The size check runs once
-          per Arrow batch, so the true bound is 1M + one batch's
-          distinct PANs (~1M + maxRecordsPerBatch), and eviction is a
-          full clear — a deliberate trade: per-insert LRU bookkeeping
-          costs more than re-encrypting the occasional post-clear
-          batch, and tasks at 100 TB scale rotate long before the cap
-          trips twice."""
-        k = key if key is not None else _load_key()  # once per worker
-        fast = prf is _prf
-        keyed = hashlib.blake2b(key=k, digest_size=8) if fast else None
-
-        def one(pan: str) -> str:
-            n = len(pan)
-            left_w = n // 2
-            right_w = n - left_w
-            a, b = int(pan[:left_w]), int(pan[left_w:])
-            mod_a, mod_b = 10**left_w, 10**right_w
-            if fast:
-                for r in range(_ROUNDS):
-                    h = keyed.copy()
-                    if r % 2 == 0:
-                        h.update(b"%d|%d|%d" % (r, n, a))
-                        b = (b + int.from_bytes(h.digest(), "big")) % mod_b
-                    else:
-                        h.update(b"%d|%d|%d" % (r, n, b))
-                        a = (a + int.from_bytes(h.digest(), "big")) % mod_a
-            else:
-                for r in range(_ROUNDS):
-                    if r % 2 == 0:
-                        b = (b + prf(k, r, a, n)) % mod_b
-                    else:
-                        a = (a + prf(k, r, b, n)) % mod_a
-            out = str(a).zfill(left_w) + str(b).zfill(right_w)
-            return str(int(out)).zfill(16)
-
+    def tokenize(pans: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        one = make_one()
         memo: dict[str, str] = {}
         for batch in pans:
             if len(memo) > 1_000_000:
                 memo.clear()
             for pan in batch.dropna().unique():
-                if (
-                    isinstance(pan, str)
-                    and pan not in memo
-                    and len(pan) >= 2
-                    and pan.isdigit()
-                ):
+                if isinstance(pan, str) and pan not in memo and accepts(pan) and pan.isdigit():
                     memo[pan] = one(pan)
             # dict-map: hits become tokens, misses (invalid/null) -> null
             yield batch.map(memo)
 
-    return fpe_tokenize
+    return tokenize
+
+
+def make_fpe_tokenizer(key: bytes | None = None, portable: bool = False):
+    """Build the tokenizing pandas UDF: PAN → 16-char zero-padded token
+    (pipeline.py:93-95 semantics: encrypt at the PAN's own length, then
+    ``zfill(16)``). With ``key=None`` the key is resolved on each worker
+    via :func:`_load_key` (fail-closed env lookup, once per worker
+    process — the DoFn.setup() pattern); an explicit ``key`` is baked
+    into the closure (tests, probes). ``portable=True`` swaps the round
+    function for the md5-based one of :func:`_round_states` (oracle
+    probes only). The portable path is guarded: it only accepts the
+    public :data:`TEST_KEY`, so a production key can never be combined
+    with the weak md5 construction (round-5 ADVICE)."""
+    if portable and key != TEST_KEY:
+        raise ValueError(
+            "portable=True is an oracle-replay mode using a weak md5 PRF; "
+            "it only accepts the public TEST_KEY, never a production key"
+        )
+
+    def make_one():
+        k = key if key is not None else _load_key()  # once per worker
+        states = functools.cache(lambda n: _round_states(k, n, portable))
+        return lambda pan: str(int(_feistel(*states(len(pan)), pan))).zfill(16)
+
+    return _tokenizer_udf(make_one, lambda pan: len(pan) >= 2)
 
 
 def fpe_token_col(
@@ -324,59 +304,28 @@ def pyffx_compat_token(key: bytes, digits: str) -> str:
     return str(int(pyffx_compat_encrypt_digits(key, digits))).zfill(16)
 
 
-def pyffx_token(key: bytes, digits: str) -> str:
-    """Reference-exact token for one PAN. Uses the real pyffx package
-    when present (belt-and-braces confirmation), else the pinned
-    stdlib transcription above — both produce identical bits."""
+def _pyffx_one(key: bytes):
+    """Per-PAN reference token function: the real pyffx package when
+    present (belt-and-braces confirmation, one cipher per PAN width),
+    else the pinned stdlib transcription above — both produce identical
+    bits."""
     try:
-        import pyffx  # noqa: F401 — optional; compat twin is exact
+        import pyffx
     except ImportError:
-        return pyffx_compat_token(key, digits)
-    return str(
-        pyffx.Integer(key, length=len(digits)).encrypt(int(digits))
-    ).zfill(16)
+        return lambda pan: pyffx_compat_token(key, pan)
+    cipher = functools.cache(lambda n: pyffx.Integer(key, length=n))
+    return lambda pan: str(cipher(len(pan)).encrypt(int(pan))).zfill(16)
+
+
+def pyffx_token(key: bytes, digits: str) -> str:
+    """Reference-exact token for one PAN (see :func:`_pyffx_one`)."""
+    return _pyffx_one(key)(digits)
 
 
 def make_pyffx_tokenizer(key: bytes):
     """Pandas UDF twin of :func:`make_fpe_tokenizer` producing
-    reference-exact pyffx tokens. Each worker prefers the real pyffx
-    package and falls back to the vector-pinned stdlib transcription.
-    Mirrors the reference's 13–19 PAN length gate (pipeline.py:78):
-    out-of-range or non-digit inputs map to null, exactly the rows the
-    reference dead-letters before tokenizing (r14 ADVICE #3). A
-    per-task memo makes repeat PANs a dict hit (same trade as
-    :func:`make_fpe_tokenizer`)."""
-
-    @F.pandas_udf(T.StringType())
-    def pyffx_tokenize(pans: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        try:
-            import pyffx
-
-            ciphers: dict[int, object] = {}
-
-            def one(s: str) -> str:
-                c = ciphers.get(len(s))
-                if c is None:
-                    c = ciphers[len(s)] = pyffx.Integer(key, length=len(s))
-                return str(c.encrypt(int(s))).zfill(16)
-
-        except ImportError:
-
-            def one(s: str) -> str:
-                return pyffx_compat_token(key, s)
-
-        memo: dict[str, str] = {}
-        for batch in pans:
-            if len(memo) > 1_000_000:
-                memo.clear()
-            for pan in batch.dropna().unique():
-                if (
-                    isinstance(pan, str)
-                    and pan not in memo
-                    and 13 <= len(pan) <= 19
-                    and pan.isdigit()
-                ):
-                    memo[pan] = one(pan)
-            yield batch.map(memo)
-
-    return pyffx_tokenize
+    reference-exact pyffx tokens through :func:`_pyffx_one`. Mirrors the
+    reference's 13–19 PAN length gate (pipeline.py:78): out-of-range or
+    non-digit inputs map to null, exactly the rows the reference
+    dead-letters before tokenizing (r14 ADVICE #3)."""
+    return _tokenizer_udf(lambda: _pyffx_one(key), lambda pan: 13 <= len(pan) <= 19)

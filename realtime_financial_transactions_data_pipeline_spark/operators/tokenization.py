@@ -122,7 +122,8 @@ def u1_fpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _u1c_oracle() -> str:
     """DuckDB replay of the 10-round Feistel over 16-digit PANs with the
-    portable md5 PRF: prf(r, v) = first 4 bytes of
+    portable md5 round function (functions/fpe.py:
+    ``_round_states(..., portable=True)``): prf(r, v) = first 4 bytes of
     md5(key || r || '|16|' || v) as uint32; even rounds update the right
     half, odd rounds the left, both mod 10^8. Generated as chained CTEs
     so every round's arithmetic is explicit and independently
@@ -167,10 +168,10 @@ def _u1c_oracle() -> str:
 def u1c_fpe_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked FPE structure probe: the same 10-round Feistel
     network as u1_fpe_tokenize but with the engine-portable md5 round
-    PRF (functions/fpe.py:_prf_portable), so DuckDB replays every round
-    bit-for-bit. This certifies the Feistel structure — round schedule,
-    domain halving, modular arithmetic, zero-padding — against an
-    independent engine; the production keyed-BLAKE2b PRF stays
+    PRF (functions/fpe.py:_round_states(..., portable=True)), so DuckDB
+    replays every round bit-for-bit. This certifies the Feistel
+    structure — round schedule, domain halving, modular arithmetic,
+    zero-padding — against an independent engine; the production keyed-BLAKE2b PRF stays
     rows-only + unit-tested (no blake2b in DuckDB), which is exactly
     the boundary a crypto twin should have."""
     from realtime_financial_transactions_data_pipeline_spark.functions.fpe import TEST_KEY

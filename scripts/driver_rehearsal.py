@@ -23,10 +23,11 @@ Exit 0 = every probe stable and oracle-consistent; 1 otherwise.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import _shuffle_written_bytes
 from realtime_financial_transactions_data_pipeline_spark.registry import all_probes
@@ -71,8 +72,9 @@ def main() -> None:
             )
         print(f"{name} min: {min(times):.3f}s", flush=True)
         if plan and tag:
-            os.makedirs("/root/repo/plans/r18", exist_ok=True)
-            out = f"/root/repo/plans/r18/{name}_{tag}.txt"
+            plan_dir = os.path.join(ROOT, "plans", "r18")
+            os.makedirs(plan_dir, exist_ok=True)
+            out = os.path.join(plan_dir, f"{name}_{tag}.txt")
             df = p.fn(spark, sf_dir)
             with open(out, "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(

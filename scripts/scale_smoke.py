@@ -28,11 +28,12 @@ Run it alone (it shares /tmp probe scratch with bench/pytest):
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F
 

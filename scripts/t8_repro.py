@@ -16,9 +16,10 @@ Exit 0 = both invocations matched the oracle; 1 = any mismatch.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

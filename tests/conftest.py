@@ -4,11 +4,12 @@ keep unit tests snappy."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from realtime_financial_transactions_data_pipeline_spark.session import get_spark
 

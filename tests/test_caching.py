@@ -111,6 +111,23 @@ def test_prune_is_scoped_to_the_exact_name(fixture_root):
     assert os.path.exists(os.path.join(long_path, "_FIXTURE_OK"))
 
 
+def test_prune_is_scoped_to_the_source_dir(fixture_root, tmp_path):
+    """One fixture name built from two source dirs (pytest's sf0.001 and a
+    harness's sf0.01) keeps both generations; a changed recipe for the
+    same dir still prunes that dir's old generation."""
+    fps = []
+    for sf in ("sf_small", "sf_large"):
+        os.makedirs(tmp_path / sf)
+        (tmp_path / sf / "events.parquet").write_bytes(sf.encode())
+        fps.append(caching.source_fingerprint(str(tmp_path / sf), "events"))
+    small = caching.disk_fixture("slices", fps[0], touch_build("v1"))
+    large = caching.disk_fixture("slices", fps[1], touch_build("v1"))
+    assert small != large
+    assert _dirs(fixture_root) == sorted(map(os.path.basename, [small, large]))
+    small_v2 = caching.disk_fixture("slices", fps[0], touch_build("v2"))
+    assert _dirs(fixture_root) == sorted(map(os.path.basename, [small_v2, large]))
+
+
 # ---------------------------------------------------------------------------
 # memo_persist LRU semantics (VERDICT r12 #2): round 12's FIFO at
 # capacity 4 evicted the shingle/fingerprint frames before their

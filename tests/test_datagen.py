@@ -4,13 +4,11 @@ materialization + the dashboard suite on the reference's own schema."""
 
 from __future__ import annotations
 
-import shutil
 
 from pyspark.sql import functions as F
 
 from realtime_financial_transactions_data_pipeline_spark.sources import datagen
 
-ROOT = "/tmp/spark_graft_tests/datagen"
 
 
 def test_weighted_choice_respects_weights(spark):
@@ -98,12 +96,11 @@ def test_generated_dashboard_charts_probe(spark):
     assert all(0.0 <= r.avg_risk <= 1.0 for r in out)
 
 
-def test_star_schema_write_and_dashboard(spark):
+def test_star_schema_write_and_dashboard(spark, tmp_path):
     """Materialize the star schema (fact partitioned by date) and run a
     dashboard-style slice: join fact→date_dim, filter a date range,
     group by channel — the reference's analytics path on its own schema."""
-    root = f"{ROOT}/star"
-    shutil.rmtree(root, ignore_errors=True)
+    root = str(tmp_path / "star")
     datagen.write_star_schema(spark, root, n_fact=5000)
     fact = spark.read.parquet(f"{root}/fact_transactions")
     chan = spark.read.parquet(f"{root}/dim_transaction_channel")

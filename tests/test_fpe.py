@@ -13,10 +13,37 @@ KEY = fpe.TEST_KEY
 OTHER_KEY = b"another-32-byte-key-for-testing!"
 
 
-@pytest.mark.parametrize("pan", ["4000123412341234", "4111111111111", "4" * 19, "00", "987654321"])
+_DIGITS = "31415926535897932384"
+
+
+@pytest.mark.parametrize(
+    "pan",
+    ["4000123412341234", "4111111111111", "4" * 19, "00", "987654321"]
+    + [_DIGITS[:n] for n in range(2, 20)],
+)
 def test_round_trip(pan):
-    token = fpe.encrypt_digits(KEY, pan)
-    assert fpe.decrypt_digits(KEY, token) == pan
+    for portable in (False, True):
+        token = fpe.encrypt_digits(KEY, pan, portable=portable)
+        assert fpe.decrypt_digits(KEY, token, portable=portable) == pan
+
+
+#: Tokens of TEST_KEY computed before the round functions were folded
+#: into _round_states: (blake2b, portable) per PAN width 2, 13, 16, 19.
+_FROZEN = {
+    "31": ("38", "06"),
+    "3141592653589": ("5016258912400", "1824438467755"),
+    "3141592653589793": ("5173327370409897", "7458621903530739"),
+    "3141592653589793238": ("0563588946028052585", "9815739502504687419"),
+}
+
+
+@pytest.mark.parametrize("pan", sorted(_FROZEN, key=len))
+def test_frozen_token_vectors(pan):
+    """Token identity by value: a change to the round message bytes, the
+    digest-to-integer step or the round schedule breaks every stored
+    token join, so the tokens themselves are pinned."""
+    assert fpe.encrypt_digits(KEY, pan) == _FROZEN[pan][0]
+    assert fpe.encrypt_digits(KEY, pan, portable=True) == _FROZEN[pan][1]
 
 
 @pytest.mark.parametrize("pan", ["4000123412341234", "13579246801234567"])
@@ -95,15 +122,14 @@ def test_udf_tokenizes_and_nulls(spark):
 def test_portable_prf_round_trips_and_differs_from_blake2b():
     from realtime_financial_transactions_data_pipeline_spark.functions.fpe import (
         TEST_KEY,
-        _prf_portable,
         decrypt_digits,
         encrypt_digits,
     )
 
     pan = "4000000000001234"
-    tok = encrypt_digits(TEST_KEY, pan, prf=_prf_portable)
+    tok = encrypt_digits(TEST_KEY, pan, portable=True)
     assert tok.isdigit() and len(tok) == 16 and tok != pan
-    assert decrypt_digits(TEST_KEY, tok, prf=_prf_portable) == pan
+    assert decrypt_digits(TEST_KEY, tok, portable=True) == pan
     # The portable construction is a DIFFERENT PRF, not an alias of the
     # production one — tokens must disagree.
     assert tok != encrypt_digits(TEST_KEY, pan)
@@ -126,18 +152,13 @@ def test_portable_mode_rejects_non_test_keys():
     make_fpe_tokenizer(TEST_KEY, portable=True)  # allowed
 
 
-def test_udf_fast_path_equals_encrypt_digits(spark):
-    """The UDF inlines a keyed-copy fast path of the Feistel network
-    (round schedule, message bytes, halving). Pin it bit-for-bit to the
-    reference implementation across PAN lengths — a future edit to
-    _prf's message format or encrypt_digits' rounds must not silently
-    fork the streaming tokens from the library function (which would
-    break cross-run token joins and decrypt_digits inversion)."""
-    from realtime_financial_transactions_data_pipeline_spark.functions.fpe import (
-        TEST_KEY,
-        encrypt_digits,
-        fpe_token_col,
-    )
+@pytest.mark.parametrize("tokenizer", ["blake2b", "portable", "pyffx"])
+def test_udf_tokens_equal_encrypt_digits(spark, tokenizer):
+    """The UDF and the library functions share one cipher per tokenizer;
+    pin the UDF's tokens bit-for-bit to the driver-side function across
+    PAN lengths, so streaming tokens cannot fork from encrypt_digits
+    (which would break cross-run token joins and decrypt_digits
+    inversion). pyffx's UDF is 13-19 only, so it nulls "12"."""
     from pyspark.sql import functions as F
 
     pans = [
@@ -147,15 +168,22 @@ def test_udf_fast_path_equals_encrypt_digits(spark):
         "4556737586899855123",   # 19 (ISO max)
         "0000000000000001",      # leading zeros survive the int round-trip
     ]
+    if tokenizer == "pyffx":
+        udf = fpe.make_pyffx_tokenizer(KEY)
+
+        def want(p):
+            return fpe.pyffx_compat_token(KEY, p) if 13 <= len(p) <= 19 else None
+    else:
+        portable = tokenizer == "portable"
+        udf = fpe.make_fpe_tokenizer(KEY, portable=portable)
+
+        def want(p):
+            return str(int(fpe.encrypt_digits(KEY, p, portable=portable))).zfill(16)
+
     df = spark.createDataFrame([(p,) for p in pans], "pan string")
-    got = {
-        r.pan: r.tok
-        for r in df.withColumn(
-            "tok", fpe_token_col(F.col("pan"), key=TEST_KEY)
-        ).collect()
-    }
+    got = {r.pan: r.tok for r in df.withColumn("tok", udf(F.col("pan"))).collect()}
     for p in pans:
-        assert got[p] == str(int(encrypt_digits(TEST_KEY, p))).zfill(16), p
+        assert got[p] == want(p), p
 
 
 def test_u8_contribution_bounding(spark):

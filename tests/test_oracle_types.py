@@ -19,12 +19,13 @@ ratio) fails here before it can reach the driver.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from realtime_financial_transactions_data_pipeline_spark.registry import all_probes
 from realtime_financial_transactions_data_pipeline_spark.tables import TABLE_NAMES

@@ -4,7 +4,6 @@ load_dimension convention (schema by file stem, non-CSV rejected)."""
 
 from __future__ import annotations
 
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,14 +12,11 @@ from pyspark.sql import types as T
 from realtime_financial_transactions_data_pipeline_spark import schemas as sch
 from realtime_financial_transactions_data_pipeline_spark.sources import batch
 
-ROOT = "/tmp/spark_graft_tests/sources"
 
 
 @pytest.fixture()
-def fresh_root(request):
-    path = f"{ROOT}/{request.node.name}"
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+def fresh_root(tmp_path):
+    return str(tmp_path / "root")
 
 
 def test_load_dimension_by_stem(spark, fresh_root, tmp_path):
@@ -339,9 +335,10 @@ def test_s19_multiline_shreds_without_multiline_mode(spark):
     assert sum(r.n_rows for r in rows) == n_cust
     assert all(r.n_multiline == r.n_rows for r in rows)
     # negative control: the naive line-split reader sees MORE records.
-    # Locate the probe's own fixture by name prefix — calling
-    # disk_fixture with a different build lambda would mint a NEW key
-    # and delete the real fixture (the recipe-token law).
+    # Locate the probe's own fixture by name and source fingerprint —
+    # calling disk_fixture with a different build lambda would mint a NEW
+    # key and delete the real fixture (the recipe-token law), and other
+    # source dirs' generations of the same name may sit beside it.
     import glob
     import os
 
@@ -349,7 +346,10 @@ def test_s19_multiline_shreds_without_multiline_mode(spark):
 
     cands = [
         p
-        for p in glob.glob(os.path.join(caching._FIXTURE_ROOT, "multiline-csv-*"))
+        for p in glob.glob(os.path.join(
+            caching._FIXTURE_ROOT,
+            f"multiline-csv-{caching.source_fingerprint(sf, 'customer')}-*",
+        ))
         if os.path.exists(os.path.join(p, "_FIXTURE_OK"))
     ]
     assert cands, "probe fixture must exist after the probe ran"

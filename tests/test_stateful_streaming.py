@@ -4,7 +4,6 @@ totals operator accumulating across micro-batches and restarts."""
 
 from __future__ import annotations
 
-import shutil
 import time
 
 import pytest
@@ -14,7 +13,6 @@ from pyspark.sql import types as T
 
 from realtime_financial_transactions_data_pipeline_spark.streaming import stateful
 
-ROOT = "/tmp/spark_graft_tests/stateful"
 
 TXN_SCHEMA = T.StructType(
     [
@@ -26,10 +24,8 @@ TXN_SCHEMA = T.StructType(
 
 
 @pytest.fixture()
-def fresh_root(request):
-    path = f"{ROOT}/{request.node.name}"
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+def fresh_root(tmp_path):
+    return str(tmp_path / "root")
 
 
 def _write_jsonl(spark, rows, path, mode="overwrite"):

@@ -4,7 +4,6 @@ side emit nothing (inner join)."""
 
 from __future__ import annotations
 
-import shutil
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -14,7 +13,6 @@ from realtime_financial_transactions_data_pipeline_spark.streaming.joins import 
     stream_stream_attribution,
 )
 
-ROOT = "/tmp/spark_graft_tests/stream_joins"
 
 SCHEMA = T.StructType(
     [
@@ -26,9 +24,8 @@ SCHEMA = T.StructType(
 )
 
 
-def test_stream_stream_join_horizon(spark):
-    root = ROOT
-    shutil.rmtree(root, ignore_errors=True)
+def test_stream_stream_join_horizon(spark, tmp_path):
+    root = str(tmp_path)
     rows = [
         (100, 1, "click", "2024-01-01 10:00:00"),
         (200, 1, "purchase", "2024-01-01 10:30:00"),  # within 1h of click 100

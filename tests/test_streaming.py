@@ -4,7 +4,6 @@ actually refreshing between micro-batches."""
 
 from __future__ import annotations
 
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 from realtime_financial_transactions_data_pipeline_spark.functions.fpe import TEST_KEY
 from realtime_financial_transactions_data_pipeline_spark.streaming import pipeline as sp
 
-ROOT = "/tmp/spark_graft_tests/streaming"
 
 
 def _msg(txn_id: str, pan: str | None) -> str:
@@ -30,10 +28,8 @@ def _msg(txn_id: str, pan: str | None) -> str:
 
 
 @pytest.fixture()
-def fresh_root(request):
-    path = f"{ROOT}/{request.node.name}"
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+def fresh_root(tmp_path):
+    return str(tmp_path / "root")
 
 
 def test_routing_semantics(spark, fresh_root):

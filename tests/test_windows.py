@@ -4,7 +4,6 @@ finalize in append mode only after the watermark passes."""
 
 from __future__ import annotations
 
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +13,6 @@ from realtime_financial_transactions_data_pipeline_spark.streaming.windows impor
     windowed_revenue,
 )
 
-ROOT = "/tmp/spark_graft_tests/windows"
 
 SCHEMA = T.StructType(
     [
@@ -25,10 +23,8 @@ SCHEMA = T.StructType(
 
 
 @pytest.fixture()
-def fresh_root(request):
-    path = f"{ROOT}/{request.node.name}"
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+def fresh_root(tmp_path):
+    return str(tmp_path / "root")
 
 
 def _write(spark, rows, path, mode):
