@@ -8,13 +8,21 @@ extensions) — for the driver's DuckDB correctness harness.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-if "/root/repo" not in sys.path:
-    sys.path.insert(0, "/root/repo")
+# This file's own checkout; a loader that sets no ``__file__`` gets the
+# canonical checkout path.
+_ROOT = (
+    os.path.dirname(os.path.abspath(__file__))
+    if "__file__" in globals()
+    else "/root/repo"
+)
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
 
 def entry(spark: SparkSession) -> DataFrame:

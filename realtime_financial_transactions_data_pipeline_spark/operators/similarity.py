@@ -1217,9 +1217,9 @@ def x2p_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     subspace order on both engines (sorted-struct aggregate here,
     list(... ORDER BY m) in the oracle) so the doubles match
     bit-for-bit and the top-k ranking is deterministic. The final
-    per-query ranking here is one window over corpus-sized rows; at
-    100 TB swap in the two-phase top-k (per-partition heads, then
-    merge) — the ADC scoring itself is already map-only."""
+    per-query ranking is ``row_number() <= k``, which Spark plans as a
+    WindowGroupLimit Partial (k-row heads per input partition) before
+    the exchange and a Final after it; the ADC scoring is map-only."""
     emb = with_double_embedding(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "emb"
     )
@@ -1342,11 +1342,9 @@ def x2s_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, PQ training, list pruning, and the ADC sums end-to-end.
     At 100 TB: lists are the partition key (a query touches nprobe
     partitions) and codes are 4 bytes/vector. The final per-query
-    ranking uses the two-phase ``staged_topk`` (rank inside
-    (query, salt) sub-partitions first, then rank the ≤ k·fanout
-    survivors) — a handful of queries over a corpus-sized candidate
-    set would otherwise funnel every row through |queries| window
-    tasks, the q15 single-partition hazard in per-key form."""
+    ranking is ``row_number() <= k``: Spark's WindowGroupLimit Partial
+    keeps k rows per (query, input partition) before the exchange, so
+    only those reach the |queries| window tasks, not the candidates."""
     # r18: index assignment and the 3-query probe assignment are both
     # rank slices of the shared full-rank memo (ivf_assign_ranked_memo:
     # the window partitions by vec_id, so vec-subset filters commute
@@ -1399,17 +1397,16 @@ def x2s_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.struct("m", "qd"))).alias("terms"))
         .withColumn("qdist", F.expr("aggregate(terms, 0.0D, (s, p) -> s + p.qd)"))
     )
-    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
-        staged_topk,
-    )
-
-    return staged_topk(
-        sc, ["q_id"], [F.col("qdist"), F.col("vec_id")], _PQ_TOPK, salt_col="vec_id"
-    ).select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_tk_rank").cast("int").alias("rnk"),
-        dround("qdist", 4).alias("adc_dist"),
+    w = Window.partitionBy("q_id").orderBy("qdist", "vec_id")
+    return (
+        sc.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _PQ_TOPK)
+        .select(
+            "q_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("rnk").cast("int").alias("rnk"),
+            dround("qdist", 4).alias("adc_dist"),
+        )
     )
 
 
@@ -1696,22 +1693,21 @@ def x2t_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     → train PQ on the residuals → per query, build the nprobe
     per-(query, list) ADC tables from the query's OWN residual against
     each probed centroid → score candidates from their 4-id code
-    tuples, sum in fixed subspace order, two-phase top-k. All
+    tuples, sum in fixed subspace order, per-query top-k. All
     arithmetic replays bit-for-bit in DuckDB (element-wise residual
     subtraction, avg-based centroids, ordered folds), so the hash
     certifies the full FAISS IndexIVFPQ construction end-to-end."""
     sc = _ivfpq_residual_scored(spark, sf_dir)
-    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
-        staged_topk,
-    )
-
-    return staged_topk(
-        sc, ["q_id"], [F.col("qdist"), F.col("vec_id")], _PQ_TOPK, salt_col="vec_id"
-    ).select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_tk_rank").cast("int").alias("rnk"),
-        dround("qdist", 4).alias("adc_dist"),
+    w = Window.partitionBy("q_id").orderBy("qdist", "vec_id")
+    return (
+        sc.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _PQ_TOPK)
+        .select(
+            "q_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("rnk").cast("int").alias("rnk"),
+            dround("qdist", 4).alias("adc_dist"),
+        )
     )
 
 
@@ -1760,17 +1756,12 @@ def x2v_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit in DuckDB end-to-end (coarse train → PQ train → ADC
     shortlist → exact refine)."""
     sc = _ivfpq_residual_scored(spark, sf_dir)
-    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
-        staged_topk,
+    w = Window.partitionBy("q_id").orderBy("qdist", "vec_id")
+    short = (
+        sc.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _X2V_SHORTLIST)
+        .select("q_id", "vec_id")
     )
-
-    short = staged_topk(
-        sc,
-        ["q_id"],
-        [F.col("qdist"), F.col("vec_id")],
-        _X2V_SHORTLIST,
-        salt_col="vec_id",
-    ).select("q_id", "vec_id")
     emb = with_double_embedding(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "emb"
     )
@@ -2309,17 +2300,12 @@ def x2w_matryoshka_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("q_id"))
         .withColumn("pd2", pre_d2)
     )
-    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
-        staged_topk,
+    w = Window.partitionBy("q_id").orderBy("pd2", "vec_id")
+    short = (
+        pre.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _X2W_SHORT)
+        .select("q_id", "vec_id")
     )
-
-    short = staged_topk(
-        pre.select("q_id", "vec_id", "pd2"),
-        ["q_id"],
-        [F.col("pd2"), F.col("vec_id")],
-        _X2W_SHORT,
-        salt_col="vec_id",
-    ).select("q_id", "vec_id")
     d2 = F.expr(
         "aggregate(zip_with(q_emb, c_emb, (a, b) -> (a - b) * (a - b)),"
         " 0.0D, (s, v) -> s + v)"

@@ -33,199 +33,12 @@ class Probe:
 
 _REGISTRY: dict[str, Probe] = {}
 
-#: The driver's correctness harness samples the FIRST 50 entries of
-#: ``queries()`` in dict order (measured: round 1 registered 48 probes
-#: and all 48 were checked; round 2 registered 73 and exactly the first
-#: 50, in insertion order, appeared in CORRECTNESS_r02.json). This list
-#: pins that window explicitly: one representative probe per SURVEY §2
-#: operator family, so every family lands in the driver's hard signal.
-#: Probes past the window are fine-grained twins/extras — still run by
-#: bench.py and scripts/check_oracle.py, just outside the driver sample.
+#: Driver window policy: the driver hash-checks the first 50 ``queries()``
+#: entries; every SURVEY §2 family keeps a representative in it, every
+#: member carries an oracle (rows-only probes never enter), and rotation
+#: swaps out the oldest-green members first. The CORRECTNESS_r*.json
+#: ledgers are the rotation history.
 DRIVER_WINDOW = 50
-#: Round-9 rotation (VERDICT_r08 item #1, cohort 4): ten probes the
-#: driver has verified green in two or more rounds rotate OUT (f1,
-#: f2_f6, s3, j2, j4, a1_a6, pivot, x2a, u1b, t2b — every §2 family
-#: keeps at least one representative, most keep two; x5b stays because
-#: it is the x5 family's only window member) and ten never-driver-
-#: verified probes rotate IN: x4g (from-spec JPEG decode), x4h (audio
-#: features), ts1b (blocked series similarity), q13/q15/q17/q19 (the
-#: round-8 TPC-H shapes: filtered-outer two-level agg, broadcast-max
-#: argmax, decorrelated scalar agg, OR-of-ANDs pushdown), k6 (CDC
-#: latest-wins), k8 (streaming CDC merge sink), x16 (cross-doc dup
-#: fraction). Every rotated-out probe is still oracle-checked by
-#: bench.py / scripts/check_oracle.py each round. Rotation history:
-#: cohort 2 (r07): k8b, k9, j6, q7, er1, x18, t9, s11, u3, dq1;
-#: cohort 3 (r08): k7, k8c, j7, mv1, x2j, t10, u4, dq2,
-#: scale_zorder_layout, x15 — 20/20 green on first driver exposure.
-#: Cohort-5 rotation (round 11, VERDICT_r10 item #1): NINETEEN probes
-#: with 2-4 driver-green rounds rotate OUT — the annotated retirement
-#: pool (p1, p2_p5, f9_f11_f12, u3, j6, a8_a9, l1_l3, o1_o2, q7,
-#: s5_k4) plus k9, t9, x2j, x18, dq1 (4 greens each, cohorts 2-3),
-#: x4_multimodal_decode (its family now holds five finer-grained
-#: members), and j3, t4, x2d (driver-green since round 1, families
-#: still multiply covered) — and NINETEEN never-driver-verified probes
-#: rotate IN: the round-9 newcomers (x4i GIF decode, x4j GIF frame
-#: sample, x4k media sniffer, x2n streaming near-dup ingest, x2o/x2p
-#: product quantization + ADC, x5d portable HLL, x1d Bloom prefilter,
-#: x3l Luhn scrub) plus long-waiting twins j6b (as-of w/ tolerance),
-#: t7 (stream-stream inner), x2l (SemDeDup), x5c (heavy hitters), a11
-#: (gap-fill + moving average), prof2 (skew profile), and
-#: family-preserving swaps l1b (partition-pruned slicer, for l1_l3),
-#: p4 (validation routing, for p1/p2_p5), f10b (date-dim build, for
-#: f9_f11_f12), o5 (window rank, for o1_o2). Every §2 family keeps
-#: >=1 window representative (test_driver_window_family_coverage
-#: enforces this). Every rotated-out probe is still oracle-checked by
-#: bench.py / scripts/check_oracle.py each round. Rotation history:
-#: cohort 2 (r07): k8b, k9, j6, q7, er1, x18, t9, s11, u3, dq1;
-#: cohort 3 (r08): k7, k8c, j7, mv1, x2j, t10, u4, dq2,
-#: scale_zorder_layout, x15; cohort 4 (r09): x4g, x4h, ts1b,
-#: q13/q15/q17/q19, k6, k8, x16 — 30/30 green on first driver
-#: exposure; cohort 5 (r11): 19 swaps — 50/50 green (lifetime
-#: first-exposure record now 80/80).
-#: Cohort-6 rotation (round 12, VERDICT_r11 item #1): NINETEEN
-#: multi-driver-green probes rotate OUT — u4, j7, mv1 (4 greens each,
-#: cohort 3), q13/q15/q17/q19 (3 each, cohort 4; q1 + incoming q9
-#: keep the Q family), s11 (5, cohort 2), scale_zorder_layout (4,
-#: cohort 3; the scale family is bench/oracle-checked every round and
-#: is not a §2 required family), k3/t8 (driver-green since round 1;
-#: their families keep t1_t6/t7/k8/k8b plus incoming t11/k11),
-#: k6/k8c/k7 (3-4 greens; K keeps k8, k8b, k11), t10 (4), ts1b (3;
-#: incoming ts2 keeps the TS twin pair), x1_dedup_exact (since r1;
-#: x1d + incoming x1db keep x1), x2h (since r5; the x2 family keeps
-#: six members), x4g (3; x4 keeps six members) — and NINETEEN
-#: never-driver-verified probes rotate IN: fifteen round-11 newcomers
-#: (x4l av-container sniff, x4m QOI decode, x1db Bloom long[] bitmap,
-#: x19 mixture rebalance, dq3 PSI drift, x2q binary Hamming top-k,
-#: u5 DP noisy counts, o8 grouping sets, ts2 EWMA smoothing, mv2 CDC
-#: view maintenance, x20 corpus diff, er2 fuzzy match, t11
-#: watermark-bounded dedupe, s12 fixed-width source, k11
-#: write-audit-publish) plus four long-waiting twins (q9 profit by
-#: nation/year, u1c portable FPE structure hash, x2i near-dup
-#: connected components, s9 schema-evolution merge read).
-#: Cohort-7 rotation (round 13, VERDICT_r12 item #1): the rotation goal
-#: shifted from "retire multi-green" to "finish lifetime first-exposure
-#: coverage" (VERDICT r12 #7) — 71 probes had never been driver-
-#: verified while the machinery's lifetime record stood at 99/99 green.
-#: FORTY-EIGHT members leave (everything except the q1/t1_t6 anchors),
-#: all still oracle-checked every round by bench.py /
-#: scripts/check_oracle.py; FORTY-TWO never-driver-verified probes
-#: enter (the round-12/13 newcomers g1/g1b/g2, x2r/x2s/x2t/x2u, ts3,
-#: dq4, x4b, q2/q11/q12/q16/q20/q21, plus long-waiters q5/q8, a12/a13/
-#: a16/a18/a19, f16, f8_f13, u6, o6/o7, s10, ts1, prof1, x1c, x2k,
-#: x3i, x4e, x7/x8/x10/x12/x13/x14/x17), and SIX family-coverage keeps
-#: fill the rest — k5/p5/j1/l1_l3/x5d/er2, families with no
-#: never-verified member left, chosen for fewest greens or longest-ago
-#: verification (p5/j1 last green round 2, k5 round 7, l1_l3 round 10).
-#: Remaining never-driver-verified after cohort 7 (28 singles plus the
-#: TWENTY-THREE round-13 newcomers added after that rotation was
-#: rehearsed — ADVICE r13 fixed this count from "thirteen"): 51
-#: hash-checkable candidates for cohort 8's 42 free slots.
-#: Cohort-8 rotation (round 14, VERDICT_r13 item #1): anchors stay
-#: (q1, t1_t6); SIX family-coverage keeps are the least-recently-
-#: verified member of each family with no never-verified candidate
-#: left (s3b/p2/f11_f12/cube all last green round 2, l1b round 12,
-#: x5b round 12); FORTY-TWO never-driver-verified probes enter —
-#: every round-13 newcomer (g3-g7, ts4/ts5/ts6, u7/u8, er3/er4, mv3,
-#: scale_compaction_plan, j8, a20/a21, dq5, x3m, k12, x2v/x2w/x2rb)
-#: plus the oldest never-verified registry candidates (a1_a6, a8b,
-#: q3/q4/q6/q10/q14/q18/q22, t4b, x1e, x3h/x3j/x3k, x4c/x4d/x4f,
-#: x9, x11). NINE candidates wait for cohort 9 (family-redundant,
-#: deferred: q1b, q1sql, a14, a15, x4_binary_columns, x3g,
-#: scale_salted_agg, scale_time_travel, t2c) — after cohort 8 the
-#: lifetime ledger is 177/239 driver-verified. Cohort 9's pool is
-#: those nine plus the EIGHT round-14 newcomers registered after this
-#: rotation was rehearsed (g8 star components, j9 nearest as-of, x2y
-#: cluster accounting, o9 weighted median, a23 revenue concentration,
-#: scale_dynamic_pruning, x21 content-defined chunking, u9 erasure
-#: cascade): 17 candidates, so cohort 9 closes lifetime coverage with
-#: ~31 slots to spare for re-verification keeps.
-#: Cohort-9 rotation (round 15, VERDICT_r14 item #2 — CLOSES lifetime
-#: first-exposure coverage): anchors stay (q1, t1_t6); EIGHTEEN
-#: never-driver-verified probes enter — the nine family-redundant
-#: deferrals (q1b, q1sql, a14, a15, x4_binary_columns, x3g,
-#: scale_salted_agg, scale_time_travel, t2c), the eight round-14
-#: newcomers (g8, j9, x2y, o9, a23, scale_dynamic_pruning, x21, u9),
-#: plus u1_fpe_tokenize, NEWLY ELIGIBLE this round: the pyffx-compat
-#: rework (VERDICT r14 #1) gave it a hash-checked precomputed-token
-#: oracle, ending its rows-only exclusion. THIRTY re-verification
-#: keeps fill the rest — the least-recently-verified oracled probes
-#: repo-wide (last green round 2: f9, j4, j4b, a10b, o5b, rollup,
-#: x1b, x3a/b/c/d/e/f; round 6: f15, a10, o3, o4, x2b, x2e, x2f, f14,
-#: x3bcf, x2g; round 7: p3, s6) plus five family-coverage keeps
-#: for the families those leave unrepresented (dq1 r10, er1 r12,
-#: k9 r10, l1_l3 r13, x5c r12). After cohort 9
-#: every oracled probe registered before the rotation has ≥1 lifetime
-#: driver-window green; the thirty-six round-15 newcomers (j10_pit_join,
-#: dq6_functional_dependency_audit, x3n_boilerplate_ngram_scrub,
-#: x2z_embedding_dim_stats, a24_rfm_segmentation, scale_cbo_stats,
-#: t13_stream_full_outer_join, s13_corrupt_record_routing,
-#: x2ab_embedding_drift, ts7_holt_forecast, x22_cluster_safe_split,
-#: dq7_benford_audit, g9_degree_assortativity, x23_pps_sample,
-#: s14_xml_source, ts8_holt_winters_forecast, ts9_forecast_backtest,
-#: a25_price_volume_mix, t12_batch_stream_unification,
-#: x24_containment_pairs, dq8_order_reconciliation, f17_card_brand_luhn,
-#: s15_variant_shred, t14_state_store_inspection, s16_python_datasource,
-#: sql1_scripting_threshold_search, s17_python_stream_source,
-#: mv4_declarative_pipeline, q1p_pipe_syntax, f18_collation_groupby,
-#: scale_bucketed_star, dq9_observed_metrics, a26_cohort_ltv,
-#: a27_growth_accounting, scale_vacuum, o10_range_frame_trailing,
-#: x25_repeated_substring_spans, o11_gaps_islands,
-#: a28_path_transitions, scale_bloom_semijoin,
-#: x26_span_decontamination, a29_batch_sessionization,
-#: scale_salted_join, scale_stable_row_ids, g10_kcore,
-#: sql2_recursive_cte, t15_session_window_builtin,
-#: scale_aqe_coalesce, sql3_lateral_topk, o12_set_ops_all,
-#: o13_unpivot_melt, x27_vocab_coverage, a30_ab_assignment_srm,
-#: j12_temporal_fx, dq11_ks_drift, s18_debezium_envelope,
-#: api1_pandas_on_spark, x34_jl_projection, a31_fulfillment_latency,
-#: s19_multiline_csv, x35_cross_source_dup_matrix,
-#: f19_fiscal_445_yoy, o14_rolling_distinct, scale_exchange_reuse)
-#: were
-#: added after this rotation was rehearsed and wait for cohort 10,
-#: after which rotations are pure re-verification, oldest-green-first.
-#: Cohort-10 rotation (round 16, VERDICT_r15 item #5): the backlog of
-#: never-driver-exposed oracled probes stood at 65 (the round-15
-#: newcomers above plus the second-continuation additions) against 48
-#: free slots, and the required families k/u/x1/x4/x5/er/l/p have no
-#: backlog member — so: anchors stay (q1, t1_t6); EIGHT family keeps
-#: (least-recently-green per family: k3 r11, u1b r8, x1_dedup_exact
-#: r11, x4_multimodal_decode r10, x5d r13, er2 r13, l1b r14, p1 r10);
-#: FORTY backlog probes enter — registration order #1-#37 (a24-a31,
-#: api1, dq6-dq9/dq11, f17-f19, g9/g10, j10/j12, mv4, o10-o14, q1p,
-#: s13-s19, scale_aqe_coalesce, scale_bloom_semijoin) plus three
-#: required-family pulls from the backlog tail (x2z for x2, x3n for
-#: x3, x27 for x6 — x27 doubling as driver certification of its r16
-#: two-phase rewrite, pairing with a24's). TWENTY-FIVE remained for
-#: cohort 11 at that point (scale_bucketed_star/cbo_stats/
-#: exchange_reuse/salted_join/stable_row_ids/vacuum, sql1-sql3,
-#: t12-t15/t17, ts7-ts9, x22-x26, x2ab, x34, x35).
-#: Cohort-11 rotation (round 17, VERDICT_r16 item #1): the backlog
-#: grew to 42 — the 25 above, the sixteen round-16 newcomers (a32,
-#: a33, er5, f20, g11, prof3, ts10-ts12, u10, x2ac, x36, x37, x38,
-#: x40, x5e), and round 17's scale_aqe_skewjoin — against 48 free
-#: slots needing NINE family keeps (k/p/f/u/j/a/l/o/x1/x3/x4/dq/er
-#: minus the five families the backlog itself covers: f via f20, u
-#: via u10, a via a32/a33, er via er5, x5 via x5e — so keeps are
-#: k/p/j/l/o/x1/x3/x4/dq). 2 + 9 + 39 = 50: THREE backlog members
-#: defer to cohort 12 — x37/x38/x40, the newest r16 registrations,
-#: all from the 9-strong-in-window x6 family (oldest-registration-
-#: first custom; scale_aqe_skewjoin stays IN as this round's new
-#: mechanism, the x27/a24 certification pattern). Keeps are the
-#: least-recently-driver-green per family from the CORRECTNESS_r*
-#: ledger: k6 (r11), p2_p5 (r10), j5 (r7), l1_l3 (r15), pivot (r8),
-#: x1d (r12), x3ade (r12), x4g (r11), dq2 (r12). After this window
-#: every oracled probe registered before round 17 has ≥1 lifetime
-#: driver-window green and rotations become pure re-verification,
-#: oldest-green-first (cohort 12 starts with x37/x38/x40 plus any
-#: round-17 newcomers).
-#: ROWS-ONLY EXCLUSION (VERDICT_r13 item #7, permanent policy): the
-#: rows-only-by-nature probes — t5_rate_source (throughput),
-#: x5_approx_sketches (approximate); u1_fpe_tokenize LEFT this set in
-#: round 15 when it gained its pyffx-compat oracle — NEVER enter the
-#: window: a window slot spent on a rows-only check is a wasted hash
-#: slot (test_driver_window_contract enforces that every member
-#: carries an oracle). Each has hash-checked twins (t9/t10,
-#: x5b/x5c/x5d) covering its semantics.
 _DRIVER_ORDER = [
     # anchors (stability): the flagship star join (also entry()'s smoke
     # every round) and the streaming pipeline covering S1/S2/S4/K1/K2/
@@ -278,7 +91,7 @@ _DRIVER_ORDER = [
     "scale_aqe_skewjoin",
     # family-coverage keeps (test_driver_window_family_coverage):
     # least-recently-driver-green per family the backlog leaves
-    # unrepresented (ledger rounds in the block comment above).
+    # unrepresented (last-green rounds from CORRECTNESS_r*.json).
     "k6_cdc_latest_wins",            # last green r11
     "p2_p5_shape_defaults",          # last green r10
     "j5_range_predicate_join",       # last green r7

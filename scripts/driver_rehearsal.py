@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,6 +41,15 @@ from realtime_financial_transactions_data_pipeline_spark.tables import TABLE_NAM
 from scripts.check_oracle import canon_rows, numeric_kind_mismatches
 
 SF_DIR = "/root/testdata/sf0.01"
+
+
+def row_diff(left: list[tuple], right: list[tuple], a: str, b: str) -> str:
+    """Rows in only one of two canonical row lists (multiset
+    difference, first 5 of each side); zipped pairs of sorted rows
+    would misalign after the first missing row."""
+    lo = list((Counter(left) - Counter(right)).elements())[:5]
+    ro = list((Counter(right) - Counter(left)).elements())[:5]
+    return f"{a}-only {lo}, {b}-only {ro}"
 
 
 def main() -> None:
@@ -84,10 +94,9 @@ def main() -> None:
             continue
         problems = []
         if first != second:
-            diffs = [(a, b) for a, b in zip(first, second) if a != b][:2]
             problems.append(
-                f"UNSTABLE across invocations "
-                f"({len(first)} vs {len(second)} rows; first diffs {diffs})"
+                f"UNSTABLE across invocations ({len(first)} vs "
+                f"{len(second)} rows; {row_diff(first, second, 'first', 'second')})"
             )
         if p.oracle is not None:
             # Declared-type strictness: the driver's hasher is numeric-
@@ -96,10 +105,9 @@ def main() -> None:
             problems.extend(numeric_kind_mismatches(df2, con, p.oracle))
             oracle = canon_rows(con.execute(p.oracle).fetchdf())
             if second != oracle:
-                diffs = [(a, b) for a, b in zip(second, oracle) if a != b][:2]
                 problems.append(
                     f"ORACLE mismatch ({len(second)} vs {len(oracle)} rows; "
-                    f"first diffs {diffs})"
+                    f"{row_diff(second, oracle, 'spark', 'oracle')})"
                 )
         if problems:
             print(f"BAD   {name}: {'; '.join(problems)}")

@@ -153,3 +153,23 @@ def test_entry_module_exports_match_registry():
 
     assert list(entry.queries()) == list(registry.queries())
     assert entry.oracle_sql() == registry.oracle_sql()
+
+
+def test_entry_module_puts_its_own_checkout_on_sys_path(tmp_path):
+    """A copy of __spark_entry__ loaded from another directory must put
+    THAT directory on sys.path, so a second checkout's driver entry
+    imports its own package, not the canonical checkout's."""
+    import importlib.util
+    import shutil
+
+    shutil.copy(os.path.join(REPO, "__spark_entry__.py"), tmp_path)
+    spec = importlib.util.spec_from_file_location(
+        "_entry_copy", tmp_path / "__spark_entry__.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    saved = list(sys.path)
+    try:
+        spec.loader.exec_module(mod)
+        assert sys.path[0] == str(tmp_path)
+    finally:
+        sys.path[:] = saved

@@ -512,15 +512,35 @@ def test_per_group_topk_uses_window_group_limit(spark, sf_dir):
     At 100 TB this is the difference between shuffling k rows per
     group and shuffling every row. Pins o5 (top-2 orders per customer)
     and sql3 (LATERAL top-2 per nation, decorrelated to the same
-    shape)."""
+    shape). The similarity family's per-query top-k over a
+    corpus-sized candidate set must also carry the Partial heap before
+    the exchange and the Final one after it, for its literal k."""
     from realtime_financial_transactions_data_pipeline_spark.operators.relational import (
         o5_window_rank,
         sql3_lateral_topk,
+    )
+    from realtime_financial_transactions_data_pipeline_spark.operators.similarity import (
+        _PQ_TOPK,
+        _X2V_SHORTLIST,
+        _X2W_SHORT,
+        x2s_ivf_pq_search,
+        x2t_ivfpq_residual_search,
+        x2v_ivfpq_refine,
+        x2w_matryoshka_prefix_search,
     )
 
     for fn in (o5_window_rank, sql3_lateral_topk):
         plan = inspect.formatted_plan(fn(spark, sf_dir))
         assert "WindowGroupLimit" in plan, (fn.__name__, plan[:500])
+    for fn, k in (
+        (x2s_ivf_pq_search, _PQ_TOPK),
+        (x2t_ivfpq_residual_search, _PQ_TOPK),
+        (x2v_ivfpq_refine, _X2V_SHORTLIST),
+        (x2w_matryoshka_prefix_search, _X2W_SHORT),
+    ):
+        plan = inspect.formatted_plan(fn(spark, sf_dir))
+        for mode in ("Partial", "Final"):
+            assert f"row_number(), {k}, {mode}" in plan, (fn.__name__, mode)
 
 
 def test_er5_snm_no_global_window_no_theta_join(spark, sf_dir):

@@ -304,48 +304,6 @@ def test_q21_decorrelation_matches_exists_semantics(spark, lines):
     assert got == dict(expected)
 
 
-# staged_topk must equal the single-window top-k on ANY input,
-# including heavy ties (broken by the id column), keys with < k rows,
-# and every row hashing into the same salt bucket.
-_topk_rows = st.lists(
-    st.tuples(st.integers(0, 2), st.integers(0, 50), st.integers(0, 5)),
-    min_size=1,
-    max_size=40,
-)
-
-
-@given(rows=_topk_rows, k=st.integers(1, 4), fanout=st.sampled_from([1, 2, 8]))
-@settings(**_SETTINGS)
-def test_staged_topk_equals_single_window(spark, rows, k, fanout):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
-        staged_topk,
-    )
-
-    # unique id per row = the total-order tiebreak + the salt source
-    df = spark.createDataFrame(
-        [(key, score, i) for i, (key, score, _)
-         in enumerate(rows)],
-        "key long, score long, rid long",
-    )
-    order = [F.col("score"), F.col("rid")]
-    w = Window.partitionBy("key").orderBy(*order)
-    direct = {
-        (r.key, r.rid, r.rank)
-        for r in df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .collect()
-    }
-    staged = {
-        (r.key, r.rid, r._tk_rank)
-        for r in staged_topk(df, ["key"], order, k, salt_col="rid",
-                             fanout=fanout).collect()
-    }
-    assert staged == direct
-
-
 # Degree-ordered triangle enumeration must equal brute force on ANY
 # graph — random graphs exercise orientation ties, multi-hub overlap,
 # and wedge-closure corner cases the hand-built shapes miss.

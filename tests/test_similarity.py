@@ -414,11 +414,9 @@ def test_x2v_refine_reranks_within_adc_shortlist(spark):
     distance from the raw embeddings), and refine can only improve the
     ADC ranking's agreement with the exact ranking, never change the
     candidate universe."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from realtime_financial_transactions_data_pipeline_spark.operators.scale import (
-        staged_topk,
-    )
     from realtime_financial_transactions_data_pipeline_spark.operators.similarity import (
         _X2V_SHORTLIST,
         _ivfpq_residual_scored,
@@ -430,15 +428,12 @@ def test_x2v_refine_reranks_within_adc_shortlist(spark):
     sf = "/root/testdata/sf0.001"
     refined = x2v_ivfpq_refine(spark, sf).collect()
     assert refined, "refine returned nothing"
+    w = Window.partitionBy("q_id").orderBy("qdist", "vec_id")
     shortlist = {
         (r.q_id, r.vec_id)
-        for r in staged_topk(
-            _ivfpq_residual_scored(spark, sf),
-            ["q_id"],
-            [F.col("qdist"), F.col("vec_id")],
-            _X2V_SHORTLIST,
-            salt_col="vec_id",
-        )
+        for r in _ivfpq_residual_scored(spark, sf)
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _X2V_SHORTLIST)
         .select("q_id", "vec_id")
         .collect()
     }
