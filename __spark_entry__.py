@@ -14,12 +14,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# This file's own checkout; a loader that sets no ``__file__`` gets
-# $SPARK_GRAFT_ROOT, else the working directory.
+# This file's own checkout; a loader that sets no ``__file__`` gets the
+# canonical checkout path.
 _ROOT = (
     os.path.dirname(os.path.abspath(__file__))
     if "__file__" in globals()
-    else os.environ.get("SPARK_GRAFT_ROOT", os.getcwd())
+    else "/root/repo"
 )
 if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)

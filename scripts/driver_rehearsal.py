@@ -69,11 +69,14 @@ def main() -> None:
     probes = all_probes()
     # default: the driver's 50-probe window; `--all` rehearses EVERY
     # registered probe (catches scratch races / nondeterminism in
-    # side-effecting probes outside the window); names select a subset.
+    # side-effecting probes outside the window); names rehearse exactly
+    # those probes, in the window or not.
     names = list(_DRIVER_ORDER)
     if "--all" in only:
         only.discard("--all")
         names = list(probes)
+    elif only:
+        names = sorted(only)
     n_bad = n_ok = 0
     for name in names:
         if only and name not in only:

@@ -173,3 +173,21 @@ def test_entry_module_puts_its_own_checkout_on_sys_path(tmp_path):
         assert sys.path[0] == str(tmp_path)
     finally:
         sys.path[:] = saved
+
+
+def test_entry_module_without_file_falls_back_to_canonical_checkout(
+    tmp_path, monkeypatch
+):
+    """A loader that sets no ``__file__`` gets the canonical checkout,
+    whatever the working directory."""
+    monkeypatch.chdir(tmp_path)
+    with open(os.path.join(REPO, "__spark_entry__.py")) as fh:
+        code = compile(fh.read(), "__spark_entry__", "exec")
+    ns = {"__name__": "_entry_no_file"}
+    saved = list(sys.path)
+    try:
+        exec(code, ns)
+        assert ns["_ROOT"] == "/root/repo"
+        assert "/root/repo" in sys.path
+    finally:
+        sys.path[:] = saved
