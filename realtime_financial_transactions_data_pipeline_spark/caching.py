@@ -1,67 +1,35 @@
-"""Bounded sharing cache for probe-internal persisted DataFrames.
+"""Cross-probe cache for derived DataFrames, plus on-disk input fixtures.
 
-Several operators persist a shared intermediate (x2a's shingle pass,
-x6's curated snapshot, x2h's centroids) that two plan branches consume.
-A bare ``.persist()`` leaks: the probe returns a lazy DataFrame, so
-there is no safe point inside the operator to unpersist, and across an
-80-probe bench session sharing one SparkSession the cached blocks pile
-up until the JVM's ContextCleaner happens to collect them.
+``memo_persist`` keeps one persisted frame per (Spark application,
+key) for derived relations several probes share: the word-shingle
+pass, the simhash fingerprints, the curated corpus snapshot, the
+similarity family's scored pairs, centroids and codes. It is the only
+cross-call cache in the engine and it is safe under threads: lookup,
+build and insert run under one lock, so concurrent callers of one key
+get one build and one frame.
 
-``shared_persist`` keeps at most the CURRENT operator invocation's
-caches alive: persisting a new DataFrame first unpersists every cache
-registered by earlier invocations. Unpersisting is always
-semantics-preserving in Spark (a consumer of an unpersisted plan simply
-recomputes), so the only assumption is the harness's actual access
-pattern — each probe's result is consumed before the next probe runs.
+Reuse inside one probe does not go through here: a frame two plan
+branches of the same query consume is materialized with
+``localCheckpoint(eager=False)``, which registers nothing across calls
+and leaves nothing for another call to evict.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_LIVE: list[DataFrame] = []
-
-
-def shared_persist(df: DataFrame, evict_previous: bool = True) -> DataFrame:
-    """Persist ``df`` for intra-operator reuse. With the default
-    ``evict_previous=True`` every cache registered by EARLIER calls is
-    unpersisted first — correct for operators that persist exactly one
-    intermediate (all current callers). An operator persisting several
-    intermediates must pass ``evict_previous=False`` from its second
-    call on, or it would evict its own first cache mid-build (silent
-    recompute, never a wrong result)."""
-    if evict_previous:
-        for old in _LIVE:
-            try:
-                old.unpersist(blocking=False)
-            except Exception:  # session may be gone in teardown paths
-                pass
-        _LIVE.clear()
-    df = df.persist()
-    _LIVE.append(df)
-    return df
-
-
 _MEMO: dict[tuple, DataFrame] = {}
-# 32, LRU: round 12 ran with 4/FIFO and the shingle/fingerprint passes
-# x2j/x16/x18/x2d reuse were evicted by newer entries (g_edges, PQ/IVF
-# panels) before those probes' min-of-2 reruns — warm-cache reruns lost
-# 2.6-6.8x (VERDICT r12 task #2). Round 13 routes the similarity
-# family's shared frames through here too (exact_cos_scored, ivf_cents,
-# pq_raw/pq_res a2+c1+sub, pq_res_src, exact_l2_top5 — VERDICT r12 #6).
-# Round 17 (optimization): the registry now carries 19 DISTINCT memo
-# keys (corpus_grams/simhash, pair_counts, g_pairs/g_triangles,
-# curated, exact_cos_scored, lsh_bucketed, ivf_cents, kmeans_assign,
-# pq_raw_{a2,c1,sub}, pq_res_{a2,c1,sub}, pq_res_src, ivfpq_res_sc,
-# exact_l2_top5) — capacity 16 THRASHED the alphabetical x2* stretch
-# (x2r cycles through nearly all of them: measured 6.1 s at the r17
-# close with 16 keys live vs 17.2 s in the round-17 baseline after two
-# more keys landed). 32 holds the whole suite's working set with
-# headroom; frames are sf-bounded derived relations (scores/ids/grams,
-# never payload columns), far under the 48g local heap and a rounding
-# error on a cluster's storage fraction.
+# Re-entrant because builders nest: the ivf_assign_ranked builder
+# calls ivf_centroids_memo.
+_MEMO_LOCK = threading.RLock()
+# LRU capacity: must hold the suite's ~19 distinct memo keys, or the
+# alphabetical x2* stretch (x2r cycles through nearly all of them)
+# evicts frames before their re-invocations and rebuilds them. The
+# frames are sf-bounded derived relations (scores, ids, grams), never
+# payload columns.
 _MEMO_CAPACITY = 32
 
 
@@ -70,12 +38,11 @@ def memo_persist(
 ) -> DataFrame:
     """CROSS-probe keyed cache for derived frames several probes share
     (the word-shingle pass feeding x2a AND x2b; the simhash fingerprint
-    pass feeding x2d AND x2i). ``shared_persist`` cannot express this —
-    its caches die at the next operator's persist — while these frames
-    are deterministic functions of (table files, derivation), so reuse
-    across probes is semantics-free and saves the suite a full
-    re-derivation each time (the round-5 suite spent ~23 % of wall in
-    the similarity family, most of it duplicated shingling/hashing).
+    pass feeding x2d AND x2i). These frames are deterministic functions
+    of (table files, derivation), so reuse across probes is
+    semantics-free and saves the suite a full re-derivation each time
+    (the round-5 suite spent ~23 % of wall in the similarity family,
+    most of it duplicated shingling/hashing).
 
     POLICY (VERDICT r17 #2): this cache holds shared DERIVED relations
     only — scores, ids, grams, centroids, codes — never a probe's final
@@ -86,37 +53,42 @@ def memo_persist(
     result (x2i's component labels) is flagged per-run in BENCH_DETAIL
     as ``queries_memo_hit`` so timings are never misread.
 
-    Keys are namespaced by the Spark application so a cache from a
-    stopped session is never served. LRU-bounded at
-    ``_MEMO_CAPACITY`` entries — a hit refreshes recency, so the
-    least-recently-USED frame is evicted, not the oldest-built one.
-    Eviction only unpersists (consumers of
-    an evicted frame recompute, never err). This is a probe-harness
-    amortization: the operators themselves still accept arbitrary
-    DataFrames, and at corpus scale the same sharing is done by writing
-    the derived table once (SURVEY §6 layout step)."""
+    Single-flight: concurrent callers of one key wait for the first
+    build and all get its frame. Keys are namespaced by the Spark
+    application so a cache from a stopped session is never served.
+    LRU-bounded at ``_MEMO_CAPACITY`` entries — a hit refreshes
+    recency, so the least-recently-USED frame is evicted, not the
+    oldest-built one. Eviction only unpersists (consumers of an evicted
+    frame recompute, never err). This is a probe-harness amortization:
+    the operators themselves still accept arbitrary DataFrames, and at
+    corpus scale the same sharing is done by writing the derived table
+    once (SURVEY §6 layout step)."""
     full_key = (spark.sparkContext.applicationId, *key)
-    df = _MEMO.get(full_key)
-    if df is not None:
-        # LRU touch: move to the end so a frame that keeps getting
-        # re-requested (min-of-2 reruns) outlives one-shot newcomers.
-        _MEMO[full_key] = _MEMO.pop(full_key)
-        return df
-    while len(_MEMO) >= _MEMO_CAPACITY:
-        old = _MEMO.pop(next(iter(_MEMO)))  # LRU: least-recently-used first
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-    df = builder().persist()
-    # NOT eagerly materialized, deliberately (r17 optimization note):
-    # racing branches of a first consumer can duplicate partition
-    # compute ("Block rdd_N already exists" warnings), but an eager
-    # count() per build was MEASURED SLOWER overall — it serializes
-    # the family's ~10 builds into driver-sequential jobs (x2r cold
-    # 27.5 s lazy vs 50.1 s eager), while the lazy form overlaps the
-    # builds inside the consumer's one wide job.
-    _MEMO[full_key] = df
+    with _MEMO_LOCK:
+        df = _MEMO.pop(full_key, None)
+        if df is None:
+            # NOT eagerly materialized, deliberately (r17 optimization
+            # note): racing branches of a first consumer can duplicate
+            # partition compute ("Block rdd_N already exists" warnings),
+            # but an eager count() per build was MEASURED SLOWER overall
+            # — it serializes the family's ~10 builds into
+            # driver-sequential jobs (x2r cold 27.5 s lazy vs 50.1 s
+            # eager), while the lazy form overlaps the builds inside the
+            # consumer's one wide job. It also keeps the lock short: most
+            # builders only build a lazy plan. The few that run jobs
+            # themselves (simhash_cc's label loop, g_triangles' adjacency
+            # collect) hold it, and so stall every other memo call, for
+            # those jobs.
+            df = builder().persist()
+        _MEMO[full_key] = df  # (re)insert last: most recently used
+        # Evict after the build, so entries a nested builder inserted
+        # count too; the entry just inserted is last, never evicted.
+        while len(_MEMO) > _MEMO_CAPACITY:
+            old = _MEMO.pop(next(iter(_MEMO)))
+            try:
+                old.unpersist(blocking=False)
+            except Exception:  # a stopped session's frame
+                pass
     return df
 
 

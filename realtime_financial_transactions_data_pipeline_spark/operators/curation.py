@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from realtime_financial_transactions_data_pipeline_spark.caching import shared_persist
 from realtime_financial_transactions_data_pipeline_spark.functions.compat import dround
 from realtime_financial_transactions_data_pipeline_spark.operators.dedup import (
     jaccard_pairs_exact,
@@ -89,11 +88,11 @@ def curate(docs: DataFrame, quality_min: float = _QUALITY_MIN) -> DataFrame:
         (F.length("text") > 0) & (F.col("quality") >= quality_min)
     )
     # The gated set feeds BOTH the pair join and the anti-join's left
-    # side; persist so the dedup window + quality regexes run once.
+    # side; a lazy localCheckpoint materializes it once, on the first
+    # job that reads it, so the dedup window + quality regexes run once.
     # (At cluster scale this is where you'd checkpoint the curated
     # snapshot anyway — it IS the dataset being produced.)
-    gated = shared_persist(gated)
-    return drop_near_duplicates(gated)
+    return drop_near_duplicates(gated.localCheckpoint(eager=False))
 
 
 #: Shared CTE chain replaying dedup -> quality gate -> near-dup drop;
@@ -211,19 +210,14 @@ def contamination_check(
         word_shingles,
     )
 
-    from realtime_financial_transactions_data_pipeline_spark.caching import (
-        shared_persist,
-    )
-
-    # Persisted: three plan branches consume the shingle pass (the
-    # benchmark gram set, the training posting list, and the final
-    # per-group tally) — left lazy, each branch re-shingles the whole
-    # corpus (r17 optimization: x7 measured 4.8 -> 2.0 s min at sf0.1).
-    sh = shared_persist(
-        docs.select(
-            F.col(id_col), F.col(group_col), word_shingles(text_col, k).alias("grams")
-        )
-    )
+    # Materialized once (lazy localCheckpoint): three plan branches
+    # consume the shingle pass (the benchmark gram set, the training
+    # posting list, and the final per-group tally) — left as a plain
+    # plan, each branch re-shingles the whole corpus (r17 optimization:
+    # x7 measured 4.8 -> 2.0 s min at sf0.1).
+    sh = docs.select(
+        F.col(id_col), F.col(group_col), word_shingles(text_col, k).alias("grams")
+    ).localCheckpoint(eager=False)
     bench_grams = (
         sh.filter(bench_pred).select(F.explode("grams").alias("gram")).distinct()
     )
@@ -270,7 +264,7 @@ def x7_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus guarantee non-zero hits)."""
     from realtime_financial_transactions_data_pipeline_spark.tables import widen_scan
 
-    # widen_scan (r18): the shared shingle pass (persisted, consumed by
+    # widen_scan (r18): the shared shingle pass (checkpointed, consumed by
     # three branches) otherwise builds on the single-file scan's one task.
     d = widen_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")

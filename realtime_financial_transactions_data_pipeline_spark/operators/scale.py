@@ -138,27 +138,6 @@ def current_table_path(root: str) -> str:
         return os.path.join(root, fh.read().strip())
 
 
-def sweep_stale_generations(root: str) -> list[str]:
-    """Remove every generation directory that is not the ``CURRENT``
-    pointer's target. A compaction crash before the pointer flip leaves
-    a complete-but-unreferenced ``gen=N+1`` directory; repeated crashes
-    can leave several. They are invisible to readers (the pointer never
-    moved) but hold disk, and ``compact_table``'s own
-    ``rmtree(new, ...)`` only clears the ONE path it is about to write.
-    Called at compaction start so the table never accumulates strays.
-    Returns the swept directory names (crash-window test in
-    tests/test_scale.py)."""
-    import shutil
-
-    live = os.path.basename(current_table_path(root))
-    swept = []
-    for name in os.listdir(root):
-        if name.startswith("gen=") and name != live:
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-            swept.append(name)
-    return swept
-
-
 def compact_table(spark: SparkSession, root: str, target_files: int = 8) -> int:
     """Small-files compaction — the maintenance pass every streaming
     sink needs: micro-batches leave one file per trigger per partition,
@@ -182,7 +161,7 @@ def compact_table(spark: SparkSession, root: str, target_files: int = 8) -> int:
     and asserts a complete table survives)."""
     import shutil
 
-    sweep_stale_generations(root)
+    vacuum_generations(root, keep_last=0)
     src = current_table_path(root)
     gen = int(os.path.basename(src).split("=")[1])
     df = spark.read.parquet(src)
@@ -427,7 +406,9 @@ def read_generation(spark: SparkSession, root: str, gen: int | None = None) -> D
 
 def vacuum_generations(root: str, keep_last: int = 2) -> list[str]:
     """Drop all but the newest ``keep_last`` generations (never the
-    live one). Returns swept directory names."""
+    live one). Returns swept directory names. ``keep_last=0`` keeps only
+    the live one: ``compact_table`` runs that first, to sweep the
+    complete-but-unreferenced generations crashed compactions leave."""
     import shutil
 
     live = os.path.basename(current_table_path(root))
@@ -435,7 +416,7 @@ def vacuum_generations(root: str, keep_last: int = 2) -> list[str]:
         (n for n in os.listdir(root) if n.startswith("gen=")),
         key=lambda n: int(n.split("=")[1]),
     )
-    keep = set(gens[-keep_last:]) | {live}
+    keep = set(gens[max(len(gens) - keep_last, 0):]) | {live}
     swept = []
     for name in gens:
         if name not in keep:

@@ -1771,11 +1771,9 @@ def x2v_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate(zip_with(q_emb, c_emb, (a, b) -> (a - b) * (a - b)),"
         " 0.0D, (s, v) -> s + v)"
     )
-    rr = (
-        ce.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(qe.join(F.broadcast(short.select("q_id").distinct()), "q_id")), "q_id")
-        .withColumn("d2", d2)
-    )
+    rr = ce.join(
+        F.broadcast(qe.join(F.broadcast(short), "q_id")), "vec_id"
+    ).withColumn("d2", d2)
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
     return (
         rr.withColumn("rnk", F.row_number().over(w))

@@ -177,3 +177,55 @@ def test_memo_eviction_unpersists_not_errors(spark, empty_memo, monkeypatch):
     df1 = caching.memo_persist(spark, ("ev", 1), lambda: spark.range(5))
     caching.memo_persist(spark, ("ev", 2), lambda: spark.range(7))
     assert df1.count() == 5  # recomputes fine post-eviction
+
+
+def test_memo_single_flight_under_threads(spark, empty_memo):
+    """Concurrent misses on one key build once: every caller waits for
+    the first build and gets the same frame, the one the cache holds."""
+    import sys
+    import threading
+    import time
+
+    builds: list[int] = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.3)
+        return spark.range(3)
+
+    got: list = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(
+                target=lambda: got.append(caching.memo_persist(spark, ("sf",), build))
+            )
+            for _ in range(4)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert len(got) == 4 and all(df is got[0] for df in got)
+    assert list(empty_memo.values()) == [got[0]]
+
+
+def test_memo_nested_builds_stay_within_capacity(spark, empty_memo, monkeypatch):
+    """A builder may call memo_persist for another key (ivf_assign_ranked
+    builds on ivf_centroids_memo); eviction runs after the build, so the
+    nested insert cannot push the cache past capacity, and the outer
+    entry is the one kept."""
+    monkeypatch.setattr(caching, "_MEMO_CAPACITY", 1)
+
+    def outer():
+        inner = caching.memo_persist(spark, ("inner",), lambda: spark.range(2))
+        return inner.crossJoin(spark.range(3).toDF("o"))
+
+    df = caching.memo_persist(spark, ("outer",), outer)
+    assert list(empty_memo.values()) == [df]
+    assert df.count() == 6

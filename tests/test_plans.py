@@ -514,7 +514,9 @@ def test_per_group_topk_uses_window_group_limit(spark, sf_dir):
     and sql3 (LATERAL top-2 per nation, decorrelated to the same
     shape). The similarity family's per-query top-k over a
     corpus-sized candidate set must also carry the Partial heap before
-    the exchange and the Final one after it, for its literal k."""
+    the exchange and the Final one after it, for its literal k, exactly
+    once: x2v's shortlist feeds both sides of its refine join through
+    one reference, not two copies of the top-k."""
     from realtime_financial_transactions_data_pipeline_spark.operators.relational import (
         o5_window_rank,
         sql3_lateral_topk,
@@ -540,7 +542,7 @@ def test_per_group_topk_uses_window_group_limit(spark, sf_dir):
     ):
         plan = inspect.formatted_plan(fn(spark, sf_dir))
         for mode in ("Partial", "Final"):
-            assert f"row_number(), {k}, {mode}" in plan, (fn.__name__, mode)
+            assert plan.count(f"row_number(), {k}, {mode}") == 1, (fn.__name__, mode)
 
 
 def test_er5_snm_no_global_window_no_theta_join(spark, sf_dir):
@@ -567,10 +569,10 @@ def test_er5_snm_no_global_window_no_theta_join(spark, sf_dir):
         assert r.n_pairs == n - d, (d, r.n_pairs, n)
 
 
-def _engine_module_nodes():
+def _engine_module_nodes(*extra: str):
     """(module label, AST node) for every node of every module in the
     engine's query-building packages: operators/, streaming/, sources/
-    and plans/."""
+    and plans/, plus the package modules named in ``extra``."""
     import ast
     import pathlib
 
@@ -578,10 +580,11 @@ def _engine_module_nodes():
         pathlib.Path(__file__).resolve().parents[1]
         / "realtime_financial_transactions_data_pipeline_spark"
     )
-    for sub in ("operators", "streaming", "sources", "plans"):
-        for path in sorted(pkg.glob(f"{sub}/*.py")):
-            for node in ast.walk(ast.parse(path.read_text())):
-                yield f"{sub}/{path.name}", node
+    paths = [p for sub in ("operators", "streaming", "sources", "plans")
+             for p in sorted(pkg.glob(f"{sub}/*.py"))]
+    for path in paths + [pkg / name for name in extra]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            yield path.relative_to(pkg).as_posix(), node
 
 
 def test_no_shuffle_width_conf_mutation_in_batch_operators():
@@ -623,3 +626,35 @@ def test_no_fixed_tmp_paths_in_engine_modules():
         and node.value.startswith("/tmp/")
     ]
     assert offenders == [], f"module names a fixed /tmp path: {offenders}"
+
+
+def test_every_persist_is_unpersisted_in_the_same_function():
+    """Tripwire: an engine function that calls ``.persist()`` or
+    ``.cache()`` also calls ``.unpersist()`` (calls inside functions it
+    defines count for those functions, not for it). Storage is shared
+    by every query on the session, and a frame no code unpersists stays
+    cached until the JVM's cleaner happens to collect it. Reuse across
+    calls goes through ``caching.memo_persist``, whose LRU eviction
+    unpersists; reuse inside one query goes through
+    ``localCheckpoint``."""
+    import ast
+
+    def own_calls(fn) -> set[str]:
+        names, stack = set(), list(fn.body)
+        while stack:
+            node = stack.pop()
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                names.add(node.func.attr)
+            stack.extend(ast.iter_child_nodes(node))
+        return names
+
+    offenders = [
+        f"{mod}:{node.lineno} {node.name}"
+        for mod, node in _engine_module_nodes("caching.py")
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and (calls := own_calls(node)) & {"persist", "cache"}
+        and "unpersist" not in calls
+    ]
+    assert offenders == [], f"persist without unpersist: {offenders}"

@@ -1,13 +1,19 @@
 """Batch probes are isolated from the caller's session and from other
 calls: every probe that writes files writes under its own
-``registry.probe_scratch()`` root, and probe-local settings live in a
-writer option or a child session, never in the caller's SQLConf."""
+``registry.probe_scratch()`` root, probe-local settings live in a
+writer option or a child session, never in the caller's SQLConf, and
+derived frames shared across calls come from the single-flight
+``caching.memo_persist``."""
 
 from __future__ import annotations
 
 import threading
 import time
 
+from realtime_financial_transactions_data_pipeline_spark.operators.curation import (
+    x6_corpus_curation,
+    x7_contamination_check,
+)
 from realtime_financial_transactions_data_pipeline_spark.operators.quality import (
     dq4_schema_drift,
 )
@@ -21,8 +27,21 @@ from realtime_financial_transactions_data_pipeline_spark.operators.scale import 
     scale_aqe_skewjoin,
     scale_balanced_write,
 )
+from realtime_financial_transactions_data_pipeline_spark.operators.similarity import (
+    x2t_ivfpq_residual_search,
+)
 
-_FILE_PROBES = (k13_deletion_vectors, dq4_schema_drift)
+#: File-writing probes (k13, dq4), a memo consumer (x6), a probe that
+#: checkpoints a frame its own branches share (x7), and one whose memo
+#: builders nest (x2t: the IVF assignment builder calls the centroid
+#: memo).
+_CONCURRENT_PROBES = (
+    k13_deletion_vectors,
+    dq4_schema_drift,
+    x6_corpus_curation,
+    x7_contamination_check,
+    x2t_ivfpq_residual_search,
+)
 
 
 def _values(df):
@@ -30,11 +49,11 @@ def _values(df):
 
 
 def test_concurrent_batch_probe_calls_match_serial(spark, sf_dir):
-    """Two threads each for k13 and dq4, all at once on one session,
-    each get the serial result: no shared root, no wipe under another
-    call's files."""
-    serial = [_values(p(spark, sf_dir)) for p in _FILE_PROBES]
-    calls = [p for p in _FILE_PROBES for _ in range(2)]
+    """Two threads each per probe, all at once on one session, each get
+    the serial result: no shared root, no wipe under another call's
+    files, no cache pulled from under another call. The threads run
+    first, so they can race on memo keys no earlier test built."""
+    calls = [p for p in _CONCURRENT_PROBES for _ in range(2)]
     results: dict[int, list] = {}
     errors: list[Exception] = []
 
@@ -51,6 +70,7 @@ def test_concurrent_batch_probe_calls_match_serial(spark, sf_dir):
         t.join(timeout=300)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
+    serial = [_values(p(spark, sf_dir)) for p in _CONCURRENT_PROBES]
     assert [results[i] for i in range(len(calls))] == [s for s in serial for _ in range(2)]
 
 

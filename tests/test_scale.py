@@ -157,8 +157,9 @@ def test_compaction_crash_windows_leave_readable_table(spark, tmp_path, monkeypa
 def test_compaction_sweeps_stale_generations(spark, tmp_path, monkeypatch):
     """Crashes before the pointer flip strand complete-but-unreferenced
     generation dirs; repeated crashes strand several. The sweep at
-    compaction start must remove every non-CURRENT generation — not
-    just the one the new write is about to overwrite."""
+    compaction start (``vacuum_generations(root, keep_last=0)``) must
+    remove every non-CURRENT generation — not just the one the new
+    write is about to overwrite."""
     import os as _os
 
     root = str(tmp_path / "strays")
@@ -174,7 +175,7 @@ def test_compaction_sweeps_stale_generations(spark, tmp_path, monkeypatch):
         "gen=0", "gen=1", "gen=5",
     ]
 
-    swept = scale.sweep_stale_generations(root)
+    swept = scale.vacuum_generations(root, keep_last=0)
     assert sorted(swept) == ["gen=1", "gen=5"]
     assert [n for n in _os.listdir(root) if n.startswith("gen=")] == ["gen=0"]
     # The live generation is untouched and readable.
@@ -295,6 +296,7 @@ def test_time_travel_generations_retained_and_vacuumed(spark, tmp_path):
     )
     assert read_generation(spark, root, 0).count() == 2
     assert read_generation(spark, root).collect()[0].v in (12.0, 30.0)
+    assert vacuum_generations(root, keep_last=5) == []  # more than exist
     swept = vacuum_generations(root, keep_last=2)
     assert swept == ["gen=0"]
     with _pytest.raises(FileNotFoundError, match="gen=0"):
