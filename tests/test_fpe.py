@@ -4,6 +4,9 @@ operators/tokenization.py docstrings."""
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 import pytest
 
 from realtime_financial_transactions_data_pipeline_spark.functions import fpe
@@ -152,6 +155,28 @@ def test_portable_mode_rejects_non_test_keys():
     make_fpe_tokenizer(TEST_KEY, portable=True)  # allowed
 
 
+_UDF_PANS = [
+    "12",                    # minimum domain
+    "4556737586899855",      # 16 (the PAN hot path)
+    "455673758689985",       # odd length -> unbalanced halves
+    "4556737586899855123",   # 19 (ISO max)
+    "0000000000000001",      # leading zeros survive the int round-trip
+]
+
+
+def _udf_and_want(tokenizer: str):
+    """The tokenizer UDF and its driver-side token function (None where
+    the UDF nulls the PAN: pyffx's UDF is 13-19 only)."""
+    if tokenizer == "pyffx":
+        return fpe.make_pyffx_tokenizer(KEY), (
+            lambda p: fpe.pyffx_compat_token(KEY, p) if 13 <= len(p) <= 19 else None
+        )
+    portable = tokenizer == "portable"
+    return fpe.make_fpe_tokenizer(KEY, portable=portable), (
+        lambda p: str(int(fpe.encrypt_digits(KEY, p, portable=portable))).zfill(16)
+    )
+
+
 @pytest.mark.parametrize("tokenizer", ["blake2b", "portable", "pyffx"])
 def test_udf_tokens_equal_encrypt_digits(spark, tokenizer):
     """The UDF and the library functions share one cipher per tokenizer;
@@ -161,29 +186,88 @@ def test_udf_tokens_equal_encrypt_digits(spark, tokenizer):
     inversion). pyffx's UDF is 13-19 only, so it nulls "12"."""
     from pyspark.sql import functions as F
 
-    pans = [
-        "12",                    # minimum domain
-        "4556737586899855",      # 16 (the PAN hot path)
-        "455673758689985",       # odd length -> unbalanced halves
-        "4556737586899855123",   # 19 (ISO max)
-        "0000000000000001",      # leading zeros survive the int round-trip
-    ]
-    if tokenizer == "pyffx":
-        udf = fpe.make_pyffx_tokenizer(KEY)
-
-        def want(p):
-            return fpe.pyffx_compat_token(KEY, p) if 13 <= len(p) <= 19 else None
-    else:
-        portable = tokenizer == "portable"
-        udf = fpe.make_fpe_tokenizer(KEY, portable=portable)
-
-        def want(p):
-            return str(int(fpe.encrypt_digits(KEY, p, portable=portable))).zfill(16)
-
-    df = spark.createDataFrame([(p,) for p in pans], "pan string")
+    udf, want = _udf_and_want(tokenizer)
+    df = spark.createDataFrame([(p,) for p in _UDF_PANS], "pan string")
     got = {r.pan: r.tok for r in df.withColumn("tok", udf(F.col("pan"))).collect()}
-    for p in pans:
+    for p in _UDF_PANS:
         assert got[p] == want(p), p
+
+
+@pytest.mark.parametrize("tokenizer", ["blake2b", "pyffx"])
+def test_tokenizer_task_sheds_zip_importers(tmp_path, tokenizer):
+    """The tokenizer body drops the zipimporters cached in
+    ``sys.path_importer_cache`` (PySpark's per-task
+    ``importlib.invalidate_caches()`` re-reads each one's archive before
+    CPython 3.13), leaves its tokens unchanged, and a module of the same
+    archive that was not imported yet still imports."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = str(tmp_path / "graftzip.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("graftzip/__init__.py", "")
+        z.writestr("graftzip/seen/__init__.py", "")
+        z.writestr("graftzip/unseen/__init__.py", "VALUE = 7\n")
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("graftzip.seen")
+        assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+
+        udf, want = _udf_and_want(tokenizer)
+        (got,) = udf.func(iter([pd.Series(_UDF_PANS)]))
+        assert [None if pd.isna(t) else t for t in got] == [want(p) for p in _UDF_PANS]
+        left = [p for p, f in sys.path_importer_cache.items()
+                if isinstance(f, zipimport.zipimporter)]
+        assert left == []
+        assert importlib.import_module("graftzip.unseen").VALUE == 7
+    finally:
+        sys.path.remove(archive)
+        for name in [m for m in sys.modules if m.partition(".")[0] == "graftzip"]:
+            del sys.modules[name]
+        for path in [p for p in sys.path_importer_cache if p.startswith(archive)]:
+            del sys.path_importer_cache[path]
+
+
+def test_reused_worker_after_tokenizer_task_holds_no_zip_importer(spark):
+    """On a real Python worker: the task after a tokenizer task finds no
+    zipimporter in its import cache, so the ``invalidate_caches()``
+    PySpark ran before it read no archive. Spark pools Python workers
+    per environment, so a unique ``sc.environment`` entry gives this test
+    a fresh pool; every job has one partition, so all three tasks run in
+    that pool's single reused worker (the pids must agree)."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("string")
+    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        import os
+        import sys
+        import zipimport
+
+        n = sum(isinstance(f, zipimport.zipimporter)
+                for f in sys.path_importer_cache.values())
+        for batch in it:
+            yield batch.map(lambda _: f"{os.getpid()} {n}")
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame([("4556737586899855",)], "pan string").coalesce(1)
+    # A UDF reads sc.environment on its first call, so all three run in the pool.
+    sc.environment["SPARK_GRAFT_TEST_WORKER_POOL"] = uuid.uuid4().hex
+    try:
+        (before,) = df.select(probe(F.col("pan"))).collect()[0]
+        (tok,) = df.select(fpe.make_fpe_tokenizer(KEY)(F.col("pan"))).collect()[0]
+        (after,) = df.select(probe(F.col("pan"))).collect()[0]
+    finally:
+        del sc.environment["SPARK_GRAFT_TEST_WORKER_POOL"]
+    assert tok == str(int(fpe.encrypt_digits(KEY, "4556737586899855"))).zfill(16)
+    pid_before, n_before = before.split()
+    pid_after, n_after = after.split()
+    assert pid_before == pid_after
+    assert int(n_before) > 0, "workers no longer import pyspark from a zip archive"
+    assert int(n_after) == 0
 
 
 def test_u8_contribution_bounding(spark):
